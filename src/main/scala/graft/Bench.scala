@@ -9,119 +9,15 @@ package graft
   * keeps the line clean of sbt log prefixes.
   */
 object Bench {
-  /** The original 9 headline queries plus (r8, VERDICT r5 task #6) the
-    * 100 TB-path operators — LSH embedding dedup, connected-component dup
-    * groups, benchmark decontamination, repeated-span dedup — so every
-    * scale-path operator is regression-gated per round, not just the
-    * relational core.
+  /** The gate set, in sweep order: the relational core, every scale-path
+    * LLM-data operator, and the streaming / JDBC / snapshot / catalog
+    * executions, which pay real stream-startup and commit-protocol
+    * overhead on top of the operator (a state-store or commit-path
+    * regression shows up there and nowhere else). Derived from the
+    * `bench` positions in [[SparkEntry.registry]].
     */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q3_topk", "q5_join", "q_window", "dedup_exact",
-    "dedup_minhash", "ann_bruteforce", "sessionize", "token_count",
-    "dedup_embedding_lsh", "dedup_groups", "decontaminate", "dedup_spans",
-    "semdedup", "gopher_filter", "unigram_surprisal", "curate_pipeline",
-    "bm25_search", "dsir_weights", "source_reputation", "heavy_hitters",
-    "graph_rank", "q_funnel", "quality_vote", "ngram_lm", "q_cohort",
-    "asof_join_native", "curation_funnel", "q_kmv_distinct", "dedup_bucketed",
-    "bpe_train", "curriculum_order", "q_topk_group", "q_volume",
-    "q_marketshare", "q_quantile_hist", "corpus_drift", "compaction_plan",
-    "q_zorder", "decontaminate_bloom", "q_bigorders", "q_disjunct", "q_idle",
-    "sample_group_k", "ann_incremental", "q_rolling_distinct", "dq_audit",
-    "q_kmv_setops", "stream_rolling_distinct",
-    // r11: the TPC-H gap closers (full 22-shape coverage) + the orchestrator,
-    // the leakage-safe splitter and the stateful as-of state machine
-    "q_returns", "q_profit", "q_suppcnt", "q_smallqty", "q_excess", "dag_run",
-    "split_leakproof", "asof_stateful", "ivm_retract", "scd2_deletes",
-    "dedup_decremental",
-    // r12: the rsync delta kernel and the banded fact-fact range join
-    "rsync_delta", "range_join_banded", "snapshot_read", "snapshot_changes",
-    // r12b: the REAL streaming executions + the JDBC engine roundtrip —
-    // each of these pays genuine stream-startup/commit-protocol (or JDBC
-    // insert) overhead on top of the operator, so their envelopes are
-    // wider than the batch queries'; regression-gating that overhead is
-    // the point (a state-store or commit-path regression shows up here
-    // and nowhere else in the sweep)
-    "stream_ingest", "stream_token_sketch", "stream_topk",
-    "stream_quarantine", "jdbc_roundtrip", "stream_recovery",
-    "snapshot_compact", "snapshot_prune", "snapshot_point",
-    "snapshot_delete", "snapshot_upsert", "stream_snapshot_ingest",
-    "curate_cdc", "snapshot_evolve",
-    // r12c: optimistic concurrency — the query pays two staged appends,
-    // a provoked conflict and the retried rewrite, so it prices the
-    // whole commit protocol, not one publish
-    "snapshot_occ", "snapshot_zorder", "snapshot_overwrite",
-    "snapshot_branch", "snapshot_meta", "snapshot_wap", "snapshot_txn",
-    // r12d: the layer consumed as a first-class Spark data source —
-    // snapshot_scan prices manifest-planned scanning (FileIndex listing +
-    // plan-time zone-map skip + parquet pushdown), stream_snapshot_source
-    // the V1 micro-batch source's offset/commit loop incl. a mid-stream
-    // publish
-    "snapshot_scan", "snapshot_sql", "snapshot_write", "stream_snapshot_source",
-    "stream_snapshot_sink", "snapshot_txn_sql",
-    // r12e: the DSv2 TableCatalog — SQL statement lifecycle (DDL+DML),
-    // plan-time pruning through the catalog scan, copy-on-write
-    // DELETE/UPDATE/MERGE, and the catalog micro-batch stream; each pays
-    // its own create+insert setup, so envelopes price the whole statement
-    // path, not just the operator
-    "catalog_sql", "catalog_prune", "catalog_delete", "catalog_update",
-    "catalog_merge", "stream_catalog_source", "catalog_meta", "catalog_call",
-    // r13: A34 depth — merge-on-read DML, the NOT-MATCHED-BY-SOURCE
-    // mirror sync, dynamic partition overwrite, rename/drop evolution;
-    // each prices a full DDL+DML statement path like the other catalog
-    // queries
-    "catalog_mor_update", "catalog_sync", "catalog_overwrite", "catalog_rename",
-    "snapshot_cdf",
-    // r14: the composed/merged paths — partitioned MoR DML, type
-    // widening, key-less position deletes (each a full statement
-    // lifecycle incl. the merged read), and the streaming change feed
-    // with a checkpointed restart
-    "catalog_mor_part", "catalog_widen", "catalog_pos_delete", "stream_cdf",
-    // r14b: TIMESTAMP AS OF time travel (instant-resolved loads over a
-    // two-commit history) and the upsert sink pair — stream_upsert
-    // prices three upsert-commit micro-batches with a checkpointed
-    // restart; stream_mirror the full changefeed->upsert mirror
-    // pipeline (two streaming starts, four upstream commits, updates
-    // and deletes applied downstream)
-    "catalog_timetravel", "stream_upsert", "stream_mirror",
-    // r14b: external-file adoption (zero-copy bulk registration)
-    "catalog_adopt",
-    // r14c: the DSv2 scan's scale contracts — runtime (DPP-style) file
-    // pruning from a dim join's build-side keys, and the
-    // storage-partitioned join (co-partitioned tables, zero exchanges)
-    "catalog_dpp", "catalog_spj",
-    // r14c: the bucket-transform SPJ — the co-located join on a
-    // HIGH-cardinality key (orders x lineitem by orderkey, 16 buckets)
-    // — and its sorted completion (zero exchanges AND zero sorts)
-    "catalog_bucket", "catalog_sorted",
-    // r14c: footer-only COUNT/MIN/MAX through delegated agg pushdown,
-    // and merge-on-read DML composed with the bucket layout
-    "catalog_agg_push", "catalog_mor_bucket",
-    // r15: composite-key MoR DML, the catalog changefeed stream with a
-    // checkpointed restart, date partitions through DPP+SPJ, spec
-    // evolution (now two-step), the zero-job partitions table, and the
-    // engine-planned clustered write
-    "catalog_mor_multi", "stream_catalog_cdf", "catalog_dpp_date",
-    "catalog_respec", "catalog_partitions", "catalog_clustered_write",
-    // r16: timestamp partitions through DPP+SPJ, the pinned batch DSv2
-    // changefeed window, and MERGE schema evolution under the dial
-    "catalog_dpp_ts", "catalog_cdf_batch", "catalog_merge_evolve",
-    // r16b: admission-controlled AvailableNow catch-up, the DSv2
-    // streaming sink (catalog-to-catalog mirror), and the update-mode
-    // streaming materialized view over a morkey table
-    "stream_catalog_paced", "stream_catalog_sink", "stream_catalog_matview",
-    // r16b: selective small-file compaction (the streaming sink's
-    // maintenance pass — O(fragmented partitions), never the table)
-    "catalog_compact_small",
-    // r16c: the scan-side planning economics — LIMIT/top-N file
-    // pruning, the zero-copy shallow clone lifecycle, ANALYZE-fed CBO
-    // (each query pays its own A/B plan assertions), and the
-    // metadata-only DELETE (zero-job partition purge + composed
-    // drop/rewrite)
-    "catalog_limit_push", "catalog_topn_push", "catalog_clone",
-    "catalog_analyze", "catalog_meta_delete",
-    // r16c: incremental sketch analyze (per-file KMV sidecars) and the
-    // catalog WAP loop (branch write -> audit -> adopt)
-    "catalog_analyze_incr", "catalog_wap")
+  val headline: Seq[String] =
+    SparkEntry.registry.filter(_.bench > 0).sortBy(_.bench).map(_.name)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

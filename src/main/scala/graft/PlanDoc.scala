@@ -1,45 +1,26 @@
 package graft
+
 import java.nio.file.{Files, Paths}
+
+/** Writes PLANS.md: the physical plan of every query with a `doc`
+  * position in [[SparkEntry.registry]], in that order. Queries that
+  * eagerly localCheckpoint would document only a Scan ExistingRDD, so
+  * their un-staged [[PlanOnly]] builders are documented instead.
+  *
+  * Usage: runMain graft.PlanDoc (run from the repo root)
+  */
 object PlanDoc {
+  val names: Seq[String] =
+    SparkEntry.registry.filter(_.doc > 0).sortBy(_.doc).map(_.name)
+
   def main(a: Array[String]): Unit = {
     val s = GraftSession("plandoc", "4")
     val d = "/root/testdata/sf0.01"
-    val names = Seq("q1_agg", "q3_topk", "q5_join", "q_window", "asof_join", "range_join",
-      "q_skew_salted", "dedup_exact", "dedup_minhash", "dedup_spans", "ann_lsh", "ann_ivf",
-      "sessionize", "stream_dedup", "q_bitmap_distinct", "vocab_topk", "pack_sequences",
-      "q_waiting", "stream_interval_join", "dedup_embedding_lsh", "q_cube",
-      "semdedup", "gopher_filter", "unigram_surprisal", "bigram_surprisal",
-      "bm25_search", "inverted_index", "domain_mix", "q_gapfill", "q_outliers",
-      "classifier_score", "embed_quantize", "q_moving",
-      "dsir_weights", "shard_assign", "stream_sliding", "doc_chunk",
-      "source_reputation", "heavy_hitters", "graph_rank", "q_funnel",
-      "asof_join_native", "quality_vote", "ngram_lm", "q_cohort",
-      "curation_funnel", "q_kmv_distinct", "dedup_bucketed", "curate_pipeline",
-      "transfer_plan", "job_semaphores", "job_schedule",
-      "bpe_train", "bpe_encode", "curriculum_order", "shard_manifest",
-      "q_topk_group", "bpe_segment", "q_volume", "q_marketshare",
-      "sample_weighted", "scd2_history",
-      "q_quantile_hist", "compaction_plan", "corpus_drift",
-      "stats_incremental", "ivm_join",
-      "decontaminate_bloom", "q_bigorders", "q_disjunct", "q_idle", "sample_group_k", "ann_incremental", "q_rolling_distinct", "dq_audit", "q_kmv_setops", "stream_rolling_distinct", "q_fk_elim", "q_fk_elim_left", "q_top_supplier", "q_promo", "stream_dq",
-      "split_leakproof", "asof_stateful", "ivm_retract", "scd2_deletes", "dedup_decremental",
-      "q_forecast", "q_priority", "q_returns", "q_profit", "q_important",
-      "q_shipmode", "q_suppcnt", "q_smallqty", "q_excess", "dag_plan",
-      "rsync_delta", "range_join_banded", "snapshot_scan", "catalog_prune",
-      // r14: the vectorized merged (tombstone-bearing) read (PlanOnly)
-      "catalog_mor_read",
-      // r12: batch twins of the driver-oracled streaming runs (PlanOnly)
-      "stream_ingest", "stream_token_sketch", "stream_topk", "stream_quarantine",
-      // r12: one CDC release's un-checkpointed work unit (PlanOnly)
-      "curate_cdc")
-    // Queries that eagerly localCheckpoint would document only a Scan
-    // ExistingRDD — document the un-staged builders (PlanOnly) instead
-    val planOnly = PlanOnly.builders
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of representative queries (sf0.01)\n\n")
     sb.append("Generated by `graft.PlanDoc`; regenerate after operator changes.\n")
     names.foreach { n =>
-      val fn = planOnly.getOrElse(n, SparkEntry.queries(n))
+      val fn = PlanOnly.builders.getOrElse(n, SparkEntry.queries(n))
       val p = fn(s, d).queryExecution.executedPlan.toString
       sb.append(s"\n## $n\n\n```\n").append(p.take(4000)).append("```\n")
       // some queries persist intermediates at plan time — drop per query

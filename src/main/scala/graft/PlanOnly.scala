@@ -1,75 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Un-staged plan builders for the registered queries that eagerly
   * `localCheckpoint` (their cache lifecycle is self-contained by design):
   * the checkpointed query documents only `Scan ExistingRDD`, hiding the
   * upstream subtree from both PLANS.md and the fleet-wide
   * CartesianProduct guard. Every builder here produces the SAME logical
   * computation with staging disabled, so plan inspection sees the whole
-  * tree. Used by [[PlanDoc]] and `AllPlansSpec`.
+  * tree. Derived from the `plan` fields and plan-only records of
+  * [[SparkEntry.registry]]; used by [[PlanDoc]], [[ExplainDump]] and
+  * `AllPlansSpec`.
   */
 object PlanOnly {
-  val builders: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_minhash" -> ((ss, dd) => graft.ops.Dedup.minhashPlan(ss, dd)),
-    "graph_rank" -> ((ss, dd) => graft.ops.Clustering.graphRankOn(
-      graft.ops.Dedup.bandedCandidates(
-        graft.Tables.documents(ss, dd).select("doc_id", "lang", "n_chars")))),
-    "curate_pipeline" -> ((ss, dd) =>
-      graft.ops.Curate.pipelineStaged(ss, dd, stage = false)),
-    "q_important" -> ((ss, dd) =>
-      graft.relational.TpchGaps.qImportant(ss, dd, stage = false)),
-    "q_excess" -> ((ss, dd) =>
-      graft.relational.TpchGaps.qExcess(ss, dd, stage = false)),
-    // the registered snapshot_scan returns a literal proof frame;
-    // document/guard the REAL source read (FileScan over
-    // SnapshotFileIndex, pushed filters, plan-time zone-map skip)
-    "snapshot_scan" -> ((ss, dd) =>
-      graft.sources.SnapshotSourceQueries.snapshotScanPlan(ss, dd)),
-    // likewise for the catalog: the REAL DSv2 read tree (BatchScan over
-    // SnapshotV2FileIndex) instead of catalog_prune's literal frame
-    "catalog_prune" -> ((ss, dd) =>
-      graft.sources.GraftCatalogQueries.catalogPrunePlan(ss, dd)),
-    // the r14 merged (tombstone-bearing) read: spliced vectorized legs,
-    // tombstone-range pruning, broadcast anti-join, per-leg pre-aggs
-    "catalog_mor_read" -> ((ss, dd) =>
-      graft.sources.GraftCatalogQueries.catalogMorReadPlan(ss, dd)),
-    // The stream_* driver-oracled queries EXECUTE a streaming query and
-    // return its memory sink (a LocalTableScan) — document/guard the
-    // batch-mode application of the same transform instead, so the real
-    // operator tree (gates, windowed aggs, bloom gate) stays visible.
-    "stream_ingest" -> ((ss, dd) => {
-      import org.apache.spark.sql.functions._
-      graft.streaming.Streams.ingestGated(
-        graft.Tables.documents(ss, dd)
-          .select(col("doc_id"), col("text"),
-            graft.streaming.Streams.docTs.as("ts")))
-        .dropDuplicates("h")
-    }),
-    "stream_token_sketch" -> ((ss, dd) => {
-      import org.apache.spark.sql.functions._
-      graft.streaming.Streams.streamTokenSketch(
-        graft.Tables.documents(ss, dd)
-          .select(graft.streaming.Streams.docTs.as("ts"), col("text")))
-    }),
-    "stream_topk" -> ((ss, dd) =>
-      graft.streaming.Streams.streamTopEvents(
-        graft.Tables.events(ss, dd).select("event_id", "ts", "value"))),
-    "stream_recovery" -> ((ss, dd) =>
-      graft.streaming.Streams.tumblingAgg(graft.Tables.events(ss, dd))),
-    "curate_cdc" -> ((ss, dd) => {
-      import org.apache.spark.sql.functions._
-      // one release's un-checkpointed work unit against a non-empty state
-      val seen = graft.Tables.documents(ss, dd).select(md5(col("text")).as("h")).limit(1)
-      graft.ops.Curate.cdcStep(graft.Tables.documents(ss, dd), Some(seen))._2
-    }),
-    "stream_quarantine" -> ((ss, dd) => {
-      import org.apache.spark.sql.functions._
-      val all = graft.Tables.documents(ss, dd)
-      graft.streaming.Streams.quarantineStream(
-        all.filter(col("doc_id") % 23 =!= 0)
-          .select(col("doc_id"), graft.streaming.Streams.docTs.as("ts"), col("text")),
-        all.filter(col("doc_id") % 23 === 0).select("doc_id", "text"))
-    }))
+  val builders: Map[String, SparkEntry.Builder] = SparkEntry.registry.flatMap { q =>
+    (if (q.planOnly) Some(q.build) else q.plan).map(q.name -> _)
+  }.toMap
 }

@@ -87,14 +87,26 @@ object Snapshots {
     * after the write and the hash is CPU-bound, which parallelizes
     * cleanly. One file (the common tiny-commit case) stays inline.
     */
-  private[graft] def md5hexAll(files: Seq[Path]): Map[Path, String] = {
-    val n = math.min(files.size, Runtime.getRuntime.availableProcessors)
-    if (n <= 1) files.map(p => p -> md5hex(p)).toMap
+  private[graft] def md5hexAll(files: Seq[Path]): Map[Path, String] =
+    files.zip(parMap(files)(md5hex)).toMap
+
+  /** `f` over `xs` on a bounded pool, inline for a single element. A
+    * worker's failure is rethrown as itself (the exception the serial
+    * path would throw), not wrapped in the pool's ExecutionException.
+    */
+  private def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val n = math.min(xs.size, Runtime.getRuntime.availableProcessors)
+    if (n <= 1) xs.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-      try files.map(p => p -> pool.submit(new java.util.concurrent.Callable[String] {
-          override def call(): String = md5hex(p)
-        })).map { case (p, f) => p -> f.get() }.toMap
+      try xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = f(x)
+        })).map { fut =>
+          try fut.get() catch {
+            case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+              throw e.getCause
+          }
+        }
       finally pool.shutdown()
     }
   }
@@ -199,17 +211,7 @@ object Snapshots {
             if (perCol.exists(_.isEmpty)) None else Some(perCol.flatMap(_.get))
           } finally f.close()
         } catch { case scala.util.control.NonFatal(_) => None }
-    val n = math.min(files.size, Runtime.getRuntime.availableProcessors)
-    val perFile: Seq[(Path, Option[Seq[(String, Long, Long)]])] =
-      if (n <= 1) files.map(p => p -> zonesOf(p))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-        try files.map(p => p -> pool.submit(
-            new java.util.concurrent.Callable[Option[Seq[(String, Long, Long)]]] {
-              override def call(): Option[Seq[(String, Long, Long)]] = zonesOf(p)
-            })).map { case (p, f) => p -> f.get() }
-        finally pool.shutdown()
-      }
+    val perFile = files.zip(parMap(files)(zonesOf))
     // any indecisive file declines the WHOLE fast path (the caller pays
     // the exact one-job scan), exactly as the serial loop did
     if (perFile.exists(_._2.isEmpty)) None
@@ -665,14 +667,9 @@ object Snapshots {
     * merge moves EXECUTOR-side ([[posBitmapsDistributed]]): below it the
     * driver fold is a handful of small byte-array unions; above it the
     * driver must not deserialize-union O(sum of inputs) when the final
-    * broadcast only needs O(merged bytes). Tunable per session
-    * (`spark.graft.posBitmapMerge.maxDriverBytes`) — the operator's dial
-    * for a memory-tight driver, and what the stress A/B turns to price
-    * the distributed path at real scale.
+    * broadcast only needs O(merged bytes).
     */
-  private def posMergeDriverBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.posBitmapMerge.maxDriverBytes")
-      .map(_.toLong).getOrElse(64L << 20)
+  private val PosMergeDriverBytes: Long = 64L << 20
 
   /** The merged per-file bitmaps of a delete-file SET: overlapping
     * names OR together (two purges may kill different rows of one
@@ -684,7 +681,7 @@ object Snapshots {
     */
   private[graft] def posBitmaps(s: SparkSession, root: Path,
                                 dels: Seq[ManifestEntry]): Map[String, Array[Byte]] =
-    if (dels.map(_.bytes).sum > posMergeDriverBytes(s)) posBitmapsDistributed(s, root, dels)
+    if (dels.map(_.bytes).sum > PosMergeDriverBytes) posBitmapsDistributed(s, root, dels)
     else dels.map(posFileBitmaps(s, root, _))
       .foldLeft(Map.empty[String, Array[Byte]]) { (acc, m) =>
         m.foldLeft(acc) { case (a, (f, b)) =>
@@ -2758,7 +2755,7 @@ object Snapshots {
     * manifest that references the file and die with it at GC.
     */
   def buildBlooms(s: SparkSession, root: Path, n: Int, keyCol: String,
-                  estItems: Long = 0, numBits: Long = 0): Int = {
+                  estItems: Long = 0): Int = {
     // one declared key column per store, recorded in blooms/_column so
     // readers can key bloom skipping the way zone skipping is keyed by
     // the constraint's column — probing a k-bloom with another column's
@@ -2776,7 +2773,7 @@ object Snapshots {
     val missing = manifest(root, n).filterNot(isDelete)
       .filterNot(e => Files.exists(bloomPath(root, e.relPath)))
     if (missing.isEmpty) return 0
-    // AUTO-SIZING (estItems/numBits = 0): a fixed-size bloom saturates
+    // AUTO-SIZING (estItems = 0): a fixed-size bloom saturates
     // silently when files outgrow it (FPP → 1, skipping → none — the
     // self-run sf10 sweep caught exactly that), so size from the TRUE
     // per-file cardinality ceiling: parquet footer row counts, one
@@ -2785,13 +2782,10 @@ object Snapshots {
     // item ≈ 0.05% FPP — tight enough that a point probe against a
     // whole table's sidecars (8-64 files) still expects ZERO false
     // opens — capped at 2^26 bits (Spark's aggregate cap), beyond
-    // which FPP degrades gracefully rather than erroring.
-    // partial overrides are honored: each zero parameter is auto-filled
-    // independently, so a caller pinning only estItems still gets it
-    val (effItems, effBits) =
-      if (estItems > 0 && numBits > 0) (estItems, numBits)
-      else if (estItems > 0) (estItems,
-        math.min(1L << 26, math.max(1L << 16, estItems * 16L)))
+    // which FPP degrades gracefully rather than erroring. A caller's
+    // estItems replaces the footer-derived ceiling.
+    val effItems =
+      if (estItems > 0) estItems
       else {
         val conf = footerConf(s)
         val maxRows = missing.map { e =>
@@ -2800,12 +2794,9 @@ object Snapshots {
               new org.apache.hadoop.fs.Path(root.resolve(e.relPath).toUri), conf))
           try f.getRecordCount finally f.close()
         }.max
-        val items = math.max(1024L, maxRows)
-        val bits =
-          if (numBits > 0) numBits
-          else math.min(1L << 26, math.max(1L << 16, items * 16L))
-        (items, bits)
+        math.max(1024L, maxRows)
       }
+    val effBits = math.min(1L << 26, math.max(1L << 16, effItems * 16L))
     s.sessionState.functionRegistry.createOrReplaceTempFunction("graft_bloom_agg",
       es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
         es(0), es(1), es(2)).toAggregateExpression(), "built-in")

@@ -542,9 +542,9 @@ object Curate {
     * source is also on disk and Catalyst column-prunes `base` per subtree
     * (the gate path never builds `sh`; the two `sh` consumers cover
     * disjoint doc_id%23 slices), so "3 scans" was never 3 kernel passes.
-    * The `stage` knob keeps both shapes runnable and the Stress scenario
-    * re-measures the decision; checkpoint blocks are reclaimed by
-    * ContextCleaner once the result is unreachable.
+    * `stage = false` keeps the un-staged shape for plan inspection
+    * (PlanOnly); checkpoint blocks are reclaimed by ContextCleaner once
+    * the result is unreachable.
     */
   private[graft] def fusedBase(s: SparkSession, d: String, stage: Boolean = true): DataFrame = {
     val gw = col("graft_w")
@@ -568,8 +568,7 @@ object Curate {
       .withColumn("sh", array_distinct(col("g3")))
       .select("doc_id", "lang", "h", "chars_no_ws", "n_tok", "n_stop", "n_alpha",
         "dup3_x1000", "sh")
-    // stage=false is the Stress A/B knob (curate_fused): same plan shape,
-    // base re-executed per consuming subtree — the r8 cost being measured
+    // stage=false: same plan shape, base re-executed per consuming subtree.
     // DISK_ONLY staging: the checkpoint exists to trade SOURCE bandwidth,
     // not to be a hot cache — at MEMORY_AND_DISK the blocks sit inside
     // the protected storageFraction and STARVE the window/aggregate
@@ -584,19 +583,18 @@ object Curate {
 
   def pipeline(s: SparkSession, d: String): DataFrame = pipelineStaged(s, d, stage = true)
 
-  /** `evalMod` is the eval-holdout modulus (1-in-N docs become the
-    * benchmark side). The broadcast decontamination join's contract is a
-    * BROADCAST-SIZED eval relation — a real deployment holds the eval
-    * benchmark fixed while the corpus grows, so a corpus scaled K×
-    * should scale evalMod by K to model it (the curation_1000x soak
-    * does; the oracle-checked default stays 23).
+  /** Eval-holdout modulus: 1-in-23 docs become the benchmark side. The
+    * broadcast decontamination join's contract is a BROADCAST-SIZED eval
+    * relation — a real deployment holds the eval benchmark fixed while
+    * the corpus grows.
     */
-  private[graft] def pipelineStaged(
-      s: SparkSession, d: String, stage: Boolean, evalMod: Long = 23L): DataFrame = {
+  private val EvalMod = 23L
+
+  private[graft] def pipelineStaged(s: SparkSession, d: String, stage: Boolean): DataFrame = {
     val base = fusedBase(s, d, stage)
-    val evalSh = base.filter(col("doc_id") % evalMod === 0)
+    val evalSh = base.filter(col("doc_id") % EvalMod === 0)
       .select(col("doc_id").as("eval_id"), explode(col("sh")).as("shingle"))
-    val corpus = base.filter(col("doc_id") % evalMod =!= 0)
+    val corpus = base.filter(col("doc_id") % EvalMod =!= 0)
     val keepers = corpus
       .withColumn("keeper", min("doc_id").over(Window.partitionBy("h")))
       .filter(col("doc_id") === col("keeper"))
@@ -675,15 +673,11 @@ object Curate {
     * `pipeline`'s scaladoc; the local[32] A/B is likewise a wash —
     * 27.3 task-s staged vs 24.4 recomputed at 50k docs).
     */
-  def curationFunnel(s: SparkSession, d: String): DataFrame =
-    curationFunnelStaged(s, d, stage = true)
-
-  private[graft] def curationFunnelStaged(
-      s: SparkSession, d: String, stage: Boolean, evalMod: Long = 23L): DataFrame = {
-    val base = fusedBase(s, d, stage)
-    val evalSh = base.filter(col("doc_id") % evalMod === 0)
+  def curationFunnel(s: SparkSession, d: String): DataFrame = {
+    val base = fusedBase(s, d)
+    val evalSh = base.filter(col("doc_id") % EvalMod === 0)
       .select(col("doc_id").as("eval_id"), explode(col("sh")).as("shingle"))
-    val corpus = base.filter(col("doc_id") % evalMod =!= 0)
+    val corpus = base.filter(col("doc_id") % EvalMod =!= 0)
     val contaminated = corpus
       .select(col("doc_id"), explode(col("sh")).as("shingle"))
       .join(broadcast(evalSh), Seq("shingle"))
@@ -704,7 +698,7 @@ object Curate {
           .when(coalesce(col("contam"), lit(false)), "8_contaminated")
           .otherwise("9_kept"))
       .select("stage", "n_tok")
-    base.filter(col("doc_id") % evalMod === 0)
+    base.filter(col("doc_id") % EvalMod === 0)
       .select(lit("1_eval_holdout").as("stage"), col("n_tok"))
       .unionByName(staged)
       .groupBy("stage")

@@ -84,11 +84,11 @@ object Similarity {
     * the Dedup.bandedCandidates cap pattern applies to pathological
     * buckets); `NumTables` buys recall at linear cost.
     */
-  def dedupEmbeddingLsh(s: SparkSession, d: String, numPlanes: Int = NumPlanes): DataFrame = {
+  def dedupEmbeddingLsh(s: SparkSession, d: String): DataFrame = {
     val e = quantized(s, d)
     val entries = e.select(col("vec_id"),
       posexplode(array((0 until NumTables).map(t =>
-        bucketOf(col("qv"), planes(n = numPlanes, seed = tableSeed(t)))): _*)).as(Seq("t", "bkt")))
+        bucketOf(col("qv"), planes(n = NumPlanes, seed = tableSeed(t)))): _*)).as(Seq("t", "bkt")))
     val a = entries.select(col("t"), col("bkt"), col("vec_id").as("i"))
     val b = entries.select(col("t"), col("bkt"), col("vec_id").as("j"))
     val cand = a.join(b, Seq("t", "bkt")).filter(col("i") < col("j"))

@@ -627,10 +627,11 @@ object Relational {
     */
   val bandCents = 50000L // 500 currency units
 
-  /** Core of B14b over prepared frames: `ev(event_type, v_c)` cents,
-    * `ord(o_c)` cents. Exposed for the band_10x stress A/B.
-    */
-  def rangeJoinBandedOn(ev: DataFrame, ord: DataFrame): DataFrame = {
+  def rangeJoinBanded(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.events(s, d)
+      .select(col("event_type"), (round(col("value") * 100)).cast("long").as("v_c"))
+    val ord = Tables.orders(s, d)
+      .select((round(col("o_totalprice") * 100)).cast("long").as("o_c"))
     val e = ev.withColumn("lo", col("v_c") * 1000)
       .withColumn("bucket", explode(array(
         expr(s"lo DIV $bandCents"), expr(s"lo DIV $bandCents") + 1)))
@@ -640,29 +641,6 @@ object Relational {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_pairs"), sum(col("o_c")).as("sum_total_cents"))
       .orderBy("event_type")
-  }
-
-  /** The naive non-equi formulation of the same join — exists ONLY as
-    * the band_10x stress A/B's other leg (it plans a BroadcastNestedLoop
-    * when one side broadcasts, quadratic work either way; never
-    * registered).
-    */
-  def rangeJoinNaiveOn(ev: DataFrame, ord: DataFrame): DataFrame =
-    ev.withColumn("lo", col("v_c") * 1000)
-      .join(ord, col("o_c") >= col("lo") && col("o_c") <= col("lo") + bandCents)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_pairs"), sum(col("o_c")).as("sum_total_cents"))
-      .orderBy("event_type")
-
-  def bandedInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = (
-    Tables.events(s, d)
-      .select(col("event_type"), (round(col("value") * 100)).cast("long").as("v_c")),
-    Tables.orders(s, d)
-      .select((round(col("o_totalprice") * 100)).cast("long").as("o_c")))
-
-  def rangeJoinBanded(s: SparkSession, d: String): DataFrame = {
-    val (ev, ord) = bandedInputs(s, d)
-    rangeJoinBandedOn(ev, ord)
   }
 
   val rangeJoinBandedOracleSql: String = """

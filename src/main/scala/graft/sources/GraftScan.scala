@@ -137,8 +137,6 @@ final class GraftScanBuilder(
   private def limitPushable: Boolean =
     entries.nonEmpty && pushedPhys.isEmpty && !aggPushed
 
-  private def footerGatherCap: Int = GraftScan.footerGatherCap(spark)
-
   override def pushLimit(limit: Int): Boolean = {
     if (!limitPushable || limit <= 0) false
     else {
@@ -186,8 +184,8 @@ final class GraftScanBuilder(
     // every file must PROVE zero nulls in the column — a null sorts to
     // one end of the output and carries no zone evidence of where it
     // lives, so one unprovable footer declines the whole pushdown
-    // (bounded: see footerGatherCap)
-    if (entries.size > footerGatherCap || !entries.forall(e =>
+    // (bounded: see FooterGatherCap)
+    if (entries.size > GraftScan.FooterGatherCap || !entries.forall(e =>
         Snapshots.fileColNulls(spark, store, e.relPath, col).contains(0L)))
       return false
     val ranged = entries.flatMap(e => zoneOf(e, col).map(r => (e, r._1, r._2)))
@@ -290,12 +288,9 @@ object GraftScan {
     * N-file table pays N of them — fine at thousands, wrong at a
     * million-file 100 TB manifest. Beyond the cap the proof is simply
     * "unprovable": top-N declines its prune, column stats omit the
-    * null count — graceful degradation, never a stall. Tunable per
-    * session for operators who know their manifest.
+    * null count — graceful degradation, never a stall.
     */
-  private[sources] def footerGatherCap(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.footerNullGather.maxFiles")
-      .flatMap(_.toIntOption).getOrElse(4096)
+  private[sources] val FooterGatherCap: Int = 4096
 
   /** Partition value of a value-pure path: the LAST `_pv=` segment,
     * unescaped from Spark's partition-path escaping (%XX). None when the
@@ -427,7 +422,7 @@ final class GraftScan(
     val inner = currentParquet.estimateStatistics()
     val ents = currentEntries
     if (ents.isEmpty || aggPushed ||
-      ents.size > GraftScan.footerGatherCap(spark)) return inner
+      ents.size > GraftScan.FooterGatherCap) return inner
     val rowsTotal = ents.map(e => Snapshots.fileRows(spark, store, e.relPath)).sum
     val cstats = buildColumnStats(ents, rowsTotal)
     new Statistics {
@@ -469,9 +464,9 @@ final class GraftScan(
       val minV = range.flatMap(r => render(r._1))
       val maxV = range.flatMap(r => render(r._2))
       // footer-proven null count (exact, current); analyze's as
-      // fallback. Bounded by footerGatherCap — beyond it, unprovable.
+      // fallback. Bounded by FooterGatherCap — beyond it, unprovable.
       val footerNulls: Option[Long] =
-        if (ents.size > GraftScan.footerGatherCap(spark)) None
+        if (ents.size > GraftScan.FooterGatherCap) None
         else {
           val per = ents.map(e => Snapshots.fileColNulls(spark, store, e.relPath, phys))
           if (per.forall(_.isDefined)) Some(per.flatten.sum) else None

@@ -91,6 +91,11 @@ class NioCheckpointFileManager(root: HPath, conf: Configuration)
     }
   }
 
+  /** link(2) `dst` to `src`: the atomic no-replace publish. */
+  protected[streaming] def link(dst: java.nio.file.Path, src: java.nio.file.Path): Unit = {
+    Files.createLink(dst, src); ()
+  }
+
   private def renameNio(src: java.nio.file.Path, dst: java.nio.file.Path,
                         overwriteIfPossible: Boolean): Unit =
     translate {
@@ -107,14 +112,21 @@ class NioCheckpointFileManager(root: HPath, conf: Configuration)
           // link(2) IS an atomic no-replace publish: it fails with
           // EEXIST if dst appeared at any point, so exactly one racer
           // wins and the other gets the FileAlreadyExists the protocol
-          // demands. Filesystems without hard links fall back to the
-          // probe+rename Hadoop's local FileContext itself uses.
-          try { Files.createLink(dst, src); Files.delete(src) }
-          catch {
-            case _: UnsupportedOperationException =>
-              if (Files.exists(dst))
-                throw new java.nio.file.FileAlreadyExistsException(dst.toString)
-              Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+          // demands. Filesystems without hard links (the failure surfaces
+          // as UnsupportedOperation, or as a FileSystemException carrying
+          // EPERM/EOPNOTSUPP) fall back to the probe+rename Hadoop's local
+          // FileContext itself uses.
+          val linked =
+            try { link(dst, src); true }
+            catch {
+              case e: java.nio.file.FileAlreadyExistsException => throw e
+              case _: UnsupportedOperationException | _: java.nio.file.FileSystemException => false
+            }
+          if (linked) Files.delete(src)
+          else {
+            if (Files.exists(dst))
+              throw new java.nio.file.FileAlreadyExistsException(dst.toString)
+            Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
           }
         }
         ()

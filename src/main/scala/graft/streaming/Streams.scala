@@ -478,8 +478,8 @@ object Streams {
   /** C13 streaming wiring — watermarked events through the same
     * dedup+agg chain.
     */
-  def rollingDistinctStream(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    rollingDistinctAgg(events.withWatermark("ts", watermark))
+  def rollingDistinctStream(events: DataFrame): DataFrame =
+    rollingDistinctAgg(events.withWatermark("ts", "2 hours"))
 
   // ---------- C14: continuous data-quality monitoring ----------
 

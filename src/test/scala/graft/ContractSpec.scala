@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards the driver contract: every oracle key is backed by a query,
   * every Bench headline exists, the flagship entry returns rows, and
   * result schemas obey the comparison normalization rules (no raw
-  * int/float/timestamp columns reaching the oracle compare).
+  * int/float/timestamp columns reaching the oracle compare). Also guards
+  * the one query registry every name list derives from, and the
+  * inventory of dev mains.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -25,6 +27,47 @@ class ContractSpec extends AnyFunSuite {
   test("every Bench headline name is a registered query") {
     val missing = Bench.headline.toSet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"headline without query: $missing")
+  }
+
+  test("registry names are unique; bench and doc positions rank 1..n without ties") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct == names, s"duplicate registry names: ${names.diff(names.distinct)}")
+    assert(Bench.headline.distinct == Bench.headline, s"duplicate headline: ${Bench.headline}")
+    for ((field, pos) <- Seq[(String, SparkEntry.Query => Int)](("bench", _.bench), ("doc", _.doc))) {
+      val ranks = SparkEntry.registry.map(pos).filter(_ > 0).sorted
+      assert(ranks == (1 to ranks.size), s"$field positions are not 1..${ranks.size}: $ranks")
+    }
+  }
+
+  test("every PlanDoc name and every plan-only builder resolves through the registry") {
+    val names = SparkEntry.registry.map(_.name).toSet
+    val unresolved = PlanDoc.names.filterNot(n =>
+      PlanOnly.builders.contains(n) || SparkEntry.queries.contains(n))
+    assert(unresolved.isEmpty, s"PlanDoc names without a builder: $unresolved")
+    assert(PlanOnly.builders.keySet.subsetOf(names),
+      s"plan builders outside the registry: ${PlanOnly.builders.keySet.diff(names)}")
+    // a plan-only record is never run by the driver: no oracle, no bench slot
+    val misflagged = SparkEntry.registry.filter(q => q.planOnly && (q.oracle.nonEmpty || q.bench > 0))
+    assert(misflagged.isEmpty, s"plan-only records with an oracle or bench slot: ${misflagged.map(_.name)}")
+  }
+
+  test("the dev mains under src/main/scala are exactly the ones README documents") {
+    // a main nothing documents is a tool nothing runs — it rots (and keeps
+    // dead options alive) until someone deletes it
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val objectDecl = "\\bobject\\s+(\\w+)".r
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val mains = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val src = new String(Files.readAllBytes(f), "UTF-8")
+      "def main\\(".r.findAllMatchIn(src).map { m =>
+        objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+      }
+    }.toSet finally walk.close()
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+    val documented = "runMain graft\\.(\\w+)".r.findAllMatchIn(readme).map(_.group(1)).toSet
+    assert(mains == documented,
+      s"undocumented mains: ${mains.diff(documented)}; documented but absent: ${documented.diff(mains)}")
   }
 
   test("every registered query appears in SURVEY.md §2 (the judged inventory)") {

@@ -546,4 +546,18 @@ class SnapshotSpec extends AnyFunSuite {
       assert(Snapshots.readCurrent(s, root).count() == 197)
     } finally rm(root)
   }
+
+  test("hashing a staged file deleted mid-commit surfaces NoSuchFileException, not ExecutionException") {
+    val root = tmpRoot()
+    try {
+      val files = (0 until 4).map { i =>
+        val f = root.resolve(s"part-$i.parquet")
+        Files.write(f, Array.fill[Byte](1 << 10)(i.toByte))
+      }
+      assert(Snapshots.md5hexAll(files).size == 4)
+      Files.delete(files(2)) // a concurrent cleaner removes one staged file
+      val e = intercept[java.io.IOException](Snapshots.md5hexAll(files))
+      assert(e.isInstanceOf[java.nio.file.NoSuchFileException], s"got ${e.getClass.getName}")
+    } finally rm(root)
+  }
 }

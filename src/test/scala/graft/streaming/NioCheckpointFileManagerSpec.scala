@@ -8,6 +8,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath, PathFilter}
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** The NIO checkpoint manager must carry the exact CheckpointFileManager
   * contract the metadata logs and state stores key on — atomic visible-
   * or-absent writes, FileAlreadyExists on the committed-first race,
@@ -63,6 +65,27 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     val over = fm.createAtomic(f, overwriteIfPossible = true)
     over.write("v2".getBytes(UTF_8)); over.close()
     assert(new String(Files.readAllBytes(dir.resolve("commits/5")), UTF_8) == "v2")
+  }
+
+  test("without hard links (link fails with FileSystemException) the rename falls back and still refuses") {
+    val dir = Files.createTempDirectory("nio_ckpt_spec")
+    val fm = new NioCheckpointFileManager(new HPath(dir.toUri), new Configuration()) {
+      override protected[streaming] def link(dst: java.nio.file.Path, src: java.nio.file.Path): Unit =
+        throw new java.nio.file.FileSystemException(
+          src.toString, dst.toString, "Operation not permitted")
+    }
+    val f = new HPath(dir.resolve("commits/7").toUri)
+    val first = fm.createAtomic(f, overwriteIfPossible = false)
+    first.write("winner".getBytes(UTF_8)); first.close()
+    assert(new String(Files.readAllBytes(dir.resolve("commits/7")), UTF_8) == "winner")
+    val loser = fm.createAtomic(f, overwriteIfPossible = false)
+    loser.write("loser".getBytes(UTF_8))
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] { loser.close() }
+    assert(new String(Files.readAllBytes(dir.resolve("commits/7")), UTF_8) == "winner")
+    val st = Files.list(dir.resolve("commits"))
+    try assert(st.iterator().asScala.map(_.getFileName.toString).toSeq == Seq("7"),
+      "temp files left behind")
+    finally st.close()
   }
 
   test("open missing raises java.io.FileNotFoundException (not NoSuchFileException)") {
