@@ -6,10 +6,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Cluster-grade registration of graft's native expressions: set
-  * `spark.sql.extensions=graft.GraftExtensions` and every session — SQL
-  * included — gets the kernels without any driver-side registration call.
-  * (The per-operator `registerFunctions` helpers remain for ad-hoc use.)
+/** The one registration path for graft's native expressions, and it
+  * serves SQL text only: set `spark.sql.extensions=graft.GraftExtensions`
+  * and every session can call the kernels by name. The Scala API needs no
+  * registration — its kernel columns are built straight from the
+  * expressions and never touch the session function registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -57,28 +57,19 @@ case class BsdSum(child: Expression)
   */
 object Checksums {
 
-  def registerFunctions(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bsd_sum", es => BsdSum(es.head), "built-in")
-
-  def bsdSum(s: SparkSession, c: Column): Column = {
-    registerFunctions(s)
-    call_function("bsd_sum", c)
-  }
+  def bsdSum(c: Column): Column = GraftBridge.column(BsdSum(GraftBridge.expression(c)))
 
   /** Real file-level operator: checksum every file matched by `pathGlob`
     * using the distributed binaryFile source (one task per file — the
     * parallel analog of the reference's per-file `sum` loop).
     */
-  def forFiles(s: SparkSession, pathGlob: String): DataFrame = {
-    registerFunctions(s)
+  def forFiles(s: SparkSession, pathGlob: String): DataFrame =
     s.read.format("binaryFile").load(pathGlob)
       .select(
         element_at(split(col("path"), "/"), -1).as("file"),
-        call_function("bsd_sum", col("content")).as("bsd_sum"),
+        bsdSum(col("content")).as("bsd_sum"),
         md5(col("content")).as("md5"),
         col("length").as("n_bytes"))
-  }
 
   /** Parse a CHECKSUMS manifest: lines `"<c1> <c2> <file>"`, c1 reformatted
     * to %05d exactly as DownloadDatabase.pm:204-210 does.
@@ -110,7 +101,7 @@ object Checksums {
     */
   def checksumBsd(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"), bsdSum(s, col("text").cast("binary")).as("bsd_sum"))
+      .select(col("doc_id"), bsdSum(col("text").cast("binary")).as("bsd_sum"))
       .orderBy("doc_id")
 
   /** A6 query: manifest verify — a deterministic manifest with corrupted

@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -94,19 +94,8 @@ case class MySqlUnescape(child: Expression) extends MySqlStringKernel {
   */
 object MySqlDump {
 
-  def registerFunctions(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mysql_escape", es => MySqlEscape(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mysql_unescape", es => MySqlUnescape(es.head), "built-in")
-  }
-
-  def escapeCol(s: SparkSession, c: Column): Column = {
-    registerFunctions(s); call_function("mysql_escape", c)
-  }
-  def unescapeCol(s: SparkSession, c: Column): Column = {
-    registerFunctions(s); call_function("mysql_unescape", c)
-  }
+  private def escape(c: Column): Column = GraftBridge.column(MySqlEscape(GraftBridge.expression(c)))
+  private def unescape(c: Column): Column = GraftBridge.column(MySqlUnescape(GraftBridge.expression(c)))
 
   private val NullMarker = "\\N"
 
@@ -117,24 +106,22 @@ object MySqlDump {
   }
 
   /** Encode a DataFrame to MySQL-dump TSV lines (one string column `value`). */
-  def encode(s: SparkSession, df: DataFrame): DataFrame = {
-    registerFunctions(s)
+  def encode(df: DataFrame): DataFrame = {
     val fields = df.schema.fields.map { f =>
       val str = fieldToString(col(f.name), f.dataType)
-      coalesce(call_function("mysql_escape", str), lit(NullMarker))
+      coalesce(escape(str), lit(NullMarker))
     }
     df.select(concat_ws("\t", fields.toIndexedSeq: _*).as("value"))
   }
 
   /** Write `df` as (optionally gzipped) MySQL-dump TSV. */
-  def writeTable(s: SparkSession, df: DataFrame, path: String, gzip: Boolean = true): Unit = {
-    val w = encode(s, df).write.mode("overwrite")
+  def writeTable(df: DataFrame, path: String, gzip: Boolean = true): Unit = {
+    val w = encode(df).write.mode("overwrite")
     (if (gzip) w.option("compression", "gzip") else w).text(path)
   }
 
   /** Read MySQL-dump TSV (plain or .gz) with LOAD DATA semantics into `schema`. */
   def readTable(s: SparkSession, path: String, schema: StructType): DataFrame = {
-    registerFunctions(s)
     val lines = s.read.text(path)
     val parts = split(col("value"), "\t", -1)
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
@@ -142,7 +129,7 @@ object MySqlDump {
       // NULLs instead of an ANSI INVALID_ARRAY_INDEX error mid-load
       val raw = try_element_at(parts, lit(i + 1))
       val unescaped = when(raw === NullMarker, lit(null).cast("string"))
-        .otherwise(call_function("mysql_unescape", raw))
+        .otherwise(unescape(raw))
       (f.dataType match {
         case TimestampType => to_timestamp(unescaped, "yyyy-MM-dd HH:mm:ss")
         case dt            => unescaped.cast(dt)
@@ -155,12 +142,10 @@ object MySqlDump {
     * prove the codec round-trips (`ok` must be uniformly true — the oracle
     * pins it to literal TRUE plus the independently-computed line).
     */
-  def roundtrip(s: SparkSession, d: String): DataFrame = {
-    registerFunctions(s)
+  def roundtrip(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
-        call_function("mysql_escape", col("text")).as("line"),
-        (call_function("mysql_unescape", call_function("mysql_escape", col("text"))) === col("text")).as("ok"))
+        escape(col("text")).as("line"),
+        (unescape(escape(col("text"))) === col("text")).as("ok"))
       .orderBy("doc_id")
-  }
 }

@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -200,16 +200,9 @@ case class RsyncDelta(left: Expression, right: Expression, blockSize: Int)
 
 object RsyncDeltas {
 
-  def registerFunctions(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rsync_delta",
-      es => RsyncDelta(es(0), es(1), es(2).eval().asInstanceOf[Number].intValue),
-      "built-in")
-
-  def rsyncDelta(s: SparkSession, oldCol: Column, newCol: Column, blockSize: Int): Column = {
-    registerFunctions(s)
-    call_function("rsync_delta", oldCol, newCol, lit(blockSize))
-  }
+  def rsyncDelta(oldCol: Column, newCol: Column, blockSize: Int): Column =
+    GraftBridge.column(RsyncDelta(
+      GraftBridge.expression(oldCol), GraftBridge.expression(newCol), blockSize))
 
   /** A30 `rsync_delta` query: each document's payload plays the
     * receiver's OLD copy; the NEW file is a deterministic SQL-stated
@@ -231,7 +224,7 @@ object RsyncDeltas {
         expr("substring(o, 127, length(o))")))
     pairs
       .select(col("doc_id"),
-        rsyncDelta(s, col("o").cast("binary"), col("n").cast("binary"), 32).as("r"))
+        rsyncDelta(col("o").cast("binary"), col("n").cast("binary"), 32).as("r"))
       .select(col("doc_id"), col("r.n_blocks"), col("r.n_copy"), col("r.lit_bytes"),
         col("r.bytes_saved"), col("r.instr"), col("r.applied_md5"))
       .orderBy("doc_id")

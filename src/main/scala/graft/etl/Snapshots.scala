@@ -118,12 +118,19 @@ object Snapshots {
     * resources from the jars on the commit path (sampled ~14% of
     * catalog_dpp_ts's driver wall in Configuration.loadResources).
     * Never hand this to a WRITER path — prepareWrite mutates its conf.
+    * Weak keys: the cache never keeps a session alive. The conf is
+    * rebuilt when the session's SQL conf no longer equals the one it was
+    * built from, so a key set after the first footer read is seen.
     */
-  private val footerConfCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      org.apache.hadoop.conf.Configuration]()
-  private[graft] def footerConf(s: SparkSession): org.apache.hadoop.conf.Configuration =
-    footerConfCache.computeIfAbsent(s, s2 => s2.sessionState.newHadoopConf())
+  private val footerConfCache = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      (Map[String, String], org.apache.hadoop.conf.Configuration)]())
+  private[graft] def footerConf(s: SparkSession): org.apache.hadoop.conf.Configuration = {
+    val sqlConf = s.sessionState.conf.getAllConfs
+    footerConfCache.compute(s, (_, cached) =>
+      if (cached != null && cached._1 == sqlConf) cached
+      else (sqlConf, s.sessionState.newHadoopConf()))._2
+  }
 
   /** Exact per-file `(col, min, max)` zone maps read from the parquet
     * FOOTERS of freshly-staged files, replacing the scan JOB the stats
@@ -605,11 +612,7 @@ object Snapshots {
     // (`__file`, `__pos`) stay readable forever: the read side converts
     // them on first touch ([[posFileBitmaps]]).
     pairs.groupBy("__file")
-      .agg(org.apache.spark.sql.GraftBridge.column(
-        graft.functions.BitmapBuild(
-          org.apache.spark.sql.GraftBridge.expression(col("__pos")))
-          .toAggregateExpression())
-        .as("__bitmap"))
+      .agg(graft.functions.BitmapBuild.column(col("__pos")).as("__bitmap"))
       .write.mode("overwrite").parquet(delDir.toString)
     val listing = Files.list(delDir)
     val posFiles = try listing.iterator().asScala.toSeq
@@ -655,10 +658,7 @@ object Snapshots {
       val rows =
         if (df.columns.contains("__bitmap")) df.collect()
         else df.groupBy("__file")
-          .agg(org.apache.spark.sql.GraftBridge.column(
-            graft.functions.BitmapBuild(
-              org.apache.spark.sql.GraftBridge.expression(col("__pos")))
-              .toAggregateExpression()).as("__bitmap"))
+          .agg(graft.functions.BitmapBuild.column(col("__pos")).as("__bitmap"))
           .collect()
       rows.map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
     })
@@ -733,10 +733,7 @@ object Snapshots {
             org.apache.spark.sql.GraftBridge.expression(col("__bitmap")))
             .toAggregateExpression()).as("__bitmap"))
       else
-        df.groupBy("__file").agg(org.apache.spark.sql.GraftBridge.column(
-          graft.functions.BitmapBuild(
-            org.apache.spark.sql.GraftBridge.expression(col("__pos")))
-            .toAggregateExpression()).as("__bitmap"))
+        df.groupBy("__file").agg(graft.functions.BitmapBuild.column(col("__pos")).as("__bitmap"))
     // the two wire shapes cannot share one parquet read (different
     // schemas); each shape reads as one multi-file scan, pre-aggregates,
     // and the shapes' outputs union into the final per-file OR.
@@ -2585,7 +2582,6 @@ object Snapshots {
         "rows (sketches are per raw file) — CALL system.compact first, or " +
         "use exact mode")
     require(datas.nonEmpty, s"snapshot $id of $root lists no data files")
-    graft.ops.TextKernels.register(s)
     val dir = root.resolve("stats").resolve("kmv")
     Files.createDirectories(dir)
     def sidecar(e: ManifestEntry, c: String): Path = dir.resolve(s"${e.md5}-$c")
@@ -2601,7 +2597,7 @@ object Snapshots {
           .select(input_file_name().as("__f"), col(c).as("__c"))
           .select(col("__f"),
             when(col("__c").isNull, lit(null))
-              .otherwise(call_function("fnv64mix", col("__c").cast("string")))
+              .otherwise(graft.ops.TextKernels.fnv64mix(col("__c").cast("string")))
               .as("__h"))
         val nullsPer = hashed.groupBy("__f")
           .agg(count(lit(1)).as("__n"), count(col("__h")).as("__nn"))
@@ -2797,9 +2793,6 @@ object Snapshots {
         math.max(1024L, maxRows)
       }
     val effBits = math.min(1L << 26, math.max(1L << 16, effItems * 16L))
-    s.sessionState.functionRegistry.createOrReplaceTempFunction("graft_bloom_agg",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)).toAggregateExpression(), "built-in")
     // sidecars are written EXECUTOR-side: each aggregated (file → bloom)
     // row lands as a file from the task that holds it, so a 10^6-file
     // backfill never funnels 10^5 MiB of filter bytes through the driver
@@ -2814,8 +2807,7 @@ object Snapshots {
     val relSet = missing.map(_.relPath).toSet
     s.read.parquet(missing.map(e => root.resolve(e.relPath).toString): _*)
       .groupBy(input_file_name().as("f"))
-      .agg(call_function("graft_bloom_agg",
-        col(keyCol).cast("long"), lit(effItems), lit(effBits)).as("bf"))
+      .agg(graft.ops.Dedup.bloomAgg(col(keyCol).cast("long"), effItems, effBits).as("bf"))
       .foreach { r =>
         val full = java.nio.file.Paths.get(new java.net.URI(r.getString(0)).getPath)
         val rel = java.nio.file.Paths.get(rootStr).relativize(full).toString

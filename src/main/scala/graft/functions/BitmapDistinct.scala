@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -62,6 +63,11 @@ case class BitmapDistinct(
   override def prettyName: String = "bitmap_distinct"
 }
 
+object BitmapDistinct {
+  def column(c: Column): Column =
+    GraftBridge.column(BitmapDistinct(GraftBridge.expression(c)).toAggregateExpression())
+}
+
 /** Same Roaring aggregation, but the OUTPUT is the serialized bitmap —
   * the build half of the incremental-dedup prefilter (D27): aggregate the
   * existing corpus's key set once, ship the compressed bytes as a plan
@@ -110,6 +116,11 @@ case class BitmapBuild(
   override def withNewInputAggBufferOffset(offset: Int): BitmapBuild =
     copy(inputAggBufferOffset = offset)
   override def prettyName: String = "bitmap_build"
+}
+
+object BitmapBuild {
+  def column(c: Column): Column =
+    GraftBridge.column(BitmapBuild(GraftBridge.expression(c)).toAggregateExpression())
 }
 
 /** Serializable carrier that deserializes the bitmap ONCE per JVM use

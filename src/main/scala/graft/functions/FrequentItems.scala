@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -113,4 +114,9 @@ case class FrequentItemsSketch(
   override def withNewInputAggBufferOffset(offset: Int): FrequentItemsSketch =
     copy(inputAggBufferOffset = offset)
   override def prettyName: String = "freq_items_sketch"
+}
+
+object FrequentItemsSketch {
+  def column(c: Column, k: Int): Column =
+    GraftBridge.column(FrequentItemsSketch(GraftBridge.expression(c), k).toAggregateExpression())
 }

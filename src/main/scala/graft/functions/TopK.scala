@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -122,6 +123,12 @@ case class TopKAggregate(
   override def withNewInputAggBufferOffset(offset: Int): TopKAggregate =
     copy(inputAggBufferOffset = offset)
   override def prettyName: String = "topk_pairs"
+}
+
+object TopKAggregate {
+  def column(sortKey: Column, payload: Column, k: Int): Column =
+    GraftBridge.column(TopKAggregate(GraftBridge.expression(sortKey),
+      GraftBridge.expression(payload), k).toAggregateExpression())
 }
 
 /** Parallel-array buffer sorted best-first: (key DESC, payload ASC). */

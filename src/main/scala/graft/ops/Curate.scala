@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{FrequentItemsSketch, TopKAggregate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -343,7 +344,6 @@ object Curate {
     * curate_fused min-of-3) and half the wall time.
     */
   def qualityVote(s: SparkSession, d: String): DataFrame = {
-    TextKernels.register(s)
     val w = col("graft_w")
     // D18's n=3 gram construction, guarded exactly as repetitionScore
     val g3 = when(size(w) >= 3,
@@ -353,7 +353,7 @@ object Curate {
     val perRow = Tables.fanOut(Tables.documents(s, d))
       .select(col("doc_id"), TextAnalysis.words(col("text")).as("graft_w"),
         length(regexp_replace(col("text"), " ", "")).cast("long").as("chars_no_ws"),
-        call_function("classifier_logit", col("text")).as("logit"))
+        TextKernels.classifierLogit(col("text")).as("logit"))
       .select(col("doc_id"), col("chars_no_ws"), col("logit"),
         size(w).cast("long").as("n_tok"),
         TextAnalysis.hits(w, TextAnalysis.stopwords("en")).cast("long").as("n_stop"),
@@ -399,15 +399,11 @@ object Curate {
     * the sketch itself is order-sensitive.
     */
   def heavyHitters(s: SparkSession, d: String): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items_64",
-      es => graft.functions.FrequentItemsSketch(es.head, 64).toAggregateExpression(),
-      "built-in")
     val tok = Tables.documents(s, d)
       .select(explode(split(lower(col("text")), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
     val sketch = tok.agg(
-      call_function("freq_items_64", col("tok")).as("cand"),
+      FrequentItemsSketch.column(col("tok"), 64).as("cand"),
       count(lit(1)).as("n_total"))
     tok.crossJoin(broadcast(sketch))
       .filter(array_contains(col("cand"), col("tok")))
@@ -882,23 +878,18 @@ object Curate {
     * cost topk_10x measured at 1.7×). Groups holding < k docs return
     * all of them, ranked.
     */
-  def sampleGroupK(s: SparkSession, d: String, k: Int = 50): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"topk_pairs_$k",
-      es => graft.functions.TopKAggregate(es(0), es(1), k).toAggregateExpression(),
-      "built-in")
+  def sampleGroupK(s: SparkSession, d: String, k: Int = 50): DataFrame =
     Tables.documents(s, d)
       .select(col("lang"),
         conv(substring(md5(col("doc_id").cast("string")), 9, 8), 16, 10)
           .cast("long").as("ord_key"),
         col("doc_id"))
       .groupBy("lang")
-      .agg(call_function(s"topk_pairs_$k", col("ord_key"), col("doc_id")).as("top"))
+      .agg(TopKAggregate.column(col("ord_key"), col("doc_id"), k).as("top"))
       .select(col("lang"), posexplode(col("top")))
       .select(col("lang"), (col("pos") + 1).cast("long").as("rank_in_lang"),
         col("col.payload").as("doc_id"))
       .orderBy("lang", "rank_in_lang")
-  }
 
   val sampleGroupKOracleSql: String = """
     SELECT lang, CAST(rn AS BIGINT) AS rank_in_lang, doc_id FROM (

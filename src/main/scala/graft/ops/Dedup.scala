@@ -1,7 +1,9 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /** D1–D4: exact and near-duplicate detection over `documents`, built
@@ -135,19 +137,14 @@ object Dedup {
     * Exchange (BucketingSpec) — the recurring-refresh layout.
     */
   def incrementalOn(s: SparkSession, base: DataFrame, incoming: DataFrame): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_build",
-      es => graft.functions.BitmapBuild(es.head).toAggregateExpression(), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_contains",
-      es => graft.functions.BitmapContains(es.head, es(1)), "built-in")
     val k32 = conv(substring(col("h"), 1, 8), 16, 10).cast("long").as("k")
     val bmBytes = base.select(k32)
-      .agg(call_function("bitmap_build", col("k")))
+      .agg(graft.functions.BitmapBuild.column(col("k")))
       .head().getAs[Array[Byte]](0)
     val inc = incoming.withColumn("k", k32)
     val candidates = inc
-      .filter(call_function("bitmap_contains", lit(bmBytes), col("k")))
+      .filter(GraftBridge.column(graft.functions.BitmapContains(
+        GraftBridge.expression(lit(bmBytes)), GraftBridge.expression(col("k")))))
     // left-semi: dup candidate hashes dedup inside the broadcast build —
     // a .distinct() here would add the plan's only shuffle for nothing
     val matched = base.join(broadcast(candidates.select("h")), Seq("h"), "leftsemi")
@@ -228,31 +225,20 @@ object Dedup {
     }
   }
 
-  private def registerKernels(s: SparkSession): Unit = {
-    import graft.GraftExtensions.checked
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", checked("minhash_sig", 1)(es => MinhashSig(es.head)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", checked("shingle_hashes", 1)(es => ShingleHashes(es.head)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_inter_count", checked("sorted_inter_count", 2)(es => SortedInterCount(es.head, es(1))), "built-in")
-  }
+  private def minhashSig(hx: Column): Column =
+    GraftBridge.column(MinhashSig(GraftBridge.expression(hx)))
 
   /** doc_id + distinct hashed shingles (single-pass kernel). */
-  def hashedShingles(docs: DataFrame): DataFrame = {
-    registerKernels(docs.sparkSession)
-    docs.select(col("doc_id"), call_function("shingle_hashes", col("text")).as("hx"))
+  def hashedShingles(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      GraftBridge.column(ShingleHashes(GraftBridge.expression(col("text")))).as("hx"))
       .filter(size(col("hx")) > 0)
-  }
 
   /** doc_id + minhash signature (array of NumPerms longs), computed in a
     * single pass over the hashed shingles by the MinhashSig kernel.
     */
-  def signatures(docs: DataFrame): DataFrame = {
-    registerKernels(docs.sparkSession)
-    hashedShingles(docs)
-      .select(col("doc_id"), call_function("minhash_sig", col("hx")).as("sig"))
-  }
+  def signatures(docs: DataFrame): DataFrame =
+    hashedShingles(docs).select(col("doc_id"), minhashSig(col("hx")).as("sig"))
 
   /** Candidate pairs from banded signatures. Shuffle payload is one
     * (band_id, band_hash, doc_id) triple per band per doc. Intra-bucket
@@ -322,7 +308,7 @@ object Dedup {
     * the checkpointed `minhash` documents only a Scan ExistingRDD).
     */
   def minhashPipeline(sh: DataFrame): DataFrame = {
-    val sigs = sh.select(col("doc_id"), call_function("minhash_sig", col("hx")).as("sig"))
+    val sigs = sh.select(col("doc_id"), minhashSig(col("hx")).as("sig"))
     val cands = candidatePairs(sigs)
     cands
       .join(sh.select(col("doc_id").as("a"), col("hx").as("sh_a")), Seq("a"))
@@ -330,7 +316,8 @@ object Dedup {
       // hx arrays are sorted (ShingleHashKernel) → merge-scan count instead
       // of materializing intersection/union arrays per candidate pair
       .select(col("a"), col("b"),
-        call_function("sorted_inter_count", col("sh_a"), col("sh_b")).as("inter_n"),
+        GraftBridge.column(SortedInterCount(
+          GraftBridge.expression(col("sh_a")), GraftBridge.expression(col("sh_b")))).as("inter_n"),
         (size(col("sh_a")) + size(col("sh_b"))).as("size_sum"))
       .select(col("a"), col("b"), col("inter_n"),
         (col("size_sum") - col("inter_n")).as("union_n"))
@@ -471,37 +458,37 @@ object Dedup {
     */
   def decontaminateBloom(s: SparkSession, d: String, minHits: Int = 8,
       estItems: Long = 1L << 16, numBits: Long = 1L << 20): DataFrame = {
-    val reg = s.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      es => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)),
-      "built-in")
     val docs = withShingles(Tables.documents(s, d)).select("doc_id", "sh")
     val evalSh = docs.filter(col("doc_id") % 23 === 0)
       .select(col("doc_id").as("eval_id"), explode(col("sh")).as("shingle"))
     val corpusSh = docs.filter(col("doc_id") % 23 =!= 0)
       .select(col("doc_id"), explode(col("sh")).as("shingle"))
-    evalSh.createOrReplaceTempView("graft_eval_sh")
-    corpusSh.createOrReplaceTempView("graft_corpus_sh")
     // the bloom must be a scalar subquery: BloomFilterMightContain demands
     // a foldable/subquery filter side (the same contract the runtime-filter
     // rewrite rides), which is exactly what lets it evaluate as a constant
     // per task instead of a join
-    val pre = s.sql(s"""
-      SELECT doc_id, shingle FROM graft_corpus_sh
-      WHERE graft_might_contain(
-        (SELECT graft_bloom_agg(xxhash64(shingle),
-           CAST($estItems AS BIGINT), CAST($numBits AS BIGINT))
-         FROM graft_eval_sh),
-        xxhash64(shingle))""")
-    pre.join(broadcast(evalSh), Seq("shingle"))
+    val bloom = evalSh.agg(bloomAgg(xxhash64(col("shingle")), estItems, numBits)).scalar()
+    corpusSh.filter(mightContain(bloom, xxhash64(col("shingle"))))
+      .join(broadcast(evalSh), Seq("shingle"))
       .groupBy("doc_id", "eval_id")
       .agg(count(lit(1)).as("n_hits"))
       .filter(col("n_hits") >= minHits)
       .orderBy("doc_id", "eval_id")
   }
+
+  /** Spark's `BloomFilterAggregate` over a long column: one fixed-size
+    * filter of `numBits` bits sized for `estItems` items, as binary.
+    */
+  def bloomAgg(c: Column, estItems: Long, numBits: Long): Column =
+    GraftBridge.column(new BloomFilterAggregate(GraftBridge.expression(c),
+      Literal(estItems), Literal(numBits)).toAggregateExpression())
+
+  /** Bloom membership test of a long column against a `bloomAgg` result,
+    * which must be foldable or a scalar subquery.
+    */
+  def mightContain(bloom: Column, c: Column): Column =
+    GraftBridge.column(BloomFilterMightContain(
+      GraftBridge.expression(bloom), GraftBridge.expression(c)))
 
   /** D16: containment pairs — |A∩B| / min(|A|,|B|) ≥ 0.8, the asymmetric
     * metric that catches excerpt/superset near-dups jaccard misses (a
@@ -533,9 +520,8 @@ object Dedup {
     * one of the 4 chunks identical).
     */
   def simhash(s: SparkSession, d: String): DataFrame = {
-    TextKernels.register(s)
     val docs = Tables.documents(s, d)
-      .select(col("doc_id"), call_function("simhash64", col("text")).as("sig"))
+      .select(col("doc_id"), TextKernels.simhash64(col("text")).as("sig"))
     val chunks = docs.select(col("doc_id"), col("sig"),
       explode(array((0 until 4).map(i =>
         struct(lit(i).as("ci"), shiftright(col("sig"), i * 16).bitwiseAND(lit(0xffffL)).as("cv"))): _*)).as("c"))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,30 +27,18 @@ object Similarity {
   // Both through the codegen'd VecKernel expressions (identical integer
   // semantics to the aggregate/zip_with higher-order forms they replaced,
   // but inlined into whole-stage codegen instead of interpreted lambdas —
-  // the verify stages evaluate these per candidate pair). Registered in
-  // the active session's registry on first use (same pattern as
-  // Dedup.registerKernels; GraftExtensions injects them cluster-wide too).
-  def sqNorm(qv: Column): Column = call_function("sqnorm_q", qv)
+  // the verify stages evaluate these per candidate pair).
+  def sqNorm(qv: Column): Column = GraftBridge.column(SqNormLong(GraftBridge.expression(qv)))
 
-  def dot(a: Column, b: Column): Column = call_function("dot_q", a, b)
-
-  /** Idempotent per-session registration of the vector kernels. */
-  def registerKernels(s: SparkSession): Unit = {
-    import graft.GraftExtensions.checked
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_q", checked("dot_q", 2)(es => DotLong(es.head, es(1))), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sqnorm_q", checked("sqnorm_q", 1)(es => SqNormLong(es.head)), "built-in")
-  }
+  def dot(a: Column, b: Column): Column =
+    GraftBridge.column(DotLong(GraftBridge.expression(a), GraftBridge.expression(b)))
 
   def cosine(dotC: Column, na: Column, nb: Column): Column =
     dotC.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
 
-  private def quantized(s: SparkSession, d: String): DataFrame = {
-    registerKernels(s)
+  private def quantized(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).select(col("vec_id"), quantize(col("embedding")).as("qv"))
       .withColumn("nq", sqNorm(col("qv")))
-  }
 
   /** D5: embedding cosine near-dup pairs (threshold 0.45). Pairwise here —
     * fine at verification scale; at 100 TB use annLsh buckets as the

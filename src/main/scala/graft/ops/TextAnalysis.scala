@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -192,19 +192,14 @@ case class Fingerprint(child: Expression) extends UnaryExpression {
   override def prettyName: String = "doc_fingerprint"
 }
 
+/** DataFrame-API columns over the text kernels above. */
 object TextKernels {
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", es => SimHash64(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "doc_fingerprint", es => Fingerprint(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "classifier_logit", es => ClassifierLogit(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv64", es => Fnv64(es.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv64mix", es => Fnv64Mix(es.head), "built-in")
-  }
+  def simhash64(c: Column): Column = GraftBridge.column(SimHash64(GraftBridge.expression(c)))
+  def fingerprint(c: Column): Column = GraftBridge.column(Fingerprint(GraftBridge.expression(c)))
+  def classifierLogit(c: Column): Column =
+    GraftBridge.column(ClassifierLogit(GraftBridge.expression(c)))
+  def fnv64(c: Column): Column = GraftBridge.column(Fnv64(GraftBridge.expression(c)))
+  def fnv64mix(c: Column): Column = GraftBridge.column(Fnv64Mix(GraftBridge.expression(c)))
 }
 
 /** D8–D11: language-ID, quality scoring, token counting, fingerprinting —
@@ -329,12 +324,10 @@ object TextAnalysis {
   }
 
   /** D11: rolling-hash document fingerprint (rows-only; validated in spec). */
-  def fingerprint(s: SparkSession, d: String): DataFrame = {
-    TextKernels.register(s)
+  def fingerprint(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"), call_function("doc_fingerprint", col("text")).as("fp"))
+      .select(col("doc_id"), TextKernels.fingerprint(col("text")).as("fp"))
       .orderBy("doc_id")
-  }
 
   /** D21: Gopher-rule document filter (Rae et al. 2021, §A1.1) — the
     * doc-level quality gate every production corpus runs before training:
@@ -465,7 +458,6 @@ object TextAnalysis {
     * (dist build + scoring), payload text never shuffled.
     */
   def dsirWeights(s: SparkSession, d: String): DataFrame = {
-    TextKernels.register(s)
     val B = 1024
     val w = col("graft_w")
     val occ = Tables.fanOut(Tables.documents(s, d))
@@ -473,7 +465,7 @@ object TextAnalysis {
       .filter(size(w) >= 2)
       .select(col("doc_id"), col("lang"),
         explode(transform(sequence(lit(0), size(w) - 2), i =>
-          call_function("fnv64",
+          TextKernels.fnv64(
             concat_ws(" ", element_at(w, i + 1), element_at(w, i + 2)))
             .bitwiseAND(lit((B - 1).toLong)))).as("b"))
     val dist = occ.groupBy("b").agg(
@@ -538,7 +530,6 @@ object TextAnalysis {
     * shuffle at all before the output sort; one corpus scan.
     */
   def docChunk(s: SparkSession, d: String): DataFrame = {
-    TextKernels.register(s)
     val C = 32; val S = 24 // chunk, stride (overlap = 8)
     val w = col("graft_w")
     Tables.documents(s, d)
@@ -552,7 +543,7 @@ object TextAnalysis {
       .withColumn("start_tok", col("chunk_id") * S)
       .withColumn("len_tok", least(lit(C.toLong), col("n_tok") - col("start_tok")))
       .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("len_tok"),
-        call_function("fnv64",
+        TextKernels.fnv64(
           concat_ws(" ", slice(w, (col("start_tok") + 1).cast("int"), col("len_tok").cast("int"))))
           .as("chunk_hash"))
       .orderBy("doc_id", "chunk_id")
@@ -569,14 +560,11 @@ object TextAnalysis {
     * `classifier_logit` kernel because in-SQL FNV (64-bit multiply) would
     * overflow-throw under ANSI mode; the oracle replays it in HUGEINT.
     */
-  def classifierScore(s: SparkSession, d: String): DataFrame = {
-    TextKernels.register(s)
+  def classifierScore(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"),
-        call_function("classifier_logit", col("text")).as("logit"))
+      .select(col("doc_id"), TextKernels.classifierLogit(col("text")).as("logit"))
       .withColumn("keep", col("logit") > 0)
       .orderBy("doc_id")
-  }
 
   /** D33: token-distribution drift between two corpus snapshots — the
     * crawl-over-crawl audit every refreshed training set needs (did the

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.Tables
+import graft.functions.{BitmapDistinct, TopKAggregate}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -283,15 +284,13 @@ object Relational {
     * (partial sketch per partition, merge of k-bounded states) from the
     * declarative form. PlanSpec pins the WindowGroupLimit(Partial) node.
     */
-  def qKmvDistinct(s: SparkSession, d: String): DataFrame = {
-    graft.ops.TextKernels.register(s)
+  def qKmvDistinct(s: SparkSession, d: String): DataFrame =
     kmvOn(Tables.lineitem(s, d)
       .select(col("l_returnflag").as("g"),
-        call_function("fnv64mix", col("l_partkey").cast("string")).as("uh")))
+        graft.ops.TextKernels.fnv64mix(col("l_partkey").cast("string")).as("uh")))
       .select(col("g").as("l_returnflag"), col("k_actual"), col("kth_hash"),
         col("est_distinct"))
       .orderBy("l_returnflag")
-  }
 
   /** The KMV estimator over any `(g, uh)` relation, uh uniform in
     * [0, 2⁶³). KmvSpec checks the estimate's accuracy against known
@@ -328,12 +327,11 @@ object Relational {
     * bounds both estimators' error against true distinct counts.
     */
   def qKmvSetops(s: SparkSession, d: String): DataFrame = {
-    graft.ops.TextKernels.register(s)
     val k = 256
     val sk = Tables.lineitem(s, d)
       .filter(col("l_returnflag").isin("A", "R"))
       .select(col("l_returnflag").as("g"),
-        call_function("fnv64mix", col("l_partkey").cast("string")).as("uh"))
+        graft.ops.TextKernels.fnv64mix(col("l_partkey").cast("string")).as("uh"))
       .distinct()
       .withColumn("rk", dense_rank().over(Window.partitionBy("g").orderBy("uh")))
       .filter(col("rk") <= k)
@@ -514,17 +512,13 @@ object Relational {
     * shuffle — see graft.functions.BitmapDistinct). Oracle-exact against
     * count(DISTINCT ...).
     */
-  def qBitmapDistinct(s: SparkSession, d: String): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct",
-      es => graft.functions.BitmapDistinct(es.head).toAggregateExpression(), "built-in")
+  def qBitmapDistinct(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .select("l_returnflag", "l_partkey", "l_suppkey")
       .groupBy("l_returnflag")
-      .agg(call_function("bitmap_distinct", col("l_partkey")).as("bm_parts"),
-        call_function("bitmap_distinct", col("l_suppkey")).as("bm_supps"))
+      .agg(BitmapDistinct.column(col("l_partkey")).as("bm_parts"),
+        BitmapDistinct.column(col("l_suppkey")).as("bm_supps"))
       .orderBy("l_returnflag")
-  }
 
   /** B17: exact percentiles (linear interpolation — same definition as
     * DuckDB quantile_cont; the p90 over doubles is rounded to absorb the
@@ -1036,22 +1030,17 @@ object Relational {
     * money rule) and ties break on the smaller orderkey, making the
     * output a total order both engines replay bit-identically.
     */
-  def qTopkGroup(s: SparkSession, d: String): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_pairs_3",
-      es => graft.functions.TopKAggregate(es(0), es(1), 3).toAggregateExpression(),
-      "built-in")
+  def qTopkGroup(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
       .select(col("o_custkey"),
         (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("price_x100"),
         col("o_orderkey"))
       .groupBy("o_custkey")
-      .agg(call_function("topk_pairs_3", col("price_x100"), col("o_orderkey")).as("top"))
+      .agg(TopKAggregate.column(col("price_x100"), col("o_orderkey"), 3).as("top"))
       .select(col("o_custkey"), posexplode(col("top")))
       .select(col("o_custkey"), (col("pos") + 1).cast("long").as("rnk"),
         col("col.payload").as("o_orderkey"), col("col.sort_key").as("price_x100"))
       .orderBy("o_custkey", "rnk")
-  }
 
   val topkGroupOracleSql: String = """
     SELECT o_custkey, CAST(rnk AS BIGINT) AS rnk, o_orderkey, price_x100 FROM (

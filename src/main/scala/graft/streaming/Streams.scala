@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.functions.{FrequentItemsSketch, TopKAggregate}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -214,18 +215,13 @@ object Streams {
     * set carries the same ⊇-heavy-hitters guarantee as the batch form —
     * downstream exact recount (E11's second pass) runs batch-side.
     */
-  def streamTokenSketch(docs: DataFrame, watermark: String = "2 hours"): DataFrame = {
-    docs.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items_64",
-      es => graft.functions.FrequentItemsSketch(es.head, 64).toAggregateExpression(),
-      "built-in")
+  def streamTokenSketch(docs: DataFrame, watermark: String = "2 hours"): DataFrame =
     docs.withWatermark("ts", watermark)
       .select(col("ts"), explode(split(lower(col("text")), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(call_function("freq_items_64", col("tok")).as("cand"),
+      .agg(FrequentItemsSketch.column(col("tok"), 64).as("cand"),
         count(lit(1)).as("n_tok"))
-  }
 
   /** C9: streaming per-window top-k — the B30 bounded TopKAggregate
     * inside a watermarked windowed aggregation: its serialize/merge IS
@@ -237,19 +233,14 @@ object Streams {
     * emitted top-k independent of batch arrival boundaries — pinned in
     * StreamingSpec by splitting the same events across batches.
     */
-  def streamTopEvents(events: DataFrame, watermark: String = "2 hours"): DataFrame = {
-    events.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_pairs_3",
-      es => graft.functions.TopKAggregate(es(0), es(1), 3).toAggregateExpression(),
-      "built-in")
+  def streamTopEvents(events: DataFrame, watermark: String = "2 hours"): DataFrame =
     events.withWatermark("ts", watermark)
       .select(col("ts"),
         (col("value").cast("decimal(12,2)") * 100).cast("long").as("value_x100"),
         col("event_id"))
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(call_function("topk_pairs_3", col("value_x100"), col("event_id")).as("top"),
+      .agg(TopKAggregate.column(col("value_x100"), col("event_id"), 3).as("top"),
         count(lit(1)).as("n_events"))
-  }
 
   /** C4 batch query: the same keep-first-per-key semantics, oracle-checked.
     * The streaming form (above) keeps the first ARRIVAL; the deterministic
@@ -549,34 +540,21 @@ object Streams {
     */
   def quarantineGate(evalDocs: DataFrame, minHits: Int = 8,
       estItems: Long = 1L << 16, numBits: Long = 1L << 20): Column => Column = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    val spark = evalDocs.sparkSession
-    // graft_bloom_agg is a pure stateless function BUILDER (no captured
-    // bytes) — re-registering it is idempotent, so gates never clobber
-    // each other through it.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("graft_bloom_agg",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)).toAggregateExpression(), "built-in")
+    import graft.ops.Dedup.{bloomAgg, mightContain}
     val bloomBytes = graft.ops.Dedup.withShingles(evalDocs)
       .select(explode(col("sh")).as("shingle"))
-      .agg(call_function("graft_bloom_agg",
-        xxhash64(col("shingle")), lit(estItems), lit(numBits)).as("bf"))
+      .agg(bloomAgg(xxhash64(col("shingle")), estItems, numBits).as("bf"))
       .head().getAs[Array[Byte]](0)
-    // The probe side carries PER-GATE state (this gate's bloom bytes), so
-    // it must NOT go through a shared named registry entry — a second gate
-    // in the same session would clobber the first and every plan analyzed
-    // after that would silently probe the wrong filter. Splice the bytes
-    // directly into the expression tree as a foldable Literal instead:
-    // each gate closure owns its own bloom, no session state at all.
-    val bloomLit = Literal(bloomBytes, org.apache.spark.sql.types.BinaryType)
+    // The probe side carries PER-GATE state (this gate's bloom bytes):
+    // spliced into the expression tree as a foldable literal, each gate
+    // closure owns its own bloom, no session state at all.
+    val bloomLit = lit(bloomBytes)
     // caller passes a BOUND words-array column (projected once per row —
     // an inline split() here would re-evaluate per lambda reference, the
     // no-CSE-in-HOF trap shinglesOfWords documents)
     (words: Column) => {
       val maybeHits = size(filter(graft.ops.Dedup.shinglesOfWords(words), t =>
-        GraftBridge.column(BloomFilterMightContain(bloomLit,
-          GraftBridge.expression(xxhash64(t))))))
+        mightContain(bloomLit, xxhash64(t))))
       when(maybeHits >= minHits, "quarantine").otherwise("clean")
     }
   }

@@ -70,6 +70,23 @@ class ContractSpec extends AnyFunSuite {
       s"undocumented mains: ${mains.diff(documented)}; documented but absent: ${documented.diff(mains)}")
   }
 
+  test("library code never reads or writes the session function registry") {
+    // kernels reach plans as columns built from their expressions;
+    // GraftExtensions is the one registration path (SQL text only). A
+    // registration or a by-name call in library code clobbers a user's
+    // function of the same name and drops the injected arity check.
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val banned = Seq("createOrReplaceTempFunction", "call_function(")
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val hits = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if banned.exists(line.contains) => s"$f:${i + 1}"
+      }
+    }.toList finally walk.close()
+    assert(hits.isEmpty, s"function-registry use in library code: ${hits.mkString(", ")}")
+  }
+
   test("every registered query appears in SURVEY.md §2 (the judged inventory)") {
     // the coverage checklist is graded row by row — a query registered
     // without an inventory row is invisible to the audit and a silent

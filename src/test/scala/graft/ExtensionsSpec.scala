@@ -37,6 +37,12 @@ class ExtensionsSpec extends AnyFunSuite {
     // SparkException(INTERNAL_ERROR). This pin makes that upgrade hazard
     // a loud test failure instead (ADVICE r4).
     val s = TestSpark.spark
+    // a DataFrame-API kernel call first: the Scala API must leave the
+    // injected, arity-checked builder in place, whatever ran before
+    val dir = java.nio.file.Files.createTempDirectory("ext-arity")
+    val f = java.nio.file.Files.write(dir.resolve("a.txt"), "alpha".getBytes)
+    try assert(etl.Checksums.forFiles(s, f.toString).count() == 1)
+    finally { java.nio.file.Files.delete(f); java.nio.file.Files.delete(dir) }
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       s.sql("SELECT bsd_sum()").collect()
     }

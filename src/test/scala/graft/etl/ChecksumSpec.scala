@@ -29,7 +29,7 @@ class ChecksumSpec extends AnyFunSuite {
     val s = TestSpark.spark
     import s.implicits._
     val df = Seq("abc", "x" * 2000).toDF("t")
-    val out = df.select(Checksums.bsdSum(s, $"t".cast("binary"))).as[String].collect()
+    val out = df.select(Checksums.bsdSum($"t".cast("binary"))).as[String].collect()
     assert(out(0) == BsdSumImpl.compute("abc".getBytes("UTF-8")))
     assert(out(1) == BsdSumImpl.compute(("x" * 2000).getBytes("UTF-8")))
   }

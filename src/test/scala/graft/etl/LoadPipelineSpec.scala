@@ -19,7 +19,7 @@ class LoadPipelineSpec extends AnyFunSuite {
 
     // dump as 3 gzip parts named like the reference's split convention
     val parts = src.repartition(3)
-    MySqlDump.writeTable(s, parts, dir.resolve("stage").toString, gzip = true)
+    MySqlDump.writeTable(parts, dir.resolve("stage").toString, gzip = true)
     val stageFiles = Files.list(dir.resolve("stage")).toArray.map(_.toString)
       .filter { f =>
         val name = f.split("/").last

@@ -52,7 +52,7 @@ class MySqlDumpSpec extends AnyFunSuite {
       Row(3L, "line\nbreak", -0.25, Timestamp.valueOf("1999-12-31 23:59:59")))
     val df = s.createDataFrame(s.sparkContext.parallelize(rows, 2), schema)
     val dir = Files.createTempDirectory("mysqldump").toString + "/t"
-    MySqlDump.writeTable(s, df, dir, gzip = true)
+    MySqlDump.writeTable(df, dir, gzip = true)
     val back = MySqlDump.readTable(s, dir, schema).collect().sortBy(_.getLong(0))
     assert(back.length == 3)
     assert(back(0).getString(1) == "with\ttab and \\N fake null")

@@ -9,12 +9,10 @@ class BitmapDistinctSpec extends AnyFunSuite {
   test("bitmap_distinct equals count(distinct) across partitions (exercises serialize/merge)") {
     val s = TestSpark.spark
     import s.implicits._
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct", es => BitmapDistinct(es.head).toAggregateExpression(), "built-in")
     val df = (1 to 100000).map(i => (i % 7, (i % 3571).toLong)).toDF("g", "k")
       .repartition(8) // force partial buffers + merge path
     val got = df.groupBy("g")
-      .agg(call_function("bitmap_distinct", col("k")).as("bd"),
+      .agg(BitmapDistinct.column(col("k")).as("bd"),
         countDistinct(col("k")).as("cd"))
       .collect()
     assert(got.nonEmpty)
@@ -24,10 +22,8 @@ class BitmapDistinctSpec extends AnyFunSuite {
   test("bitmap_distinct handles negative and large long keys") {
     val s = TestSpark.spark
     import s.implicits._
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct", es => BitmapDistinct(es.head).toAggregateExpression(), "built-in")
     val df = Seq(-1L, -1L, Long.MaxValue, Long.MinValue, 0L, 0L).toDF("k")
-    val n = df.agg(call_function("bitmap_distinct", col("k"))).collect()(0).getLong(0)
+    val n = df.agg(BitmapDistinct.column(col("k"))).collect()(0).getLong(0)
     assert(n == 4L)
   }
 }

@@ -193,7 +193,17 @@ class DedupSpec extends AnyFunSuite {
   test("decontaminate_bloom equals exact decontaminate, prefilter in plan") {
     val exact = Dedup.decontaminate(s, TestSpark.sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // name → view relation: a re-created view of the same name is a new
+    // relation, so this also catches a view an earlier caller left behind
+    val catalog = s.sessionState.catalog
+    def tempViews() =
+      catalog.getTempViewNames().flatMap(n => catalog.getRawTempView(n).map(n -> _)).toMap
+    val viewsBefore = tempViews()
     val viaBloom = Dedup.decontaminateBloom(s, TestSpark.sf)
+    val viewsAfter = tempViews()
+    val changed = (viewsBefore.keySet ++ viewsAfter.keySet).filterNot(n =>
+      viewsBefore.get(n).exists(v => viewsAfter.get(n).exists(_ eq v)))
+    assert(changed.isEmpty, s"temp views created or replaced: ${changed.mkString(", ")}")
     // a false positive may leak a shingle past the bloom but never a row
     // past the exact verify join — output must be bit-identical
     assert(viaBloom.collect()

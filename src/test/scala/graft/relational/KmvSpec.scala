@@ -14,10 +14,9 @@ class KmvSpec extends AnyFunSuite {
 
   private def hashedIds(g: String, n: Int, dups: Int) = {
     val s = TestSpark.spark
-    graft.ops.TextKernels.register(s)
     // dups copies of each of n distinct ids, hashed exactly like the query
     s.range(n.toLong * dups).select(lit(g).as("g"),
-      call_function("fnv64mix", concat(lit(g), (col("id") % n).cast("string"))).as("uh"))
+      graft.ops.TextKernels.fnv64mix(concat(lit(g), (col("id") % n).cast("string"))).as("uh"))
   }
 
   test("estimate is exact below k and within 4 sigma above it") {
