@@ -88,7 +88,9 @@ object Tables {
     }
     if (hasExchange) return df
     val files = df.inputFiles
-    if (files.length >= target) return df
+    // no file leaves (a checkpointed or local frame): no split count to
+    // fix, and a shuffle would only add a full-row exchange
+    if (files.isEmpty || files.length >= target) return df
     val maxSplit = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
     val splits = files.map { f =>
       val size = try {
@@ -100,6 +102,6 @@ object Tables {
       (size + maxSplit - 1) / maxSplit
     }.sum
     if (splits >= target) df
-    else df.repartition(target, df.columns.map(col).toIndexedSeq: _*)
+    else df.repartition(target, df.columns.map(df.col).toIndexedSeq: _*)
   }
 }

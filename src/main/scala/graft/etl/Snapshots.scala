@@ -132,6 +132,56 @@ object Snapshots {
       else (sqlConf, s.sessionState.newHadoopConf()))._2
   }
 
+  /** The schema a `mergeSchema=true` read of `es` infers, resolved on
+    * the DRIVER from parquet footers with no Spark job. Files of one
+    * commit share a schema (`seq` stamps the adding commit), so ONE
+    * footer per distinct seq suffices, taken in manifest order (the
+    * order the inferring read merged in). The merge is Spark's own
+    * (writer row metadata first, parquet schema as fallback), and the
+    * result is nullable like every file-source relation's schema.
+    */
+  private[graft] def footerSchema(s: SparkSession, root: Path,
+                                  es: Seq[ManifestEntry]): StructType = {
+    require(es.nonEmpty, s"no files to resolve a schema from under $root")
+    val conf = footerConf(s)
+    val footers = parMap(es.distinctBy(_.seq)) { e =>
+      val p = new org.apache.hadoop.fs.Path(root.resolve(e.relPath).toUri)
+      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try new org.apache.parquet.hadoop.Footer(p, f.getFooter) finally f.close()
+    }
+    org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+      .readSchema(footers, s)
+  }
+
+  /** A MANIFEST-BACKED scan of `es` under `schema`: a HadoopFsRelation
+    * over a [[graft.sources.SnapshotFileIndex]], so the manifest IS the
+    * listing (no listing job ever runs) and pushed data filters prune
+    * whole files through the zone maps / bloom sidecars at plan time.
+    * Files missing a schema column surface it as NULL. Without a
+    * schema, [[footerSchema]] supplies the inferred one. `seqCol` adds
+    * each row's file commit seq as an int column of that name.
+    */
+  private[graft] def scan(s: SparkSession, root: Path, es: Seq[ManifestEntry],
+                          schema: StructType,
+                          pruneCol: Option[String] = None,
+                          seqCol: Option[String] = None): DataFrame = {
+    val index = new graft.sources.SnapshotFileIndex(root, es.map(_.seq).max, es, pruneCol, seqCol)
+    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      location = index,
+      partitionSchema = index.partitionSchema,
+      dataSchema = schema,
+      bucketSpec = None,
+      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      options = Map.empty)(
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+    org.apache.spark.sql.GraftBridge.ofRows(s,
+      org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
+  }
+
+  private[graft] def scan(s: SparkSession, root: Path, es: Seq[ManifestEntry]): DataFrame =
+    scan(s, root, es, footerSchema(s, root, es))
+
   /** Exact per-file `(col, min, max)` zone maps read from the parquet
     * FOOTERS of freshly-staged files, replacing the scan JOB the stats
     * gather used to pay (guide §1.2: never re-compute what storage
@@ -595,8 +645,7 @@ object Snapshots {
     // raw base files, not the merged view: a pair for an already-deleted
     // row is harmless (the anti-join is idempotent), and skipping the
     // merge keeps this one cheap scan
-    val pairs = s.read.option("mergeSchema", "true")
-      .parquet(datas.map(e => root.resolve(e.relPath).toString): _*)
+    val pairs = scan(s, root, datas)
       .select(col("*"), col("_metadata.file_path").as("__fp"),
         col("_metadata.row_index").as("__pos"))
       .filter(cond)
@@ -2293,14 +2342,27 @@ object Snapshots {
     (datas, dels)
   }
 
-  /** Seq-aware merged read: data files grouped by the snapshot that
-    * added them; each group is anti-joined with only the tombstones of
-    * LATER snapshots (strictly greater seq), then the groups union.
-    * `shape` is a per-group residual (filter) applied before the
-    * anti-join — filters commute with both union and anti-join, so
-    * pruned/point reads reuse this unchanged. This is Iceberg's
-    * sequence-number visibility rule: an upsert's own rows are never
-    * erased by its own tombstone.
+  /** Seq-aware merged read, planned on the driver with no Spark job.
+    * Iceberg's sequence-number rule for equality deletes
+    * (https://iceberg.apache.org/spec/#scan-planning): a tombstone
+    * erases a key only from files of an EARLIER commit (strictly
+    * smaller seq), so an upsert's own rows are never erased by its own
+    * tombstone. The plan is at most two legs, however many delete
+    * commits the snapshot carries:
+    *  - HOT files (some later tombstone could erase one of their rows)
+    *    read in ONE scan and anti-join ONE scan of every applicable
+    *    tombstone on the key columns plus `tomb.seq > data.seq`; both
+    *    scans carry each file's manifest seq as a partition value, so
+    *    no file path is ever matched;
+    *  - every other file (the newest commit's, and files the zone maps
+    *    prove clear of every later tombstone's key range) reads as one
+    *    pure scan leg.
+    * `shape` is a residual filter applied before the anti-join: filters
+    * commute with both union and anti-join, so pruned/point reads reuse
+    * this unchanged. Every scan is manifest-backed ([[scan]]); the read
+    * shape is `knownSchema` when the caller knows it (the catalog's
+    * declared schema), else [[footerSchema]] over the files read, one
+    * footer per commit. Tombstones keep their own key-only shape.
     */
   private def mergeRead(s: SparkSession, root: Path, datas: Seq[ManifestEntry],
                         dels: Seq[ManifestEntry],
@@ -2308,50 +2370,13 @@ object Snapshots {
                         pruneCol: Option[String] = None,
                         knownSchema: Option[StructType] = None,
                         knownTombSchema: Option[StructType] = None): DataFrame = {
-    // mergeSchema: an append may carry ADDED columns (schema evolution);
-    // a merged read surfaces them with nulls on pre-evolution files,
-    // while time travel to an old snapshot reads only old files and
-    // keeps the old shape. Cost is per-footer schema union, parallel —
-    // +0.6 s on the 1000-file chain's 3.1 s read (snap_1000x re-run).
-    // A caller that KNOWS the read shape (the catalog: its declared
-    // schema is authoritative) passes knownSchema, and each data leg
-    // becomes a MANIFEST-BACKED relation (SnapshotFileIndex under a
-    // HadoopFsRelation): no listing job ever runs — the manifest IS the
-    // listing — and pushed data filters prune whole FILES through the
-    // zone maps / bloom sidecars at plan time, exactly like the
-    // tombstone-free scan path. Files missing a declared column surface
-    // nulls, same as the merged inference.
-    def read(es: Seq[ManifestEntry]) = knownSchema match {
-      case Some(sch) =>
-        val seqTag = es.map(_.seq).max
-        val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          location = new graft.sources.SnapshotFileIndex(root, seqTag, es, pruneCol),
-          partitionSchema = StructType(Nil),
-          dataSchema = sch,
-          bucketSpec = None,
-          fileFormat =
-            new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-          options = Map.empty)(
-          s.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-        org.apache.spark.sql.GraftBridge.ofRows(s,
-          org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
-      case None => s.read.option("mergeSchema", "true")
-        .parquet(es.map(e => root.resolve(e.relPath).toString): _*)
-    }
-    // tombstones keep their own (key columns only) shape regardless of
-    // any declared data schema; a caller that knows it (the catalog: the
-    // morkey field(s)) skips this inference job too
-    def readTombs(es: Seq[ManifestEntry]) = knownTombSchema match {
-      case Some(sch) => s.read.schema(sch)
-        .parquet(es.map(e => root.resolve(e.relPath).toString): _*)
-      case None => s.read.option("mergeSchema", "true")
-        .parquet(es.map(e => root.resolve(e.relPath).toString): _*)
-    }
+    val schema = knownSchema.getOrElse(footerSchema(s, root, datas))
+    def read(es: Seq[ManifestEntry]) = scan(s, root, es, schema, pruneCol)
     if (dels.isEmpty) shape(read(datas))
     else if (dels.exists(isPosDelete)) {
       // POSITION tombstones (key-less DELETE): the tombstone NAMES its
       // target files, so applicability is the naming itself — no seq
-      // grouping. Files named by any tombstone filter per row against
+      // rule. Files named by any tombstone filter per row against
       // the BROADCAST per-file ordinal bitmap (the ordinal comes from
       // the reader's own _metadata.row_index — no shuffle, no build
       // side); unnamed files read pure at full scan speed. The named
@@ -2379,110 +2404,121 @@ object Snapshots {
       (joined.toSeq ++ pure.toSeq).reduce(_.unionByName(_))
     }
     else {
-      // Group data files by their APPLICABLE TOMBSTONE SET, not by seq:
-      // tombstone seqs are sorted, so "how many tombstones have seq >
-      // mine" pins the exact suffix that applies — O(#delete commits)
-      // groups (plan branches) regardless of file count. Grouping by
-      // seq was O(#files) union branches: a 1000-release chain paid 78 s
-      // for a 1M-row count before snap_1000x caught it.
-      val delSeqs = dels.map(_.seq).distinct.sorted
-      datas.groupBy(e => delSeqs.count(_ > e.seq)).toSeq.sortBy(_._1)
-        .map { case (nApplicable, files) =>
-          if (nApplicable == 0) shape(read(files))
-          else {
-            val applicable = delSeqs.takeRight(nApplicable).toSet
-            val applicableDels = dels.filter(e => applicable(e.seq))
-            // TOMBSTONE-RANGE PRUNING: when the store's zone-map column
-            // IS the tombstone key column (pruneCol, declared by the
-            // caller and verified against the tombstone's own footer
-            // schema), a data file whose [min,max] cannot intersect ANY
-            // applicable tombstone's key range provably holds no deleted
-            // key and reads PURE — the anti-join applies only to the
-            // files a delete could actually touch. On a range-clustered
-            // store a 1k-key delete leaves one hot file; the other 63
-            // read at full scan speed. Absent stats on either side mean
-            // "cannot prove clear" and stay on the join leg.
-            val ranges = pruneCol.map(pc => tombstoneRanges(s, root, applicableDels, pc))
-            // a file's zone for the prune column: the legacy anonymous
-            // range (declared = pruneCol by the caller) OR the NAMED
-            // multi token — partitioned stagings carry multi only
-            def zoneOf(e: ManifestEntry): Option[(Long, Long)] =
-              e.stats.orElse(pruneCol.flatMap(pc =>
-                e.multi.find(_._1 == pc).map(t => (t._2, t._3))))
-            val (hot, clear) = ranges match {
-              case Some(Some(rs)) => files.partition(e => zoneOf(e) match {
-                case Some((lo, hi)) => rs.exists { case (tLo, tHi) => lo <= tHi && hi >= tLo }
-                case None => true // unknown zone map: must join
-              })
-              case _ => (files, Seq.empty)
-            }
-            val joined = if (hot.isEmpty) None else {
-              // no distinct(): each tombstone file is written distinct,
-              // and a LEFT ANTI join is insensitive to build-side
-              // duplicates across files — the distinct only bought an
-              // extra shuffle stage before the broadcast. The join key
-              // is the tombstone's WHOLE column set: composite keys
-              // (multi-column tombstones) anti-join on every column
-              val tomb = readTombs(applicableDels)
-              Some(shape(read(hot)).join(tomb, tomb.columns.toIndexedSeq, "left_anti"))
-            }
-            val pure = if (clear.isEmpty) None else Some(shape(read(clear)))
-            (joined.toSeq ++ pure.toSeq).reduce(_.unionByName(_))
-          }
-        }.reduce(_.unionByName(_))
+      // TOMBSTONE-RANGE PRUNING: when the store's zone-map column IS
+      // the tombstone key column (pruneCol, declared by the caller and
+      // verified against each tombstone's own footer schema), a file
+      // whose [min,max] misses the key range of every LATER tombstone
+      // provably holds no row a tombstone erases and reads PURE. On a
+      // range-clustered store a 1k-key delete leaves one hot file; the
+      // other 63 read at full scan speed. Absent stats on either side
+      // mean "cannot prove clear" and keep the file hot. Only
+      // tombstones LATER than some data file can erase a row.
+      val minSeq = datas.map(_.seq).min
+      val tombs = dels.filter(_.seq > minSeq)
+      val tombRange: Map[String, Option[(Long, Long)]] =
+        pruneCol.fold(Map.empty[String, Option[(Long, Long)]])(tombstoneRanges(s, root, tombs, _))
+      // a file's zone for the prune column: the legacy anonymous range
+      // (declared = pruneCol by the caller) OR the NAMED multi token —
+      // partitioned stagings carry multi only
+      def zoneOf(e: ManifestEntry): Option[(Long, Long)] =
+        e.stats.orElse(pruneCol.flatMap(pc =>
+          e.multi.find(_._1 == pc).map(t => (t._2, t._3))))
+      def touchedBy(e: ManifestEntry, t: ManifestEntry): Boolean =
+        t.seq > e.seq && ((zoneOf(e), tombRange.getOrElse(t.relPath, None)) match {
+          case (Some((lo, hi)), Some((tLo, tHi))) => lo <= tHi && hi >= tLo
+          case _ => true
+        })
+      val (hot, clear) = datas.partition(e => tombs.exists(touchedBy(e, _)))
+      val joined = if (hot.isEmpty) None else {
+        // no distinct(): each tombstone file is written distinct, and a
+        // LEFT ANTI join is insensitive to build-side duplicates. The
+        // join key is the tombstone's WHOLE column set: composite keys
+        // (multi-column tombstones) anti-join on every column. Both
+        // scans carry their file's commit seq as a partition value.
+        val hotTombs = tombs.filter(_.seq > hot.map(_.seq).min)
+        val tombSchema = knownTombSchema.getOrElse(footerSchema(s, root, hotTombs))
+        def q(c: String) = col("`" + c.replace("`", "``") + "`")
+        val keys = tombSchema.fieldNames.toIndexedSeq
+        val tomb = scan(s, root, hotTombs, tombSchema, seqCol = Some("__tseq"))
+          .select(keys.map(k => q(k).as("__t_" + k)) :+ col("__tseq"): _*)
+        val data = scan(s, root, hot, schema, pruneCol, seqCol = Some("__seq"))
+        val cond = keys.map(k => q(k) === q("__t_" + k)).reduce(_ && _) &&
+          col("__tseq") > col("__seq")
+        Some(shape(data).join(tomb, cond, "left_anti").drop("__seq"))
+      }
+      val pure = if (clear.isEmpty) None else Some(shape(read(clear)))
+      (joined.toSeq ++ pure.toSeq).reduce(_.unionByName(_))
     }
   }
 
-  /** Per-tombstone-file [min, max] of the key column, from parquet
-    * FOOTER statistics — one O(1) driver-side footer read per delete
-    * file, memoized forever (the files are immutable). `Some(ranges)`
-    * only when EVERY file's footer (a) carries exactly the declared
-    * column as INT64 and (b) has complete min/max stats on every row
-    * group; anything else returns None and the caller must not prune.
+  /** Per-store memo of tombstone key ranges: store + key column → the
+    * ranges of the tombstone files the store's last merged read
+    * applied. Each read reuses the entries of files still present,
+    * reads the missing footers in parallel, and replaces the slot with
+    * exactly its own tombstone set, so a slot never outgrows the
+    * manifest it came from: compaction drops its entries, and a
+    * long-lived mirror stream pays one footer read per new tombstone.
     */
-  private val tombRangeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(Long, Long)]]()
+  private val tombRangeCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[String, Option[(Long, Long)]]]()
 
-  private def tombstoneRanges(s: SparkSession, root: Path, dels: Seq[ManifestEntry],
-                              keyCol: String): Option[Seq[(Long, Long)]] = {
-    val ranges = dels.map { e =>
-      tombRangeCache.computeIfAbsent(root.resolve(e.relPath).toString, { p =>
-        try {
-          // the SESSION's hadoop conf, not a bare Configuration: a bare
-          // one lacks object-store credentials/filesystem settings and
-          // the footer read would silently fail into "no pruning"
-          val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(java.nio.file.Paths.get(p).toUri),
-              footerConf(s)))
-          try {
-            // the declared column may sit anywhere in the tombstone's
-            // schema: a COMPOSITE key lands a multi-column tombstone,
-            // and range pruning stays sound on any ONE key column — a
-            // data file whose [min,max] for that column misses every
-            // tombstone's range cannot hold ANY deleted (k1,..,kn)
-            val sch = f.getFooter.getFileMetaData.getSchema
-            val idx = (0 until sch.getFieldCount).find(i =>
-              sch.getFields.get(i).getName == keyCol)
-            val int64 = idx.exists(i =>
-              sch.getFields.get(i).isPrimitive &&
-              sch.getFields.get(i).asPrimitiveType().getPrimitiveTypeName ==
-                org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-            if (!int64) None
-            else {
-              val i = idx.get
-              val stats = f.getFooter.getBlocks.asScala
-                .map(_.getColumns.get(i).getStatistics)
-              if (stats.isEmpty || stats.exists(st => st == null || !st.hasNonNullValue)) None
-              else Some((
-                stats.map(_.genericGetMin.asInstanceOf[Long]).min,
-                stats.map(_.genericGetMax.asInstanceOf[Long]).max))
-            }
-          } finally f.close()
-        } catch { case scala.util.control.NonFatal(_) => None }
-      })
-    }
-    if (ranges.forall(_.isDefined)) Some(ranges.map(_.get)) else None
+  /** Tombstone relPath → [min, max] of `keyCol` for `tombs`, through
+    * [[tombRangeCache]].
+    */
+  private[graft] def tombstoneRanges(s: SparkSession, root: Path, tombs: Seq[ManifestEntry],
+                                     keyCol: String): Map[String, Option[(Long, Long)]] = {
+    val slot = root.toAbsolutePath.normalize.toString + "\u0000" + keyCol
+    val prior = Option(tombRangeCache.get(slot)).getOrElse(Map.empty)
+    val live = tombs.map(_.relPath).distinct
+    val missing = live.filterNot(prior.contains)
+    val ranges = live.filter(prior.contains).map(p => p -> prior(p)).toMap ++
+      missing.zip(parMap(missing)(tombstoneRange(s, root, _, keyCol)))
+    tombRangeCache.put(slot, ranges)
+    ranges
+  }
+
+  /** A tombstone file's [min, max] of the key column, from its parquet
+    * FOOTER statistics — one O(1) driver-side footer read. `Some` only
+    * when the footer (a) carries the declared column as INT64 and (b)
+    * has complete min/max stats on every row group; anything else is
+    * None and the caller must not prune against this tombstone.
+    */
+  private def tombstoneRange(s: SparkSession, root: Path, relPath: String,
+                             keyCol: String): Option[(Long, Long)] = {
+    val p = root.resolve(relPath).toString
+    try {
+      // the SESSION's hadoop conf, not a bare Configuration: a bare
+      // one lacks object-store credentials/filesystem settings and
+      // the footer read would silently fail into "no pruning"
+      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(java.nio.file.Paths.get(p).toUri),
+          footerConf(s)))
+      try {
+        // the declared column may sit anywhere in the tombstone's
+        // schema: a COMPOSITE key lands a multi-column tombstone,
+        // and range pruning stays sound on any ONE key column — a
+        // data file whose [min,max] for that column misses every
+        // tombstone's range cannot hold ANY deleted (k1,..,kn)
+        val sch = f.getFooter.getFileMetaData.getSchema
+        val idx = (0 until sch.getFieldCount).find(i =>
+          sch.getFields.get(i).getName == keyCol)
+        val int64 = idx.exists(i =>
+          sch.getFields.get(i).isPrimitive &&
+          sch.getFields.get(i).asPrimitiveType().getPrimitiveTypeName ==
+            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
+        if (!int64) None
+        else {
+          val i = idx.get
+          val stats = f.getFooter.getBlocks.asScala
+            .map(_.getColumns.get(i).getStatistics)
+          if (stats.isEmpty || stats.exists(st => st == null || !st.hasNonNullValue)) None
+          else Some((
+            stats.map(_.genericGetMin.asInstanceOf[Long]).min,
+            stats.map(_.genericGetMax.asInstanceOf[Long]).max))
+        }
+      } finally f.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Time travel: the exact immutable file set of snapshot `n`, with
@@ -2684,8 +2720,9 @@ object Snapshots {
   /** [[readAt]] with the reader's extra knowledge: `pruneCol` declares
     * that the store's zone-map stats column is ALSO the tombstone key
     * column (enabling tombstone-range pruning of the merged read's
-    * anti-join), and `knownSchema` pins the read shape so no
-    * schema-inference job runs.
+    * anti-join), and `knownSchema` pins the read shape in place of the
+    * footer-resolved one (the catalog's declared schema is
+    * authoritative: it also covers type widening).
     */
   def readAt(s: SparkSession, root: Path, n: Int, pruneCol: Option[String],
              knownSchema: Option[StructType],
@@ -2924,8 +2961,7 @@ object Snapshots {
         if (targets.isEmpty) None
         else {
           val prefix = posPrefix(root)
-          val withPos = s.read.option("mergeSchema", "true")
-            .parquet(targets.map(e => root.resolve(e.relPath).toString): _*)
+          val withPos = scan(s, root, targets)
             .select(col("*"),
               substring(col("_metadata.file_path"), prefix.length + 1, Int.MaxValue)
                 .as("__file"),
@@ -2939,8 +2975,7 @@ object Snapshots {
             .withColumn("_change_type", lit("delete")))
         }
       } else {
-        val keys = s.read.parquet(
-          windowDels.map(e => root.resolve(e.relPath).toString): _*).distinct()
+        val keys = scan(s, root, windowDels).distinct()
         // broadcast only when the manifest proves the window's tombstones
         // small; a 100M-key retraction window drops the hint and lets
         // AQE pick the join (the semi-join is correct either way) instead
@@ -3077,10 +3112,9 @@ object Snapshots {
     val before = manifest(root, from).map(_.relPath).toSet
     // additions only — a delete commit's tombstone file is not row data;
     // consume deletions via readDeleteChanges
-    val added = manifest(root, to).filterNot(isDelete).map(_.relPath).filterNot(before)
-      .map(p => root.resolve(p).toString)
+    val added = manifest(root, to).filterNot(isDelete).filterNot(e => before(e.relPath))
     if (added.isEmpty) readAt(s, root, to).limit(0)
-    else s.read.option("mergeSchema", "true").parquet(added: _*)
+    else scan(s, root, added)
   }
 
   /** The deletion half of CDC: keys tombstoned between `from` and `to`
@@ -3090,11 +3124,10 @@ object Snapshots {
     */
   def readDeleteChanges(s: SparkSession, root: Path, from: Int, to: Int): DataFrame = {
     val before = manifest(root, from).map(_.relPath).toSet
-    val added = manifest(root, to).filter(isDelete).map(_.relPath).filterNot(before)
-      .map(p => root.resolve(p).toString)
+    val added = manifest(root, to).filter(isDelete).filterNot(e => before(e.relPath))
     if (added.isEmpty)
       throw new IllegalArgumentException(s"no delete commits between $from and $to")
-    s.read.parquet(added: _*).distinct()
+    scan(s, root, added).distinct()
   }
 
   /** Compaction as a snapshot commit — the small-files cure that append

@@ -1016,15 +1016,19 @@ final class GraftTable(
     currentIdOpt.flatMap { n =>
       val (datas, dels) = manifestSplit(n)
       if (dels.nonEmpty && (morKey.isDefined || posMode) && datas.nonEmpty) {
-        // the ANALYZED subplan: scans, anti-joins, filters and unions
-        // are all operator-batch-legal nodes (mergeRead materializes no
-        // analyzer-era operator like Deduplicate — the tombstone legs
-        // join without distinct), so the splice needs no private
-        // optimizer run; the host query's remaining fixed-point
-        // iterations optimize the subtree in place. statsCol enables
-        // tombstone-range pruning (files provably clear of deleted keys
-        // skip the anti-join); the declared schemas (table + morkey
-        // tombstone) skip both inference jobs. Files AND tombstones
+        // the ANALYZED subplan: manifest-backed scans, ONE
+        // sequence-aware anti-join (hot files vs every applicable
+        // tombstone, `tomb.seq > data.seq`), filters and at most one
+        // union with the pure leg — all operator-batch-legal nodes
+        // (mergeRead materializes no analyzer-era operator like
+        // Deduplicate: the tombstone scan joins without distinct), so
+        // the splice needs no private optimizer run; the host query's
+        // remaining fixed-point iterations optimize the subtree in
+        // place. The plan size is independent of the number of delete
+        // commits. statsCol enables tombstone-range pruning (files
+        // provably clear of every later tombstone's keys read pure);
+        // the declared schemas (table + morkey tombstone) stand in for
+        // the footer-resolved ones. Files AND tombstones
         // carry PHYSICAL column names (stable across renames), so the
         // merged view reads physical and conforms to the LOGICAL shape
         // at its boundary — the splice rule then rebinds by name.

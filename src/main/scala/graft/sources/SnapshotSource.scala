@@ -84,18 +84,6 @@ final class SnapshotSource extends RelationProvider
     datas
   }
 
-  private def schemaOf(s: SparkSession, root: JPath,
-                       datas: Seq[Snapshots.ManifestEntry]): StructType = {
-    // schema-merge like the layer's own read path — evolved releases
-    // may ADD columns (snapshot_evolve) — but bounded: files of one
-    // commit share a schema (`seq` stamps the adding commit), so ONE
-    // footer per distinct seq suffices. Planning stays O(#commits in
-    // the manifest), never O(#files) footer fetches.
-    val perSeq = datas.groupBy(_.seq).values.map(_.head).toSeq
-    s.read.option("mergeSchema", "true")
-      .parquet(perSeq.map(e => root.resolve(e.relPath).toString): _*).schema
-  }
-
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
@@ -107,7 +95,9 @@ final class SnapshotSource extends RelationProvider
     HadoopFsRelation(
       location = index,
       partitionSchema = StructType(Nil),
-      dataSchema = schemaOf(spark, root, datas),
+      // schema-merge like the layer's own read path — evolved releases
+      // may ADD columns (snapshot_evolve) — from one footer per commit
+      dataSchema = Snapshots.footerSchema(spark, root, datas),
       bucketSpec = None,
       fileFormat = new ParquetFileFormat(),
       options = parameters)(
@@ -209,7 +199,7 @@ final class SnapshotSource extends RelationProvider
     // change-feed mode may start on a tombstone-bearing table: the feed
     // APPLIES tombstones (that is its whole point), so schema resolution
     // must not refuse them the way the append-only file stream does
-    val base = schemaOf(sqlContext.sparkSession, root,
+    val base = Snapshots.footerSchema(sqlContext.sparkSession, root,
       dataEntries(root, n, forbidTombstones = !cdf))
     val st = schema.getOrElse(
       if (cdf) StructType(base.fields :+
@@ -501,17 +491,11 @@ final class SnapshotStreamSource(spark: SparkSession, root: JPath,
         // an empty add-set is a legal empty micro-batch, not an error
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       } else {
-        // conform the increment to the source schema: files that predate
+        // read the increment under the source schema: files that predate
         // an evolved (appended) column surface it as NULL — a replayed
         // early batch must not fail just because every file in it is
         // older than the column
-        val raw = spark.read.option("mergeSchema", "true")
-          .parquet(added.map(e => root.resolve(e.relPath).toString): _*)
-        val have = raw.columns.toSet
-        raw.select(schema.fields.toIndexedSeq.map { f =>
-          if (have(f.name)) org.apache.spark.sql.functions.col(f.name)
-          else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
-        }: _*)
+        Snapshots.scan(spark, root, added, schema)
       }
     GraftSqlShims.asStreamingFrame(batch)
   }

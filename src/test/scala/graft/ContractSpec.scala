@@ -87,6 +87,21 @@ class ContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"function-registry use in library code: ${hits.mkString(", ")}")
   }
 
+  test("snapshot-store reads take their schema from footers, never from mergeSchema inference") {
+    // an inferring read runs a Spark job per call; Snapshots.footerSchema
+    // reads one footer per commit on the driver
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val files = Seq("src/main/scala/graft/etl/Snapshots.scala",
+      "src/main/scala/graft/sources/SnapshotSource.scala")
+    val hits = files.flatMap { f =>
+      Files.readAllLines(Paths.get(f)).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("\"mergeSchema\"") => s"$f:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, s"mergeSchema reads: ${hits.mkString(", ")}")
+  }
+
   test("every registered query appears in SURVEY.md §2 (the judged inventory)") {
     // the coverage checklist is graded row by row — a query registered
     // without an inventory row is invisible to the audit and a silent
