@@ -559,7 +559,7 @@ object Snapshots {
       require(!isPosDelete(prior),
         s"store $root carries POSITION tombstones; an equality tombstone " +
           "cannot coexist with them — compact first")
-      val priorCols = tombColsOf(s, root.resolve(prior.relPath).toString)
+      val priorCols = footerSchema(s, root, Seq(prior)).fieldNames.toSeq
       require(priorCols.toSet == keys.columns.toSet,
         s"tombstone key columns '${keys.columns.mkString(",")}' conflict with " +
           s"existing '${priorCols.mkString(",")}'")
@@ -918,23 +918,13 @@ object Snapshots {
     * never alongside position tombstones. Size-bounded like every
     * tombstone write (AQE coalesces the distinct's output).
     */
-  /** Key columns of an immutable tombstone file, memoized: a long-lived
-    * upsert sink checks coexistence EVERY batch, and re-opening the
-    * same footer per micro-batch is pure overhead.
-    */
-  private val tombColCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  private def tombColsOf(s: SparkSession, full: String): Seq[String] =
-    tombColCache.computeIfAbsent(full, f => s.read.parquet(f).columns.toIndexedSeq)
-
   def stageTombstoneOcc(s: SparkSession, root: Path, keys: DataFrame): Seq[ManifestEntry] = {
     require(keys.columns.nonEmpty, "tombstone needs at least one key column")
     currentId(root).map(manifest(root, _)).getOrElse(Nil).find(isDelete).foreach { prior =>
       require(!isPosDelete(prior),
         s"store $root carries POSITION tombstones; an equality tombstone " +
           "cannot coexist with them — compact first")
-      val priorCols = tombColsOf(s, root.resolve(prior.relPath).toString)
+      val priorCols = footerSchema(s, root, Seq(prior)).fieldNames.toSeq
       require(priorCols.toSet == keys.columns.toSet,
         s"tombstone key columns '${keys.columns.mkString(",")}' conflict with " +
           s"existing '${priorCols.mkString(",")}'")

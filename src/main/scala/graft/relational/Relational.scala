@@ -2,7 +2,7 @@ package graft.relational
 
 import graft.Tables
 import graft.functions.{BitmapDistinct, TopKAggregate}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1347,13 +1347,14 @@ object Relational {
     * the rewrite and its bailouts). The DuckDB oracle executes the REAL
     * join, so the rows+schema+hash gate is precisely the rewrite's
     * soundness proof. The rule arming is scoped to a CHILD session
-    * (`newSession()`: same SparkContext + extensions, isolated SQLConf),
-    * so no other query in the parent session — bench sweeps, correctness
-    * runs — ever executes with the elimination rule enabled; the returned
-    * DataFrame carries the child session and stays armed at action time.
+    * (`GraftBridge.cloneSession`: same SparkContext + extensions, a copy
+    * of the caller's runtime conf), so no other query in the parent
+    * session — bench sweeps, correctness runs — ever executes with the
+    * elimination rule enabled; the returned DataFrame carries the child
+    * session and stays armed at action time.
     */
   def qFkElim(s: SparkSession, d: String): DataFrame = {
-    val scoped = s.newSession()
+    val scoped = GraftBridge.cloneSession(s)
     scoped.conf.set("spark.graft.fkJoinElimination.enabled", "true")
     graft.plans.FkRegistry.declare("orders", "l_orderkey", "o_orderkey")
     Tables.lineitem(scoped, d)
@@ -1380,10 +1381,11 @@ object Relational {
     * .EliminateFkJoin]] drops the join with no residual filter. The
     * DuckDB oracle executes the REAL left join against the filtered
     * dim, so the rows+schema+hash gate is the rewrite's soundness
-    * proof, exactly as for B38.
+    * proof, exactly as for B38, and the rule is armed on a cloned child
+    * session the same way.
     */
   def qFkElimLeft(s: SparkSession, d: String): DataFrame = {
-    val scoped = s.newSession()
+    val scoped = GraftBridge.cloneSession(s)
     scoped.conf.set("spark.graft.fkJoinElimination.enabled", "true")
     graft.plans.FkRegistry.declareUnique("orders", "o_orderkey")
     Tables.lineitem(scoped, d)

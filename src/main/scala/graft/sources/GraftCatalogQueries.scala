@@ -6,7 +6,7 @@ import scala.collection.JavaConverters._
 
 import graft.Tables
 import graft.etl.Snapshots
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -28,16 +28,32 @@ object GraftCatalogQueries {
     finally walk.close()
   }
 
-  /** Register a throwaway catalog over a fresh warehouse dir. Catalog
-    * instances cache per session BY NAME, so every call mints a new
-    * name — reusing one would silently pin the first root.
+  /** Register a throwaway catalog over a fresh warehouse dir on a
+    * session cloned from `s`: every statement, temp view and conf change
+    * of the query runs on the clone, so the catalog, its views and its
+    * settings die with it and never reach the caller's session. The
+    * minted name never shadows a catalog the caller registered.
     */
-  private def freshCatalog(s: SparkSession): (String, java.nio.file.Path) = {
+  private def freshCatalog(s: SparkSession): (SparkSession, String, java.nio.file.Path) = {
+    val scoped = GraftBridge.cloneSession(s)
     val cat = "gc" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val root = JFiles.createTempDirectory(s"graft_$cat")
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-    (cat, root)
+    scoped.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    scoped.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
+    (scoped, cat, root)
+  }
+
+  /** Shuffle exchanges in an executed plan, looking through AQE stages. */
+  private def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    (p match {
+      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
+      case _ => 0
+    }) + kids.map(shuffles).sum
   }
 
   private def dsv2Scan(df: DataFrame): BatchScanExec = {
@@ -65,22 +81,22 @@ object GraftCatalogQueries {
     * overwrite replaces exactly, history stays readable.
     */
   def catalogSql(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE NAMESPACE $cat.gold")
-      s.sql(s"CREATE TABLE $cat.gold.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
-      s.sql(s"INSERT INTO $cat.gold.orders SELECT * FROM $view WHERE o_orderkey % 2 = 0")
-      s.sql(s"INSERT INTO $cat.gold.orders SELECT * FROM $view WHERE o_orderkey % 2 = 1")
+      scoped.sql(s"CREATE NAMESPACE $cat.gold")
+      scoped.sql(s"CREATE TABLE $cat.gold.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      scoped.sql(s"INSERT INTO $cat.gold.orders SELECT * FROM $view WHERE o_orderkey % 2 = 0")
+      scoped.sql(s"INSERT INTO $cat.gold.orders SELECT * FROM $view WHERE o_orderkey % 2 = 1")
       val store = root.resolve("gold").resolve("orders")
       val files1 = Snapshots.manifest(store, 1).map(_.relPath).toSet
       require(Snapshots.manifest(store, 2).map(_.relPath).toSet.intersect(files1) == files1,
         "INSERT INTO did not land as an appended release reusing prior files")
       Snapshots.createTag(store, "full", 2)
-      s.sql(s"INSERT OVERWRITE $cat.gold.orders SELECT * FROM $view WHERE o_orderkey < 2000")
+      scoped.sql(s"INSERT OVERWRITE $cat.gold.orders SELECT * FROM $view WHERE o_orderkey < 2000")
       require(Snapshots.currentId(store).contains(3),
         s"expected 3 snapshots, got ${Snapshots.currentId(store)}")
       val out = Seq(
@@ -88,14 +104,14 @@ object GraftCatalogQueries {
         ("v2", s"SELECT * FROM $cat.gold.orders VERSION AS OF 2"),
         ("tag_full", s"SELECT * FROM $cat.gold.orders VERSION AS OF 'full'")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2)))
       }
       val schema = StructType(Seq(
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -122,15 +138,15 @@ object GraftCatalogQueries {
     * skipping changes I/O, never answers.
     */
   def catalogPrune(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
         "TBLPROPERTIES ('statscol'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .repartitionByRange(8, col("o_orderkey"))
         .writeTo(s"$cat.orders").append()
-      val agg = s.sql(
+      val agg = scoped.sql(
         s"""SELECT o_orderstatus, count(*) AS n, sum(cents) AS sum_total_cents
            |FROM $cat.orders WHERE o_orderkey BETWEEN 400 AND 1299
            |GROUP BY o_orderstatus""".stripMargin)
@@ -147,7 +163,7 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(
         StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("o_orderstatus")
     } finally rm(root)
   }
@@ -156,18 +172,19 @@ object GraftCatalogQueries {
     * registered query returns a literal proof frame, which would
     * document nothing — this builds the REAL catalog read tree
     * (BatchScan over SnapshotV2FileIndex with pushed filters) over a
-    * freshly created table. The temp warehouse lives until JVM exit;
-    * plan-inspection contexts only.
+    * freshly created table. The frame is on the catalog's cloned
+    * session, so the catalog still resolves when it is planned; the
+    * temp warehouse is not removed (plan-inspection contexts only).
     */
   def catalogPrunePlan(s: SparkSession, d: String): DataFrame = {
-    val (cat, _) = freshCatalog(s)
-    s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
+    val (scoped, cat, _) = freshCatalog(s)
+    scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
       "TBLPROPERTIES ('statscol'='o_orderkey')")
-    Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+    Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
       round(col("o_totalprice") * 100).cast("long").as("cents"))
       .repartitionByRange(8, col("o_orderkey"))
       .writeTo(s"$cat.orders").append()
-    s.sql(
+    scoped.sql(
       s"""SELECT o_orderstatus, count(*) AS n, sum(cents) AS sum_total_cents
          |FROM $cat.orders WHERE o_orderkey BETWEEN 400 AND 1299
          |GROUP BY o_orderstatus""".stripMargin)
@@ -191,17 +208,17 @@ object GraftCatalogQueries {
     * the predicate's TRUE rows and nothing else, anywhere, ever.
     */
   def catalogDelete(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
         "TBLPROPERTIES ('statscol'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .repartitionByRange(8, col("o_orderkey"))
         .writeTo(s"$cat.orders").append()
       val store = root.resolve("orders")
       val before = Snapshots.manifest(store, 1)
-      s.sql(s"DELETE FROM $cat.orders WHERE o_orderkey BETWEEN 500 AND 1499 " +
+      scoped.sql(s"DELETE FROM $cat.orders WHERE o_orderkey BETWEEN 500 AND 1499 " +
         "AND o_orderstatus = 'F'")
       require(Snapshots.currentId(store).contains(2),
         s"expected the delete to commit snapshot 2, got ${Snapshots.currentId(store)}")
@@ -216,14 +233,14 @@ object GraftCatalogQueries {
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2)))
       }
       val schema = StructType(Seq(
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -252,17 +269,17 @@ object GraftCatalogQueries {
     * history intact.
     */
   def catalogUpdate(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
         "TBLPROPERTIES ('statscol'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .repartitionByRange(8, col("o_orderkey"))
         .writeTo(s"$cat.orders").append()
       val store = root.resolve("orders")
       val before = Snapshots.manifest(store, 1)
-      s.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
+      scoped.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
         "WHERE o_orderkey BETWEEN 800 AND 1599 AND o_orderstatus = 'O'")
       require(Snapshots.currentId(store).contains(2),
         s"expected UPDATE to land snapshot 2, got ${Snapshots.currentId(store)}")
@@ -272,20 +289,20 @@ object GraftCatalogQueries {
         "group-based UPDATE carried no file byte-identical — zone maps bounded nothing")
       // conservation gate, in-query: an UPDATE must never change the row
       // count (the page-filtering regression lost exactly 50 rows here)
-      require(s.sql(s"SELECT count(*) FROM $cat.orders").head.getLong(0)
-        == Tables.orders(s, d).count(), "UPDATE changed the table's row count")
+      require(scoped.sql(s"SELECT count(*) FROM $cat.orders").head.getLong(0)
+        == Tables.orders(scoped, d).count(), "UPDATE changed the table's row count")
       val out = Seq(
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2)))
       }
       val schema = StructType(Seq(
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -317,16 +334,16 @@ object GraftCatalogQueries {
     * deletes without the inserts).
     */
   def catalogMerge(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_src"
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view")
+      scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view")
       val store = root.resolve("orders")
-      s.sql(
+      scoped.sql(
         s"""MERGE INTO $cat.orders t
            |USING (
            |  SELECT o_orderkey AS k, cents, o_orderkey % 10 = 3 AS is_del
@@ -346,7 +363,7 @@ object GraftCatalogQueries {
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
           s"sum(o_orderkey) AS sk FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -355,7 +372,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType),
         StructField("sum_keys", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -392,18 +409,18 @@ object GraftCatalogQueries {
     * so the two write paths are held to the same answer.
     */
   def catalogMorUpdate(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
         "o_orderstatus STRING, cents BIGINT) " +
         "TBLPROPERTIES ('morkey'='o_orderkey', 'statscol'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .repartitionByRange(8, col("o_orderkey"))
         .writeTo(s"$cat.orders").append()
       val store = root.resolve("orders")
       val base = Snapshots.manifest(store, 1)
-      s.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
+      scoped.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
         "WHERE o_orderkey BETWEEN 800 AND 1599 AND o_orderstatus = 'O'")
       require(Snapshots.currentId(store).contains(2),
         s"expected MoR UPDATE to land snapshot 2, got ${Snapshots.currentId(store)}")
@@ -419,20 +436,20 @@ object GraftCatalogQueries {
       val tableBytes = base.map(_.bytes).sum
       require(deltaBytes < tableBytes / 2,
         s"delta not O(changed rows): $deltaBytes bytes vs table $tableBytes")
-      require(s.sql(s"SELECT count(*) FROM $cat.orders").head.getLong(0)
-        == Tables.orders(s, d).count(), "MoR UPDATE changed the table's row count")
+      require(scoped.sql(s"SELECT count(*) FROM $cat.orders").head.getLong(0)
+        == Tables.orders(scoped, d).count(), "MoR UPDATE changed the table's row count")
       val out = Seq(
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2)))
       }
       val schema = StructType(Seq(
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -459,13 +476,13 @@ object GraftCatalogQueries {
     * oracle.
     */
   def catalogMorPart(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
         "o_orderstatus STRING, cents BIGINT, p BIGINT) " +
         "PARTITIONED BY (p) " +
         "TBLPROPERTIES ('morkey'='o_orderkey', 'statscol'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"),
         (col("o_orderkey") % 4).as("p"))
         .writeTo(s"$cat.orders").append()
@@ -473,7 +490,7 @@ object GraftCatalogQueries {
       val base = Snapshots.manifest(store, 1)
       require(base.forall(e => Snapshots.partValueOf(e.relPath).isDefined),
         "partitioned INSERT did not stage value-pure")
-      s.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
+      scoped.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
         "WHERE o_orderkey BETWEEN 800 AND 1599 AND o_orderstatus = 'O'")
       require(Snapshots.currentId(store).contains(2),
         s"expected partitioned MoR UPDATE to land snapshot 2, got " +
@@ -495,7 +512,7 @@ object GraftCatalogQueries {
       // PARTITION PRUNING PROOF on the MERGED (tombstone-bearing) read:
       // the p = 2 slice must open strictly fewer data files than the
       // snapshot lists — pruning through the spliced vectorized legs
-      val slice = s.sql(
+      val slice = scoped.sql(
         s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM $cat.orders " +
           "WHERE p = 2 GROUP BY 1")
       val opened = slice.queryExecution.sparkPlan.collect {
@@ -510,14 +527,14 @@ object GraftCatalogQueries {
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2)))
       } ++ slice.collect().map(r => Row("p2", r.getString(0), r.getLong(1), r.getLong(2)))
       val schema = StructType(Seq(
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -567,10 +584,10 @@ object GraftCatalogQueries {
     * reproduce; the oracle restates both states from the source table.
     */
   def catalogMorMulti(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_li"
     try {
-      s.sql(s"CREATE TABLE $cat.li (l_orderkey BIGINT NOT NULL, " +
+      scoped.sql(s"CREATE TABLE $cat.li (l_orderkey BIGINT NOT NULL, " +
         "l_linenumber BIGINT NOT NULL, qty BIGINT, l_returnflag STRING, " +
         "p BIGINT) PARTITIONED BY (p) " +
         "TBLPROPERTIES ('morkey'='l_orderkey,l_linenumber', 'statscol'='l_orderkey')")
@@ -581,7 +598,7 @@ object GraftCatalogQueries {
       // (INSERT, two count gates, the MERGE source twice), and without
       // it each re-ran the full lineitem aggregation (guide §5:
       // persist exactly the reused-and-expensive frame).
-      Tables.lineitem(s, d)
+      Tables.lineitem(scoped, d)
         .groupBy(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"))
         .agg(sum(col("l_quantity").cast("long")).as("qty"),
           min(col("l_returnflag")).as("l_returnflag"))
@@ -589,20 +606,20 @@ object GraftCatalogQueries {
         .select("l_orderkey", "l_linenumber", "qty", "l_returnflag", "p")
         .localCheckpoint()
         .createOrReplaceTempView(view)
-      s.sql(s"INSERT INTO $cat.li SELECT * FROM $view")
+      scoped.sql(s"INSERT INTO $cat.li SELECT * FROM $view")
       val store = root.resolve("li")
       val base = Snapshots.manifest(store, 1)
-      val baseCount = s.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0)
+      val baseCount = scoped.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0)
       // rename ONE key column: pure metadata — tombstones keep physical
-      s.sql(s"ALTER TABLE $cat.li RENAME COLUMN l_linenumber TO line_no")
-      s.sql(s"UPDATE $cat.li SET qty = qty + 100 " +
+      scoped.sql(s"ALTER TABLE $cat.li RENAME COLUMN l_linenumber TO line_no")
+      scoped.sql(s"UPDATE $cat.li SET qty = qty + 100 " +
         "WHERE l_orderkey % 10 = 3 AND line_no >= 4")
-      require(s.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0) == baseCount,
+      require(scoped.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0) == baseCount,
         "composite-key MoR UPDATE changed the row count")
-      val mergeIns = s.sql(
+      val mergeIns = scoped.sql(
         s"SELECT count(*) FROM $view WHERE l_orderkey % 100 = 1 AND l_linenumber = 1")
         .head.getLong(0)
-      s.sql(s"""MERGE INTO $cat.li t USING (
+      scoped.sql(s"""MERGE INTO $cat.li t USING (
           SELECT l_orderkey, l_linenumber AS line_no, qty * 3 AS qty,
                  'M' AS l_returnflag, p
           FROM $view WHERE l_orderkey % 10 = 7 AND l_linenumber <= 2
@@ -612,14 +629,14 @@ object GraftCatalogQueries {
         ) src ON t.l_orderkey = src.l_orderkey AND t.line_no = src.line_no
         WHEN MATCHED THEN UPDATE SET qty = src.qty, l_returnflag = src.l_returnflag
         WHEN NOT MATCHED THEN INSERT *""")
-      require(s.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0)
+      require(scoped.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0)
         == baseCount + mergeIns,
         "composite-key MERGE did not insert exactly the not-matched rows")
-      val delHits = s.sql(
+      val delHits = scoped.sql(
         s"SELECT count(*) FROM $view WHERE l_orderkey % 10 = 9 AND l_linenumber = 1")
         .head.getLong(0)
-      s.sql(s"DELETE FROM $cat.li WHERE l_orderkey % 10 = 9 AND line_no = 1")
-      require(s.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0)
+      scoped.sql(s"DELETE FROM $cat.li WHERE l_orderkey % 10 = 9 AND line_no = 1")
+      require(scoped.sql(s"SELECT count(*) FROM $cat.li").head.getLong(0)
         == baseCount + mergeIns - delHits,
         "composite-key DELETE did not remove exactly the matching rows")
       // ids: 1 = insert, 2 = the rename's schema-stamping empty commit,
@@ -639,7 +656,7 @@ object GraftCatalogQueries {
         val tombs = finalMan.filter(e => Snapshots.isDelete(e) && e.seq == snap)
         require(tombs.nonEmpty, s"DML commit $snap staged no tombstone")
         tombs.foreach { t =>
-          val cols = s.read.parquet(store.resolve(t.relPath).toString).columns.toSet
+          val cols = scoped.read.parquet(store.resolve(t.relPath).toString).columns.toSet
           require(cols == Set("l_orderkey", "l_linenumber"),
             s"tombstone ${t.relPath} carries $cols, expected the composite key")
         }
@@ -651,7 +668,7 @@ object GraftCatalogQueries {
         ("v1", s"SELECT l_orderkey, l_linenumber AS line_no, qty, l_returnflag, p " +
           s"FROM $cat.li VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT l_returnflag, count(*) AS n, sum(qty) AS sq, " +
+        scoped.sql(s"SELECT l_returnflag, count(*) AS n, sum(qty) AS sq, " +
           s"sum(l_orderkey * line_no) AS kc FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -660,7 +677,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("l_returnflag", StringType),
         StructField("n", LongType), StructField("sum_qty", LongType),
         StructField("key_chk", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "l_returnflag")
     } finally rm(root)
   }
@@ -715,20 +732,20 @@ object GraftCatalogQueries {
     * the reconstructed final state (inserts exceptAll deletes).
     */
   def streamCatalogCdf(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val sinkDir = JFiles.createTempDirectory("graft_sccdf_sink")
     val view = cat + "_orders"
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
         "o_orderstatus STRING, cents BIGINT) " +
         "TBLPROPERTIES ('morkey'='o_orderkey', 'statscol'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
       val k = col("o_orderkey")
       // commit 1 (founding): keys %4 in (0,1)
-      s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 < 2")
-      def startQ() = s.readStream.option("changefeed", "true")
+      scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 < 2")
+      def startQ() = scoped.readStream.option("changefeed", "true")
         .table(s"$cat.orders")
         .writeStream.format("parquet")
         .option("path", sinkDir.resolve("data").toString)
@@ -739,7 +756,7 @@ object GraftCatalogQueries {
         StructField("o_orderstatus", StringType),
         StructField("cents", LongType),
         StructField("_change_type", StringType)))
-      def sinkDf = s.read.schema(sinkSchema).parquet(sinkDir.resolve("data").toString)
+      def sinkDf = scoped.read.schema(sinkSchema).parquet(sinkDir.resolve("data").toString)
       val q1 = startQ()
       try {
         q1.processAllAvailable()
@@ -747,7 +764,7 @@ object GraftCatalogQueries {
           "founding window must carry no retractions")
         // commit 2 MID-STREAM: SQL UPDATE (MoR delta — a tombstone
         // window; the append-only stream would refuse this)
-        s.sql(s"UPDATE $cat.orders SET cents = cents + 7 WHERE o_orderkey % 8 = 1")
+        scoped.sql(s"UPDATE $cat.orders SET cents = cents + 7 WHERE o_orderkey % 8 = 1")
         q1.processAllAvailable()
       } finally q1.stop()
       // checkpointed RESTART mid-feed: the resumed query picks up at the
@@ -756,10 +773,10 @@ object GraftCatalogQueries {
       try {
         q2.processAllAvailable()
         // commit 3: SQL DELETE (tombstone-only commit)
-        s.sql(s"DELETE FROM $cat.orders WHERE o_orderkey % 8 = 0")
+        scoped.sql(s"DELETE FROM $cat.orders WHERE o_orderkey % 8 = 0")
         q2.processAllAvailable()
         // commit 4: appending INSERT
-        s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 = 2")
+        scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 = 2")
         q2.processAllAvailable()
       } finally q2.stop()
       // materialized ONCE each: the hash-match runs exceptAll in both
@@ -767,7 +784,7 @@ object GraftCatalogQueries {
       // twice more — without the checkpoint every consumer re-ran the
       // four readChangeFeed window joins / re-scanned the sink (§5)
       val feed = sinkDf.localCheckpoint()
-      val orders = s.table(view)
+      val orders = scoped.table(view)
       val expectedDeletes = orders.filter(k % 8 === 1).count() +
         orders.filter(k % 8 === 0).count()
       require(feed.filter(col("_change_type") === "delete").count() == expectedDeletes,
@@ -777,7 +794,7 @@ object GraftCatalogQueries {
       // equal the streamed frame row-for-row
       val store = root.resolve("orders")
       val batchUnion = (1 to 4).map(n =>
-        Snapshots.readChangeFeed(s, store, n - 1, n)
+        Snapshots.readChangeFeed(scoped, store, n - 1, n)
           .select("o_orderkey", "o_orderstatus", "cents", "_change_type"))
         .reduce(_.unionByName(_))
         .localCheckpoint()
@@ -791,7 +808,7 @@ object GraftCatalogQueries {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
         .orderBy("o_orderstatus")
       val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("o_orderstatus")
     } finally { rm(sinkDir); rm(root) }
   }
@@ -821,18 +838,18 @@ object GraftCatalogQueries {
     * state.
     */
   def catalogSync(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_src"
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
         "o_orderstatus STRING, cents BIGINT) TBLPROPERTIES ('morkey'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view")
+      scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view")
       val store = root.resolve("orders")
       val base = Snapshots.manifest(store, 1)
-      s.sql(
+      scoped.sql(
         s"""MERGE INTO $cat.orders t
            |USING (
            |  SELECT o_orderkey AS k, cents FROM $view WHERE o_orderkey % 3 != 0
@@ -851,18 +868,18 @@ object GraftCatalogQueries {
       base.foreach(b => require(after.exists(e =>
         e.relPath == b.relPath && e.md5 == b.md5 && e.seq == b.seq),
         s"MoR sync rewrote base file ${b.relPath}"))
-      val srcCount = s.sql(
+      val srcCount = scoped.sql(
         s"""SELECT count(*) FROM (
            |  SELECT o_orderkey FROM $view WHERE o_orderkey % 3 != 0
            |  UNION ALL SELECT -o_orderkey - 1 FROM $view WHERE o_orderkey % 97 = 0)
            |""".stripMargin).head.getLong(0)
-      require(s.sql(s"SELECT count(*) FROM $cat.orders").head.getLong(0) == srcCount,
+      require(scoped.sql(s"SELECT count(*) FROM $cat.orders").head.getLong(0) == srcCount,
         "mirror sync did not converge the target to the source")
       val out = Seq(
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
           s"sum(o_orderkey) AS sk FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -871,7 +888,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType),
         StructField("sum_keys", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -903,25 +920,23 @@ object GraftCatalogQueries {
     * restates post-overwrite and pre-overwrite states.
     */
   def catalogOverwrite(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_src"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, bucket BIGINT, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, bucket BIGINT, " +
         "o_orderstatus STRING, cents BIGINT) PARTITIONED BY (bucket)")
-      s.sql(s"INSERT INTO $cat.orders SELECT o_orderkey, o_orderkey % 8, " +
+      scoped.sql(s"INSERT INTO $cat.orders SELECT o_orderkey, o_orderkey % 8, " +
         s"o_orderstatus, cents FROM $view")
       val store = root.resolve("orders")
       val base = Snapshots.manifest(store, 1)
       require(base.forall(e => Snapshots.partValueOf(e.relPath).isDefined),
         "partitioned INSERT INTO must land value-pure files")
-      val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try s.sql(s"INSERT OVERWRITE $cat.orders SELECT o_orderkey, o_orderkey % 8, " +
+      scoped.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      scoped.sql(s"INSERT OVERWRITE $cat.orders SELECT o_orderkey, o_orderkey % 8, " +
         s"'R', cents * 3 FROM $view WHERE o_orderkey % 8 IN (2, 5)")
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
       require(Snapshots.currentId(store).contains(2),
         s"dynamic overwrite must land ONE commit; got ${Snapshots.currentId(store)}")
       val after = Snapshots.manifest(store, 2)
@@ -940,7 +955,7 @@ object GraftCatalogQueries {
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
           s"sum(o_orderkey) AS sk FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -949,7 +964,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType),
         StructField("sum_keys", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -982,39 +997,39 @@ object GraftCatalogQueries {
     * oracle restates both shapes.
     */
   def catalogRename(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_src"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
-      s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view")
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view")
       val store = root.resolve("orders")
       val base = Snapshots.manifest(store, 1)
-      s.sql(s"ALTER TABLE $cat.orders RENAME COLUMN cents TO total_cents")
-      s.sql(s"ALTER TABLE $cat.orders DROP COLUMN o_orderstatus")
-      s.sql(s"ALTER TABLE $cat.orders ADD COLUMN o_orderstatus STRING")
+      scoped.sql(s"ALTER TABLE $cat.orders RENAME COLUMN cents TO total_cents")
+      scoped.sql(s"ALTER TABLE $cat.orders DROP COLUMN o_orderstatus")
+      scoped.sql(s"ALTER TABLE $cat.orders ADD COLUMN o_orderstatus STRING")
       val afterDdl = Snapshots.manifest(store, Snapshots.currentId(store).get)
       base.foreach(b => require(afterDdl.exists(e =>
         e.relPath == b.relPath && e.md5 == b.md5 && e.seq == b.seq),
         s"ALTER rewrote data file ${b.relPath} — evolution must be metadata-only"))
       // new rows land under the FRESH physical for the re-added column
-      s.sql(s"INSERT INTO $cat.orders SELECT -o_orderkey, cents * 2, 'N' " +
+      scoped.sql(s"INSERT INTO $cat.orders SELECT -o_orderkey, cents * 2, 'N' " +
         s"FROM $view WHERE o_orderkey % 10 = 0")
-      val nOrig = Tables.orders(s, d).count()
-      require(s.sql(s"SELECT count(*) FROM $cat.orders WHERE o_orderstatus IS NULL")
+      val nOrig = Tables.orders(scoped, d).count()
+      require(scoped.sql(s"SELECT count(*) FROM $cat.orders WHERE o_orderstatus IS NULL")
         .head.getLong(0) == nOrig,
         "dropped column's bytes resurfaced under the re-added name")
-      val v1cols = s.sql(s"SELECT * FROM $cat.orders VERSION AS OF 1").columns.toSeq
+      val v1cols = scoped.sql(s"SELECT * FROM $cat.orders VERSION AS OF 1").columns.toSeq
       require(v1cols == Seq("o_orderkey", "o_orderstatus", "cents"),
         s"time travel lost the pre-evolution shape: $v1cols")
       val out =
-        s.sql(s"SELECT coalesce(o_orderstatus, 'dropped') AS st, count(*) AS n, " +
+        scoped.sql(s"SELECT coalesce(o_orderstatus, 'dropped') AS st, count(*) AS n, " +
           s"sum(total_cents) AS sc, sum(o_orderkey) AS sk FROM $cat.orders GROUP BY 1")
           .collect().map(r => Row("current", r.getString(0), r.getLong(1),
             r.getLong(2), r.getLong(3))) ++
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
           s"sum(o_orderkey) AS sk FROM $cat.orders VERSION AS OF 1 GROUP BY 1")
           .collect().map(r => Row("v1", r.getString(0), r.getLong(1),
             r.getLong(2), r.getLong(3)))
@@ -1022,7 +1037,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType),
         StructField("sum_keys", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out.toSeq, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -1056,39 +1071,39 @@ object GraftCatalogQueries {
     * raw orders.
     */
   def catalogWiden(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (k INT, o_orderstatus STRING, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.orders (k INT, o_orderstatus STRING, cents BIGINT) " +
         "TBLPROPERTIES ('statscol'='cents')")
       // the narrow key must stay int-safe at ANY scale factor: upscaled
       // orderkeys carry replica shifts of n*10^8 (up to ~10^10 at sf10),
       // so fold them below 2^31 first — 10^8 is even, so the parity
       // split below is unchanged
-      val src = Tables.orders(s, d).select(
+      val src = Tables.orders(scoped, d).select(
         (col("o_orderkey") % 100000000L).cast("int").as("k"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       src.filter(col("k") % 2 === 0).writeTo(s"$cat.orders").append()
-      s.sql(s"ALTER TABLE $cat.orders ALTER COLUMN k TYPE BIGINT")
-      s.sql(s"INSERT INTO $cat.orders " +
+      scoped.sql(s"ALTER TABLE $cat.orders ALTER COLUMN k TYPE BIGINT")
+      scoped.sql(s"INSERT INTO $cat.orders " +
         s"SELECT k + ${10L * 1000 * 1000 * 1000}, o_orderstatus, cents FROM " +
         s"(SELECT CAST(o_orderkey % 100000000 AS BIGINT) k, o_orderstatus, " +
         "CAST(round(o_totalprice * 100) AS BIGINT) cents " +
         s"FROM parquet.`$d/orders.parquet` WHERE o_orderkey % 2 = 1)")
       // shape proofs: current is bigint, the pre-widen snapshot is int,
       // and narrowing back refuses
-      require(s.table(s"$cat.orders").schema("k").dataType.simpleString == "bigint",
+      require(scoped.table(s"$cat.orders").schema("k").dataType.simpleString == "bigint",
         "ALTER COLUMN TYPE did not widen the declared schema")
-      require(s.sql(s"SELECT * FROM $cat.orders VERSION AS OF 1")
+      require(scoped.sql(s"SELECT * FROM $cat.orders VERSION AS OF 1")
         .schema("k").dataType.simpleString == "int",
         "time travel must resolve the pre-widen snapshot's own narrow shape")
       val narrowed = scala.util.Try(
-        s.sql(s"ALTER TABLE $cat.orders ALTER COLUMN k TYPE INT"))
+        scoped.sql(s"ALTER TABLE $cat.orders ALTER COLUMN k TYPE INT"))
       require(narrowed.isFailure, "a narrowing ALTER must refuse")
       val out = Seq(
         ("current", s"SELECT * FROM $cat.orders"),
         ("v1", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
           s"sum(k) AS sk FROM ($sql) GROUP BY 1").collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       }
@@ -1096,7 +1111,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType),
         StructField("sum_keys", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -1129,18 +1144,18 @@ object GraftCatalogQueries {
     * states from the raw lineitem.
     */
   def catalogPosDelete(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.items (qty BIGINT, flag STRING, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.items (qty BIGINT, flag STRING, cents BIGINT) " +
         "TBLPROPERTIES ('mordelete'='position', 'statscol'='qty')")
-      Tables.lineitem(s, d).select(
+      Tables.lineitem(scoped, d).select(
         col("l_quantity").cast("long").as("qty"), col("l_returnflag").as("flag"),
         round(col("l_extendedprice") * 100).cast("long").as("cents"))
         .repartition(8)
         .writeTo(s"$cat.items").append()
       val store = root.resolve("items")
       val base = Snapshots.manifest(store, 1)
-      s.sql(s"DELETE FROM $cat.items WHERE qty BETWEEN 20 AND 29 AND flag = 'R'")
+      scoped.sql(s"DELETE FROM $cat.items WHERE qty BETWEEN 20 AND 29 AND flag = 'R'")
       require(Snapshots.currentId(store).contains(2),
         s"expected the position DELETE to land snapshot 2, got " +
           Snapshots.currentId(store))
@@ -1152,12 +1167,12 @@ object GraftCatalogQueries {
       require(freshE.nonEmpty && freshE.forall(Snapshots.isPosDelete),
         s"expected a position-tombstone-only delta, got $freshE")
       def states(tag: String, sql: String): Seq[Row] =
-        s.sql(s"SELECT flag, count(*) AS n, sum(qty) AS sq, sum(cents) AS sc " +
+        scoped.sql(s"SELECT flag, count(*) AS n, sum(qty) AS sq, sum(cents) AS sc " +
           s"FROM ($sql) GROUP BY 1").collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       val out0 = states("current", s"SELECT * FROM $cat.items") ++
         states("v1", s"SELECT * FROM $cat.items VERSION AS OF 1")
-      s.sql(s"CALL $cat.system.compact('items', 8)")
+      scoped.sql(s"CALL $cat.system.compact('items', 8)")
       require(!Snapshots.manifest(store, Snapshots.currentId(store).get)
         .exists(Snapshots.isDelete), "compact left position tombstones")
       val out = out0 ++ states("compacted", s"SELECT * FROM $cat.items")
@@ -1165,7 +1180,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("flag", StringType),
         StructField("n", LongType), StructField("sum_qty", LongType),
         StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "flag")
     } finally rm(root)
   }
@@ -1191,20 +1206,21 @@ object GraftCatalogQueries {
     * V1 bridge), tombstone-range pruning (the clear leg scans pure),
     * the broadcast anti-join on the hot leg, pushed filters on every
     * leg, and the per-leg pre-aggregates PushAggThroughUnion fuses
-    * with the scans.
+    * with the scans. Like [[catalogPrunePlan]], the frame is on the
+    * catalog's cloned session and the temp warehouse is not removed.
     */
   def catalogMorReadPlan(s: SparkSession, d: String): DataFrame = {
-    val (cat, _) = freshCatalog(s)
-    s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
+    val (scoped, cat, _) = freshCatalog(s)
+    scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT NOT NULL, " +
       "o_orderstatus STRING, cents BIGINT) " +
       "TBLPROPERTIES ('morkey'='o_orderkey', 'statscol'='o_orderkey')")
-    Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+    Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
       round(col("o_totalprice") * 100).cast("long").as("cents"))
       .repartitionByRange(8, col("o_orderkey"))
       .writeTo(s"$cat.orders").append()
-    s.sql(s"UPDATE $cat.orders SET cents = cents * 2 " +
+    scoped.sql(s"UPDATE $cat.orders SET cents = cents * 2 " +
       "WHERE o_orderkey BETWEEN 800 AND 1599")
-    s.sql(s"SELECT count(*) AS n, sum(cents) AS sc FROM $cat.orders " +
+    scoped.sql(s"SELECT count(*) AS n, sum(cents) AS sc FROM $cat.orders " +
       "WHERE o_orderkey >= 400")
   }
 
@@ -1219,27 +1235,27 @@ object GraftCatalogQueries {
     * dropped increment row fails the hash.
     */
   def streamCatalogSource(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
       (0 until 3).foreach { k =>
-        s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 = $k")
+        scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 = $k")
       }
       // parquet sink, NOT the memory sink: a memory sink materializes
       // every streamed row as driver-heap objects — at sf10 (15M rows)
       // that is a guaranteed driver OOM; the file sink keeps the stream
       // exactly-once AND scale-honest
       val sinkDir = JFiles.createTempDirectory(s"${cat}_sink")
-      val q = s.readStream.table(s"$cat.orders")
+      val q = scoped.readStream.table(s"$cat.orders")
         .writeStream.format("parquet")
         .option("path", sinkDir.resolve("data").toString)
         .option("checkpointLocation", sinkDir.resolve("ckpt").toString)
         .outputMode("append").start()
-      def sinkDf = s.read.schema(
+      def sinkDf = scoped.read.schema(
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("o_orderkey",
             org.apache.spark.sql.types.LongType),
@@ -1251,11 +1267,11 @@ object GraftCatalogQueries {
       try {
         q.processAllAvailable()
         val firstDrain = sinkDf.count()
-        val expectFirst = s.sql(s"SELECT count(*) FROM $view WHERE o_orderkey % 4 < 3")
+        val expectFirst = scoped.sql(s"SELECT count(*) FROM $view WHERE o_orderkey % 4 < 3")
           .head.getLong(0)
         require(firstDrain == expectFirst,
           s"first drain saw $firstDrain rows, expected the 3 releases' $expectFirst")
-        s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 = 3")
+        scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 4 = 3")
         q.processAllAvailable()
       } finally q.stop()
       val out = sinkDf
@@ -1265,7 +1281,7 @@ object GraftCatalogQueries {
       // materialize BEFORE rm() deletes the sink dir the plan reads
       val rows = out.collect().toSeq
       rm(sinkDir)
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("o_orderstatus")
     } finally { rm(root); () }
   }
@@ -1293,20 +1309,20 @@ object GraftCatalogQueries {
     * scheduled runs. The oracle gates the final mirrored state.
     */
   def streamCatalogPaced(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val sinkDir = JFiles.createTempDirectory("graft_paced_sink")
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
       // the backlog: six commits BEFORE the stream exists
       (0 until 6).foreach { k =>
-        s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 7 = $k")
+        scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 7 = $k")
       }
       def runAvailableNow(): Seq[(Int, Int)] = {
-        val q = s.readStream
+        val q = scoped.readStream
           .option("maxsnapshotspertrigger", 2)
           .table(s"$cat.orders")
           .writeStream.format("parquet")
@@ -1339,7 +1355,7 @@ object GraftCatalogQueries {
           },
         s"windows must tile (0,6] with no gap or overlap: $windows1")
       // a commit landing AFTER the run terminated waits for the NEXT one
-      s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 7 = 6")
+      scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 7 = 6")
       val windows2 = runAvailableNow()
       require(windows2 == Seq((6, 7)),
         s"second AvailableNow run must drain exactly the one pending window, saw $windows2")
@@ -1347,13 +1363,13 @@ object GraftCatalogQueries {
         StructField("o_orderkey", LongType),
         StructField("o_orderstatus", StringType),
         StructField("cents", LongType)))
-      val out = s.read.schema(sinkSchema).parquet(sinkDir.resolve("data").toString)
+      val out = scoped.read.schema(sinkSchema).parquet(sinkDir.resolve("data").toString)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
         .orderBy("o_orderstatus")
       // materialize BEFORE rm() deletes the sink dir the plan reads
       val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("o_orderstatus")
     } finally { rm(sinkDir); rm(root) }
   }
@@ -1383,21 +1399,21 @@ object GraftCatalogQueries {
     * destination then serves the oracled per-status aggregate.
     */
   def streamCatalogSink(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val ckpt = JFiles.createTempDirectory("graft_scsink_ckpt")
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.src (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
-      s.sql(s"CREATE TABLE $cat.dst (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.src (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      scoped.sql(s"CREATE TABLE $cat.dst (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
         "PARTITIONED BY (o_orderstatus)")
       (0 until 3).foreach { k =>
-        s.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 4 = $k")
+        scoped.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 4 = $k")
       }
       def run(): Unit = {
-        val q = s.readStream
+        val q = scoped.readStream
           .option("maxsnapshotspertrigger", 1)
           .table(s"$cat.src")
           .writeStream
@@ -1417,16 +1433,16 @@ object GraftCatalogQueries {
           Snapshots.partValueOf(e.relPath).isDefined),
         "streamed destination files must be value-pure (_pv= layout)")
       // late source commit + checkpointed re-run: exactly the increment
-      s.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 4 = 3")
+      scoped.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 4 = 3")
       run()
       require(Snapshots.currentId(store).contains(4),
         "the re-run must commit exactly one incremental epoch")
-      val out = s.table(s"$cat.dst")
+      val out = scoped.table(s"$cat.dst")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
         .orderBy("o_orderstatus")
       val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("o_orderstatus")
     } finally { rm(ckpt); rm(root) }
   }
@@ -1454,41 +1470,40 @@ object GraftCatalogQueries {
     * hash.
     */
   def streamCatalogMatview(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val ckpt = JFiles.createTempDirectory("graft_scmv_ckpt")
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.src (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
-      s.sql(s"CREATE TABLE $cat.mv (o_orderstatus STRING NOT NULL, n BIGINT, " +
+      scoped.sql(s"CREATE TABLE $cat.src (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      scoped.sql(s"CREATE TABLE $cat.mv (o_orderstatus STRING NOT NULL, n BIGINT, " +
         "sum_cents BIGINT) TBLPROPERTIES ('morkey'='o_orderstatus')")
-      s.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 2 = 0")
+      scoped.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 2 = 0")
+      // stateful (update-mode agg): born with the bounded state-
+      // partition count, like every StreamRun stream (provider count
+      // is per-partition-per-batch; the state here is a handful of
+      // status keys)
+      val stream = graft.streaming.StreamRun.stateSession(scoped)
       def run(): Unit = {
-        // stateful (update-mode agg): born with the bounded state-
-        // partition count, like every StreamRun stream (provider count
-        // is per-partition-per-batch; the state here is a handful of
-        // status keys)
-        val q = graft.streaming.StreamRun.withStateParts(s) {
-          s.readStream.table(s"$cat.src")
-            .groupBy(col("o_orderstatus"))
-            .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-            .writeStream
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("update")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .toTable(s"$cat.mv")
-        }
+        val q = stream.readStream.table(s"$cat.src")
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
+          .writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("update")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .toTable(s"$cat.mv")
         require(q.awaitTermination(300000L),
           "AvailableNow matview run did not self-terminate inside 300s")
       }
       run()
       // second upstream commit: every status's aggregate shifts — the
       // epoch must upsert (retract old images), never append beside them
-      s.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 2 = 1")
+      scoped.sql(s"INSERT INTO $cat.src SELECT * FROM $view WHERE o_orderkey % 2 = 1")
       run()
-      val mv = s.table(s"$cat.mv")
+      val mv = scoped.table(s"$cat.mv")
       val maxPerKey = mv.groupBy("o_orderstatus").count()
         .agg(max(col("count"))).head.getLong(0)
       require(maxPerKey == 1L,
@@ -1500,7 +1515,7 @@ object GraftCatalogQueries {
         "expected equality tombstones (merge-on-read upserts), found none")
       val out = mv.orderBy("o_orderstatus")
       val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("o_orderstatus")
     } finally { rm(ckpt); rm(root) }
   }
@@ -1530,20 +1545,20 @@ object GraftCatalogQueries {
     * rewrite fails the hash.
     */
   def catalogCompactSmall(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"),
+      Tables.orders(scoped, d).select(col("o_orderkey"),
         (col("o_orderkey") % 4).as("grp"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.t (o_orderkey BIGINT, grp BIGINT, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.t (o_orderkey BIGINT, grp BIGINT, cents BIGINT) " +
         "PARTITIONED BY (grp) TBLPROPERTIES ('statscol'='o_orderkey')")
       // five appends across ALL partitions, a sixth touching ONLY grp=0
       (0 until 5).foreach { k =>
-        s.sql(s"INSERT INTO $cat.t SELECT * FROM $view WHERE o_orderkey % 7 = $k")
+        scoped.sql(s"INSERT INTO $cat.t SELECT * FROM $view WHERE o_orderkey % 7 = $k")
       }
-      s.sql(s"INSERT INTO $cat.t SELECT * FROM $view " +
+      scoped.sql(s"INSERT INTO $cat.t SELECT * FROM $view " +
         "WHERE o_orderkey % 7 = 5 AND o_orderkey % 4 = 0")
       val store = root.resolve("t")
       val before = Snapshots.manifest(store, Snapshots.currentId(store).get)
@@ -1551,7 +1566,7 @@ object GraftCatalogQueries {
       val cold = before.filterNot(e => Snapshots.partValueOf(e.relPath).contains("0"))
       require(hot.size == 6 && cold.size == 15,
         s"fragmentation setup off: ${hot.size} hot / ${cold.size} cold files")
-      val res = s.sql(s"CALL $cat.system.compact_partitions(tbl => 't', " +
+      val res = scoped.sql(s"CALL $cat.system.compact_partitions(tbl => 't', " +
         "min_files => 5)").head
       require(res.getInt(0) == 1 && res.getInt(1) == 21 && res.getInt(2) == 16,
         s"expected (1 partition, 21 -> 16 files), got $res")
@@ -1568,24 +1583,24 @@ object GraftCatalogQueries {
         "selective compaction produced a non-value-pure file")
       // idempotence: nothing left over the threshold — a second call
       // must rewrite nothing and commit nothing
-      val res2 = s.sql(s"CALL $cat.system.compact_partitions(tbl => 't', " +
+      val res2 = scoped.sql(s"CALL $cat.system.compact_partitions(tbl => 't', " +
         "min_files => 5)").head
       require(res2.getInt(0) == 0 && res2.getInt(3) == res.getInt(3),
         s"second pass was not a no-op: $res2")
       // the FULL compact on an identity-partitioned table keeps the
       // layout (the pre-fix generic rewrite stripped _pv= silently)
-      s.sql(s"CALL $cat.system.compact(tbl => 't', target_files => 4)")
+      scoped.sql(s"CALL $cat.system.compact(tbl => 't', target_files => 4)")
       val folded = Snapshots.manifest(store, Snapshots.currentId(store).get)
       require(folded.size == 4 &&
           folded.forall(e => Snapshots.partValueOf(e.relPath).isDefined) &&
           folded.flatMap(e => Snapshots.partValueOf(e.relPath)).toSet ==
             Set("0", "1", "2", "3"),
         s"full compact lost the partition layout: ${folded.map(_.relPath).take(4)}")
-      val out = s.table(s"$cat.t").groupBy("grp")
+      val out = scoped.table(s"$cat.t").groupBy("grp")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
         .orderBy("grp")
       val rows = out.collect().toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(rows, 1), out.schema)
         .orderBy("grp")
     } finally rm(root)
   }
@@ -1617,32 +1632,19 @@ object GraftCatalogQueries {
     * (the oracle restates them).
     */
   def catalogRespec(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
-    val prevSpj = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      s.sql(s"CREATE TABLE $cat.fact (k BIGINT NOT NULL, o_orderstatus STRING, " +
+      scoped.sql(s"CREATE TABLE $cat.fact (k BIGINT NOT NULL, o_orderstatus STRING, " +
         "cents BIGINT) PARTITIONED BY (bucket(4, k)) TBLPROPERTIES ('statscol'='k')")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey").as("k"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"INSERT INTO $cat.fact SELECT * FROM $view WHERE k % 2 = 0")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-        val kids = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-          case other => other.children
-        }
-        (p match {
-          case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
-          case _ => 0
-        }) + kids.map(shuffles).sum
-      }
+      scoped.sql(s"INSERT INTO $cat.fact SELECT * FROM $view WHERE k % 2 = 0")
+      scoped.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      scoped.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       def stage(tag: String): (Array[Row], Int) = {
-        val t = s.table(s"$cat.fact")
+        val t = scoped.table(s"$cat.fact")
         // the CLAIMS probe groups by the bucket key so the co-located
         // join AND its aggregate can reuse the key-grouped distribution
         // (zero exchanges when the claim holds); the oracled output is
@@ -1651,7 +1653,7 @@ object GraftCatalogQueries {
           .groupBy("k").agg(count(lit(1)).as("c"))
         val nKeys = probe.collect().length
         require(nKeys > 0, "claims probe returned no rows")
-        val out = s.sql(s"SELECT o_orderstatus, count(*) AS n, " +
+        val out = scoped.sql(s"SELECT o_orderstatus, count(*) AS n, " +
           s"sum(cents) AS sum_cents FROM $cat.fact GROUP BY 1")
         val rows = out.collect().map(r =>
           Row(tag, r.getString(0), r.getLong(1), r.getLong(2)))
@@ -1662,7 +1664,7 @@ object GraftCatalogQueries {
       // carried to the oracle as literal rows — plus structural requires
       // at each stage below
       def specAudit(tag: String): Row = {
-        val rs = s.sql(
+        val rs = scoped.sql(
           s"SELECT spec_id_min, spec_id_max FROM $cat.fact.partitions").collect()
         require(rs.nonEmpty, s"$tag: partitions table is empty")
         Row("zz_specs", tag, rs.map(_.getLong(0)).min, rs.map(_.getLong(1)).max)
@@ -1673,8 +1675,8 @@ object GraftCatalogQueries {
       val store = root.resolve("fact")
       val base = Snapshots.manifest(store, 1)
       // ---- the spec change: METADATA ONLY ----
-      s.sql(s"ALTER TABLE $cat.fact SET TBLPROPERTIES ('bucketn'='8')")
-      s.sql(s"INSERT INTO $cat.fact SELECT * FROM $view WHERE k % 2 = 1")
+      scoped.sql(s"ALTER TABLE $cat.fact SET TBLPROPERTIES ('bucketn'='8')")
+      scoped.sql(s"INSERT INTO $cat.fact SELECT * FROM $view WHERE k % 2 = 1")
       val cur = Snapshots.currentId(store).get
       val mixed = Snapshots.manifest(store, cur)
       base.foreach(b => require(mixed.exists(e =>
@@ -1689,12 +1691,12 @@ object GraftCatalogQueries {
           "(old _pv= ids mod 4 would misgroup under bucket(8))")
       // a bucket id shared by both specs (pv 0..3) must surface as a
       // genuinely MIXED partition: oldest file spec 0, newest spec 1
-      require(s.sql(s"SELECT count(*) FROM $cat.fact.partitions " +
+      require(scoped.sql(s"SELECT count(*) FROM $cat.fact.partitions " +
           "WHERE spec_id_min = 0 AND spec_id_max = 1").head.getLong(0) > 0,
         "mid-migration exposes no mixed-spec partition")
       val auditMid = specAudit("mid") // old files spec 0, new files spec 1
       // ---- migration: the bucket-aware compact rewrites to the new spec ----
-      s.sql(s"CALL $cat.system.compact(tbl => 'fact', target_files => 8)")
+      scoped.sql(s"CALL $cat.system.compact(tbl => 'fact', target_files => 8)")
       val after = Snapshots.manifest(store, Snapshots.currentId(store).get)
       require(after.forall(_.seq > specFrom),
         "compact left pre-evolution files in the current snapshot")
@@ -1707,34 +1709,27 @@ object GraftCatalogQueries {
       // ---- the SECOND evolution (bucket 8 -> 16): per-partition spec
       // ids pinned across a twice-evolved table ----
       val auditPost = specAudit("post") // all files re-staged under spec 1
-      s.sql(s"ALTER TABLE $cat.fact SET TBLPROPERTIES ('bucketn'='16')")
+      scoped.sql(s"ALTER TABLE $cat.fact SET TBLPROPERTIES ('bucketn'='16')")
       val hist = GraftCatalog.effectiveMarker(store, None)._2("spechistory")
       require(hist.split(',').length == 2,
         s"two evolutions should stamp two spechistory entries, got '$hist'")
       val auditRespec2 = specAudit("respec2") // files unchanged: still spec 1
-      require(s.sql(s"SELECT count(*) FROM $cat.fact.partitions " +
+      require(scoped.sql(s"SELECT count(*) FROM $cat.fact.partitions " +
           "WHERE under_current_spec").head.getLong(0) == 0,
         "after the second ALTER no partition should be under the current spec")
-      s.sql(s"CALL $cat.system.compact(tbl => 'fact', target_files => 8)")
+      scoped.sql(s"CALL $cat.system.compact(tbl => 'fact', target_files => 8)")
       val auditPost2 = specAudit("post2") // migrated again: all spec 2
-      require(s.sql(s"SELECT count(*) FROM $cat.fact.partitions " +
+      require(scoped.sql(s"SELECT count(*) FROM $cat.fact.partitions " +
           "WHERE NOT under_current_spec").head.getLong(0) == 0,
         "post-compact every partition should be under the current spec")
       val schema = StructType(Seq(StructField("stage", StringType),
         StructField("o_orderstatus", StringType), StructField("n", LongType),
         StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(
+      scoped.createDataFrame(scoped.sparkContext.parallelize(
         (preRows ++ midRows ++ postRows ++
           Seq(auditMid, auditPost, auditRespec2, auditPost2)).toSeq, 1), schema)
         .orderBy("stage", "o_orderstatus")
-    } finally {
-      prevSpj match {
-        case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None    => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** The three stages restated: pre = even keys, mid/post = all keys —
@@ -1783,9 +1778,9 @@ object GraftCatalogQueries {
     * I/O shape, never answers.
     */
   def catalogClusteredWrite(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.fact (p BIGINT, cents BIGINT) PARTITIONED BY (p)")
+      scoped.sql(s"CREATE TABLE $cat.fact (p BIGINT, cents BIGINT) PARTITIONED BY (p)")
       val captured = new java.util.concurrent.CopyOnWriteArrayList[
         org.apache.spark.sql.execution.QueryExecution]()
       val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -1795,9 +1790,9 @@ object GraftCatalogQueries {
         override def onFailure(f: String,
             qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
       }
-      s.listenerManager.register(listener)
+      scoped.listenerManager.register(listener)
       val insertPlan = try {
-        Tables.orders(s, d).select((col("o_orderkey") % 8).as("p"),
+        Tables.orders(scoped, d).select((col("o_orderkey") % 8).as("p"),
           round(col("o_totalprice") * 100).cast("long").as("cents"))
           .repartition(32) // the adversarial input shape: 32 tasks x 8 values
           .writeTo(s"$cat.fact").append()
@@ -1807,7 +1802,7 @@ object GraftCatalogQueries {
         while (find.isEmpty && waited < 20000) { Thread.sleep(100); waited += 100 }
         find.getOrElse(throw new IllegalStateException(
           "INSERT's query execution never reached the listener"))
-      } finally s.listenerManager.unregister(listener)
+      } finally scoped.listenerManager.unregister(listener)
       val planStr = insertPlan.executedPlan.toString
       require(planStr.contains("Exchange") && planStr.contains("Sort "),
         s"write plan lacks the connector-negotiated clustering:\n$planStr")
@@ -1817,12 +1812,12 @@ object GraftCatalogQueries {
           s"got ${entries.size}")
       require(entries.forall(e => Snapshots.partValueOf(e.relPath).isDefined),
         "clustered write landed a layout-less file")
-      val out = s.sql(s"SELECT p, count(*) AS n, sum(cents) AS sum_cents " +
+      val out = scoped.sql(s"SELECT p, count(*) AS n, sum(cents) AS sum_cents " +
         s"FROM $cat.fact GROUP BY 1").collect()
         .map(r => Row(r.getLong(0), r.getLong(1), r.getLong(2)))
       val schema = StructType(Seq(StructField("p", LongType),
         StructField("n", LongType), StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out.toSeq, 1), schema)
         .orderBy("p")
     } finally rm(root)
   }
@@ -1845,11 +1840,11 @@ object GraftCatalogQueries {
     * counts from the source table.
     */
   def catalogPartitions(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.fact (shard BIGINT, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.fact (shard BIGINT, cents BIGINT) " +
         "PARTITIONED BY (shard) TBLPROPERTIES ('statscol'='cents')")
-      Tables.orders(s, d).select((col("o_orderkey") % 8).as("shard"),
+      Tables.orders(scoped, d).select((col("o_orderkey") % 8).as("shard"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.fact").append()
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -1858,17 +1853,17 @@ object GraftCatalogQueries {
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       }
-      s.sparkContext.addSparkListener(listener)
+      scoped.sparkContext.addSparkListener(listener)
       val metaRows = try {
         // no ORDER BY inside the measured statement: a Sort above the
         // local scan would plan a (driver-trivial but real) job; the
         // bare collect stays on LocalTableScanExec.executeCollect
-        val r = s.sql(s"SELECT partition, n_files, n_rows, bytes " +
+        val r = scoped.sql(s"SELECT partition, n_files, n_rows, bytes " +
           s"FROM $cat.fact.partitions").collect().sortBy(_.getString(0))
         // the listener bus is async — give submitted jobs time to surface
-        org.apache.spark.sql.GraftBridge.drainListenerBus(s.sparkContext)
+        GraftBridge.drainListenerBus(scoped.sparkContext)
         r
-      } finally s.sparkContext.removeSparkListener(listener)
+      } finally scoped.sparkContext.removeSparkListener(listener)
       require(jobs.get() == 0,
         s"reading the partitions metadata table launched ${jobs.get()} Spark " +
           "job(s) — it must be a driver-local manifest read")
@@ -1877,12 +1872,12 @@ object GraftCatalogQueries {
         require(r.getLong(1) >= 1 && r.getLong(3) > 0,
           s"partition ${r.getString(0)} lists no files/bytes")
       }
-      val total = Tables.orders(s, d).count()
+      val total = Tables.orders(scoped, d).count()
       require(metaRows.map(_.getLong(2)).sum == total,
         "partition row counts do not conserve the table total")
       val schema = StructType(Seq(StructField("partition", StringType),
         StructField("n_rows", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(
+      scoped.createDataFrame(scoped.sparkContext.parallelize(
         metaRows.map(r => Row(r.getString(0), r.getLong(2))).toSeq, 1), schema)
         .orderBy("partition")
     } finally rm(root)
@@ -1904,20 +1899,20 @@ object GraftCatalogQueries {
     * SQL alone, at every version.
     */
   def catalogMeta(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
-      s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 2 = 0")
-      s.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 2 = 1")
-      s.sql(s"DELETE FROM $cat.orders WHERE o_orderkey % 10 = 7")
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
+      scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 2 = 0")
+      scoped.sql(s"INSERT INTO $cat.orders SELECT * FROM $view WHERE o_orderkey % 2 = 1")
+      scoped.sql(s"DELETE FROM $cat.orders WHERE o_orderkey % 10 = 7")
       Snapshots.createTag(root.resolve("orders"), "pre_delete", 2)
       // n_files must be monotone over the append, and the meta relation
       // must agree with the manifest — structural gates before the data
-      val meta = s.sql(s"SELECT snapshot_id, n_data_files, n_fresh, is_current " +
+      val meta = scoped.sql(s"SELECT snapshot_id, n_data_files, n_fresh, is_current " +
         s"FROM $cat.orders.snapshots ORDER BY snapshot_id").collect()
       require(meta.length == 3 && meta(2).getLong(3) == 1L,
         s"expected 3 snapshots with #3 current: ${meta.mkString(";")}")
@@ -1925,19 +1920,19 @@ object GraftCatalogQueries {
         "append did not grow the data file count")
       // VERSION AS OF takes a literal: iterate the ids the meta relation
       // reports (introspection drives the time travel — that IS the test)
-      val ids = s.sql(s"SELECT snapshot_id FROM $cat.orders.snapshots ORDER BY 1")
+      val ids = scoped.sql(s"SELECT snapshot_id FROM $cat.orders.snapshots ORDER BY 1")
         .collect().map(_.getLong(0)).toSeq
-      val tagged = s.sql(s"SELECT snapshot_id FROM $cat.orders.refs " +
+      val tagged = scoped.sql(s"SELECT snapshot_id FROM $cat.orders.refs " +
         "WHERE name = 'pre_delete' AND kind = 'tag'").head.getLong(0)
       val out = ids.map { id =>
-        val r = s.sql(s"SELECT count(*) AS n, sum(cents) AS sc " +
+        val r = scoped.sql(s"SELECT count(*) AS n, sum(cents) AS sc " +
           s"FROM $cat.orders VERSION AS OF $id").head
         Row(id, if (id == tagged) "pre_delete" else "", r.getLong(0), r.getLong(1))
       }
       val schema = StructType(Seq(
         StructField("snapshot_id", LongType), StructField("tag", StringType),
         StructField("n_rows", LongType), StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("snapshot_id")
     } finally rm(root)
   }
@@ -1952,27 +1947,27 @@ object GraftCatalogQueries {
     * tag pins what it named.
     */
   def catalogCall(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) " +
         "TBLPROPERTIES ('statscol'='o_orderkey')")
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .repartitionByRange(8, col("o_orderkey"))
         .writeTo(s"$cat.orders").append()
       val store = root.resolve("orders")
-      val compacted = s.sql(
+      val compacted = scoped.sql(
         s"CALL $cat.system.compact(tbl => 'orders', target_files => 2, statscol => 'o_orderkey')")
         .head.getInt(0)
       require(compacted == 2 && Snapshots.manifest(store, 2).size < Snapshots.manifest(store, 1).size,
         "compaction did not shrink the file count")
-      s.sql(s"CALL $cat.system.create_tag(tbl => 'orders', name => 'compacted', snapshot_id => 2)")
-      s.sql(s"DELETE FROM $cat.orders WHERE o_orderkey % 3 = 0")
-      val rolled = s.sql(
+      scoped.sql(s"CALL $cat.system.create_tag(tbl => 'orders', name => 'compacted', snapshot_id => 2)")
+      scoped.sql(s"DELETE FROM $cat.orders WHERE o_orderkey % 3 = 0")
+      val rolled = scoped.sql(
         s"CALL $cat.system.rollback(tbl => 'orders', snapshot_id => $compacted)").head.getInt(0)
       require(rolled == compacted, s"rollback returned $rolled")
       val out = Seq(
@@ -1980,14 +1975,14 @@ object GraftCatalogQueries {
         ("post_delete", s"SELECT * FROM $cat.orders VERSION AS OF 3"),
         ("tag", s"SELECT * FROM $cat.orders VERSION AS OF 'compacted'")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM ($sql) GROUP BY 1")
           .collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2)))
       }
       val schema = StructType(Seq(
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_total_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -2031,12 +2026,12 @@ object GraftCatalogQueries {
     * The oracle restates the pre-adopt and post-adopt states.
     */
   def catalogAdopt(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val ext = JFiles.createTempDirectory("graft_adopt_src")
     try {
-      s.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (o_orderkey BIGINT, o_orderstatus STRING, " +
         "cents BIGINT) TBLPROPERTIES ('statscol'='o_orderkey')")
-      val src = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
+      val src = Tables.orders(scoped, d).select(col("o_orderkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       src.filter(col("o_orderkey") % 2 === 0).writeTo(s"$cat.orders").append()
       // the "external producer": raw parquet, no snapshot layer involved
@@ -2049,7 +2044,7 @@ object GraftCatalogQueries {
         finally l.close()
         Snapshots.md5hexAll(fs).map { case (p, h) => p.getFileName.toString -> h }
       }
-      val res = s.sql(s"CALL $cat.system.add_files(tbl => 'orders', " +
+      val res = scoped.sql(s"CALL $cat.system.add_files(tbl => 'orders', " +
         s"src => '${ext.toString}')").head
       require(res.getInt(0) == extMd5.size,
         s"expected ${extMd5.size} adopted files, got ${res.getInt(0)}")
@@ -2071,14 +2066,14 @@ object GraftCatalogQueries {
         src.limit(5).withColumn("extra", lit(1)).write.mode("overwrite")
           .parquet(bad.toString)
         val refused = scala.util.Try(
-          s.sql(s"CALL $cat.system.add_files(tbl => 'orders', src => '${bad.toString}')"))
+          scoped.sql(s"CALL $cat.system.add_files(tbl => 'orders', src => '${bad.toString}')"))
         require(refused.isFailure, "mismatched-schema adoption must refuse")
       } finally rm(bad)
       val out = Seq(
         ("current", s"SELECT * FROM $cat.orders"),
         ("pre_adopt", s"SELECT * FROM $cat.orders VERSION AS OF 1")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
           s"sum(o_orderkey) AS sk FROM ($sql) GROUP BY 1").collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       }
@@ -2086,7 +2081,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_cents", LongType),
         StructField("sum_keys", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally { rm(ext); rm(root) }
   }
@@ -2115,11 +2110,11 @@ object GraftCatalogQueries {
     * refuses loudly. The oracle restates both states from raw orders.
     */
   def catalogTimetravel(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (k BIGINT, o_orderstatus STRING, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (k BIGINT, o_orderstatus STRING, " +
         "cents BIGINT) TBLPROPERTIES ('statscol'='k')")
-      val src = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      val src = Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus"), round(col("o_totalprice") * 100).cast("long").as("cents"))
       src.filter(col("k") % 2 === 0).writeTo(s"$cat.orders").append()
       val store = root.resolve("orders")
@@ -2133,11 +2128,11 @@ object GraftCatalogQueries {
       require(Snapshots.idAsOfMillis(store, t1).contains(1),
         s"instant $t1 must resolve snapshot 1, got ${Snapshots.idAsOfMillis(store, t1)}")
       // an instant predating the table refuses loudly, never returns empty
-      val early = scala.util.Try(s.sql(s"SELECT * FROM $cat.orders " +
+      val early = scala.util.Try(scoped.sql(s"SELECT * FROM $cat.orders " +
         s"TIMESTAMP AS OF timestamp_millis(${t1 - 86400000L})").collect())
       require(early.isFailure, "TIMESTAMP AS OF before the first commit must refuse")
       // instant-addressed and id-addressed reads of the same snapshot agree
-      require(s.sql(s"SELECT * FROM $cat.orders TIMESTAMP AS OF " +
+      require(scoped.sql(s"SELECT * FROM $cat.orders TIMESTAMP AS OF " +
         s"timestamp_millis($t1) EXCEPT ALL " +
         s"SELECT * FROM $cat.orders VERSION AS OF 1").isEmpty,
         "TIMESTAMP AS OF t1 and VERSION AS OF 1 must read the same rows")
@@ -2147,7 +2142,7 @@ object GraftCatalogQueries {
         ("asof_now", s"SELECT * FROM $cat.orders TIMESTAMP AS OF " +
           s"timestamp_millis(${System.currentTimeMillis()})")
       ).flatMap { case (tag, sql) =>
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc, " +
           s"sum(k) AS sk FROM ($sql) GROUP BY 1").collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       }
@@ -2155,7 +2150,7 @@ object GraftCatalogQueries {
         StructField("state", StringType), StructField("o_orderstatus", StringType),
         StructField("n", LongType), StructField("sum_cents", LongType),
         StructField("sum_keys", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -2189,19 +2184,19 @@ object GraftCatalogQueries {
     * could have done it.
     */
   def catalogDpp(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.fact (nk BIGINT, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.fact (nk BIGINT, cents BIGINT) " +
         "PARTITIONED BY (nk) TBLPROPERTIES ('statscol'='cents')")
-      Tables.orders(s, d).select((col("o_orderkey") % 25).as("nk"),
+      Tables.orders(scoped, d).select((col("o_orderkey") % 25).as("nk"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.fact").append()
       val total = Snapshots.manifest(root.resolve("fact"), 1).size
-      val dim = Tables.nation(s, d)
+      val dim = Tables.nation(scoped, d)
         .filter(col("n_regionkey") === 0)
         .select(col("n_nationkey"), col("n_name"))
       GraftScan.resetRuntimePrune(root.resolve("fact"))
-      val joined = s.table(s"$cat.fact")
+      val joined = scoped.table(s"$cat.fact")
         .join(dim, col("nk") === col("n_nationkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
@@ -2213,7 +2208,7 @@ object GraftCatalogQueries {
         s"runtime filter pruned nothing: kept $kept of $total files")
       val schema = StructType(Seq(StructField("n_name", StringType),
         StructField("n", LongType), StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out.toSeq, 1), schema)
         .orderBy("n_name")
     } finally rm(root)
   }
@@ -2247,17 +2242,15 @@ object GraftCatalogQueries {
     * so the hash gate pins the rendering itself.
     */
   def catalogDppDate(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
-    val prevSpj = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.fact (od DATE, cents BIGINT) PARTITIONED BY (od)")
-      s.sql(s"CREATE TABLE $cat.rev (od DATE, rev_cents BIGINT) PARTITIONED BY (od)")
-      Tables.orders(s, d).select(
+      scoped.sql(s"CREATE TABLE $cat.fact (od DATE, cents BIGINT) PARTITIONED BY (od)")
+      scoped.sql(s"CREATE TABLE $cat.rev (od DATE, rev_cents BIGINT) PARTITIONED BY (od)")
+      Tables.orders(scoped, d).select(
         date_trunc("month", col("o_orderdate")).cast("date").as("od"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.fact").append()
-      Tables.lineitem(s, d).select(
+      Tables.lineitem(scoped, d).select(
         date_trunc("month", col("l_shipdate")).cast("date").as("od"),
         round(col("l_extendedprice") * 100).cast("long").as("r"))
         .groupBy("od").agg(sum("r").as("rev_cents"))
@@ -2270,13 +2263,13 @@ object GraftCatalogQueries {
       // (measured at the sf1 sweep), exactly as it should; a date dim
       // is also the realistic join shape
       val dimDir = root.resolve("date_dim")
-      Tables.orders(s, d)
+      Tables.orders(scoped, d)
         .select(date_trunc("month", col("o_orderdate")).cast("date").as("dd"))
         .distinct()
         .write.mode("overwrite").parquet(dimDir.toString)
-      val dim = s.read.parquet(dimDir.toString).filter(month(col("dd")) === 3)
+      val dim = scoped.read.parquet(dimDir.toString).filter(month(col("dd")) === 3)
       GraftScan.resetRuntimePrune(root.resolve("fact"))
-      val pruned = s.table(s"$cat.fact")
+      val pruned = scoped.table(s"$cat.fact")
         .join(dim, col("od") === col("dd"))
         .groupBy("od")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
@@ -2288,22 +2281,11 @@ object GraftCatalogQueries {
       require(kept < total,
         s"date runtime filter pruned nothing: kept $kept of $total files")
       // ---- proof 2: storage-partitioned join on the DATE column ----
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = s.table(s"$cat.fact").join(s.table(s"$cat.rev"), "od")
+      scoped.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      scoped.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = scoped.table(s"$cat.fact").join(scoped.table(s"$cat.rev"), "od")
         .groupBy("od")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-        val kids = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-          case other => other.children
-        }
-        (p match {
-          case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
-          case _ => 0
-        }) + kids.map(shuffles).sum
-      }
       val spjRows = joined.collect().map(r =>
         Row("spj", r.getDate(0).toString, r.getLong(1), r.getLong(2)))
       require(shuffles(joined.queryExecution.executedPlan) == 0,
@@ -2312,16 +2294,9 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("part", StringType),
         StructField("od", StringType), StructField("n", LongType),
         StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize((dppRows ++ spjRows).toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize((dppRows ++ spjRows).toSeq, 1), schema)
         .orderBy("part", "od")
-    } finally {
-      prevSpj match {
-        case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None    => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** Both date joins restated flat; the ISO rendering rides the hash. */
@@ -2356,24 +2331,24 @@ object GraftCatalogQueries {
     * merged state grouped by the evolved column.
     */
   def catalogMergeEvolve(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("st0"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"CREATE TABLE $cat.t (k BIGINT, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.t (k BIGINT, cents BIGINT) " +
         "TBLPROPERTIES ('mergeschema'='true', 'statscol'='k')")
-      s.sql(s"INSERT INTO $cat.t SELECT k, cents FROM $view") // snapshot 1
-      s.sql(s"CREATE TABLE $cat.frozen (k BIGINT, cents BIGINT)")
-      s.sql(s"INSERT INTO $cat.frozen SELECT k, cents FROM $view")
+      scoped.sql(s"INSERT INTO $cat.t SELECT k, cents FROM $view") // snapshot 1
+      scoped.sql(s"CREATE TABLE $cat.frozen (k BIGINT, cents BIGINT)")
+      scoped.sql(s"INSERT INTO $cat.frozen SELECT k, cents FROM $view")
       // the wider source: matched keys re-land with +1 cents and their
       // status in a NEW column; fresh keys insert with st='N'. The
       // source aggregates PER KEY (max cents / max status): upscaled
       // test dirs carry non-unique o_orderkey (the sf10 sweep's catch),
       // and MERGE rightly refuses multiple source rows per target row
-      s.sql(s"""CREATE OR REPLACE TEMP VIEW ${view}_src AS
+      scoped.sql(s"""CREATE OR REPLACE TEMP VIEW ${view}_src AS
         WITH agg AS (SELECT k, max(cents) AS mc, max(st0) AS ms
           FROM $view WHERE k % 3 = 0 GROUP BY k)
         SELECT k, mc + 1 AS cents, ms AS st FROM agg
@@ -2388,25 +2363,25 @@ object GraftCatalogQueries {
       // only: the same wider MERGE runs but must NOT change the schema —
       // evolution is the dial's (or the explicit WITH SCHEMA EVOLUTION
       // clause's) doing, never an accident of a wide source
-      s.sql(mergeSql("frozen"))
-      require(s.table(s"$cat.frozen").columns.toSeq == Seq("k", "cents"),
+      scoped.sql(mergeSql("frozen"))
+      require(scoped.table(s"$cat.frozen").columns.toSeq == Seq("k", "cents"),
         "un-dialled table evolved without WITH SCHEMA EVOLUTION: " +
-          s.table(s"$cat.frozen").columns.mkString(","))
-      s.sql(mergeSql("t")) // auto-widens: ALTER (metadata commit) + merge
-      require(s.table(s"$cat.t").columns.toSeq == Seq("k", "cents", "st"),
-        s"MERGE did not evolve the schema: ${s.table(s"$cat.t").columns.mkString(",")}")
+          scoped.table(s"$cat.frozen").columns.mkString(","))
+      scoped.sql(mergeSql("t")) // auto-widens: ALTER (metadata commit) + merge
+      require(scoped.table(s"$cat.t").columns.toSeq == Seq("k", "cents", "st"),
+        s"MERGE did not evolve the schema: ${scoped.table(s"$cat.t").columns.mkString(",")}")
       // time travel below the merge keeps the narrow pre-evolution shape
-      val narrow = s.sql(s"SELECT * FROM $cat.t VERSION AS OF 1").columns.toSeq
+      val narrow = scoped.sql(s"SELECT * FROM $cat.t VERSION AS OF 1").columns.toSeq
       require(narrow == Seq("k", "cents"),
         s"VERSION AS OF 1 should keep the narrow schema, got ${narrow.mkString(",")}")
       // old rows surface NULL st straight from pre-evolution files;
       // collected and re-lifted (the store dies with the query)
-      val out = s.sql(s"SELECT coalesce(st, '') AS st, count(*) AS n, " +
+      val out = scoped.sql(s"SELECT coalesce(st, '') AS st, count(*) AS n, " +
         s"sum(cents) AS sum_cents FROM $cat.t GROUP BY 1").collect()
         .map(r => Row(r.getString(0), r.getLong(1), r.getLong(2)))
       val schema = StructType(Seq(StructField("st", StringType),
         StructField("n", LongType), StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out.toSeq, 1), schema)
         .orderBy("st")
     } finally rm(root)
   }
@@ -2446,27 +2421,27 @@ object GraftCatalogQueries {
     * values) plus the unpinned tail as a literal.
     */
   def catalogCdfBatch(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val view = cat + "_orders"
     try {
-      s.sql(s"CREATE TABLE $cat.kv (k BIGINT NOT NULL, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.kv (k BIGINT NOT NULL, cents BIGINT) " +
         "TBLPROPERTIES ('morkey'='k')")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView(view)
-      s.sql(s"INSERT INTO $cat.kv SELECT * FROM $view")            // snap 1
-      s.sql(s"UPDATE $cat.kv SET cents = cents + 7 WHERE k % 10 = 3") // 2
-      s.sql(s"DELETE FROM $cat.kv WHERE k % 10 = 6")               // snap 3
-      s.sql(s"INSERT INTO $cat.kv VALUES (1000000007, 42)")        // snap 4
+      scoped.sql(s"INSERT INTO $cat.kv SELECT * FROM $view")            // snap 1
+      scoped.sql(s"UPDATE $cat.kv SET cents = cents + 7 WHERE k % 10 = 3") // 2
+      scoped.sql(s"DELETE FROM $cat.kv WHERE k % 10 = 6")               // snap 3
+      scoped.sql(s"INSERT INTO $cat.kv VALUES (1000000007, 42)")        // snap 4
       val store = root.resolve("kv")
       def batchFeed(opts: (String, String)*): DataFrame =
-        opts.foldLeft(s.read.option("changefeed", "true"))(
+        opts.foldLeft(scoped.read.option("changefeed", "true"))(
           (r, o) => r.option(o._1, o._2)).table(s"$cat.kv")
       // the pinned window (1,3]: an UPDATE's pairs and a DELETE's
       // retractions, read AFTER snapshot 4 exists — the pin must hold
       val pinned = batchFeed("startsnapshot" -> "1", "versionAsOf" -> "3")
       val pinnedRows = pinned.collect()
-      val tvfRows = Snapshots.readChangeFeed(s, store, 1, 3)
+      val tvfRows = Snapshots.readChangeFeed(scoped, store, 1, 3)
         .select(pinned.columns.map(col).toIndexedSeq: _*).collect()
       require(pinnedRows.toSet == tvfRows.toSet,
         "batch DSv2 changefeed diverged from the TVF window (1,3]")
@@ -2483,7 +2458,7 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("part", StringType),
         StructField("change_type", StringType), StructField("n", LongType),
         StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize((agg ++ tail).toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize((agg ++ tail).toSeq, 1), schema)
         .orderBy("part", "change_type")
     } finally rm(root)
   }
@@ -2527,17 +2502,15 @@ object GraftCatalogQueries {
     * TIMESTAMP epoch() agrees exactly and the hash gate pins the value.
     */
   def catalogDppTs(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
-    val prevSpj = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.fact (ots TIMESTAMP, cents BIGINT) PARTITIONED BY (ots)")
-      s.sql(s"CREATE TABLE $cat.rev (ots TIMESTAMP, rev_cents BIGINT) PARTITIONED BY (ots)")
-      Tables.orders(s, d).select(
+      scoped.sql(s"CREATE TABLE $cat.fact (ots TIMESTAMP, cents BIGINT) PARTITIONED BY (ots)")
+      scoped.sql(s"CREATE TABLE $cat.rev (ots TIMESTAMP, rev_cents BIGINT) PARTITIONED BY (ots)")
+      Tables.orders(scoped, d).select(
         date_trunc("month", col("o_orderdate")).as("ots"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.fact").append()
-      Tables.lineitem(s, d).select(
+      Tables.lineitem(scoped, d).select(
         date_trunc("month", col("l_shipdate")).as("ots"),
         round(col("l_extendedprice") * 100).cast("long").as("r"))
         .groupBy("ots").agg(sum("r").as("rev_cents"))
@@ -2551,13 +2524,13 @@ object GraftCatalogQueries {
       val total = Snapshots.manifest(root.resolve("fact"), 1).size
       // ---- proof 1: runtime pruning through the dim join's IN-set ----
       val dimDir = root.resolve("ts_dim")
-      Tables.orders(s, d)
+      Tables.orders(scoped, d)
         .select(date_trunc("month", col("o_orderdate")).as("dd"))
         .distinct()
         .write.mode("overwrite").parquet(dimDir.toString)
-      val dim = s.read.parquet(dimDir.toString).filter(month(col("dd")) === 3)
+      val dim = scoped.read.parquet(dimDir.toString).filter(month(col("dd")) === 3)
       GraftScan.resetRuntimePrune(root.resolve("fact"))
-      val pruned = s.table(s"$cat.fact")
+      val pruned = scoped.table(s"$cat.fact")
         .join(dim, col("ots") === col("dd"))
         .groupBy("ots")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
@@ -2570,22 +2543,11 @@ object GraftCatalogQueries {
       require(kept < total,
         s"timestamp runtime filter pruned nothing: kept $kept of $total files")
       // ---- proof 2: storage-partitioned join on the TIMESTAMP column ----
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = s.table(s"$cat.fact").join(s.table(s"$cat.rev"), "ots")
+      scoped.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      scoped.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = scoped.table(s"$cat.fact").join(scoped.table(s"$cat.rev"), "ots")
         .groupBy("ots")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-        val kids = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-          case other => other.children
-        }
-        (p match {
-          case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
-          case _ => 0
-        }) + kids.map(shuffles).sum
-      }
       val spjRows = joined.collect().map(r =>
         Row("spj", r.getTimestamp(0).toInstant.getEpochSecond, r.getLong(1),
           r.getLong(2)))
@@ -2595,16 +2557,9 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("part", StringType),
         StructField("epoch_s", LongType), StructField("n", LongType),
         StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize((dppRows ++ spjRows).toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize((dppRows ++ spjRows).toSeq, 1), schema)
         .orderBy("part", "epoch_s")
-    } finally {
-      prevSpj match {
-        case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None    => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** Both timestamp joins restated flat; epoch seconds ride the hash
@@ -2635,46 +2590,32 @@ object GraftCatalogQueries {
     * (broadcast disabled so the proof cannot be faked by a broadcast
     * join). This is bucketing's payoff at 100 TB — the co-located join
     * without ever paying a shuffle to create co-location — expressed
-    * through Spark's own v2 bucketing contract (opt-in conf, restored
-    * after).
+    * through Spark's own v2 bucketing contract (opt-in conf, set on the
+    * query's cloned session).
     */
   def catalogSpj(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
-    val prevSpj = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.ord (shard BIGINT, cents BIGINT) PARTITIONED BY (shard)")
-      s.sql(s"CREATE TABLE $cat.rev (shard BIGINT, rev_cents BIGINT) PARTITIONED BY (shard)")
-      Tables.orders(s, d).select((col("o_orderkey") % 16).as("shard"),
+      scoped.sql(s"CREATE TABLE $cat.ord (shard BIGINT, cents BIGINT) PARTITIONED BY (shard)")
+      scoped.sql(s"CREATE TABLE $cat.rev (shard BIGINT, rev_cents BIGINT) PARTITIONED BY (shard)")
+      Tables.orders(scoped, d).select((col("o_orderkey") % 16).as("shard"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.ord").append()
       // the second side: per-shard lineitem revenue, pre-aggregated on
       // write (a shard-summary table — the realistic small co-partitioned
       // side a fact row joins its shard's stats from)
-      Tables.lineitem(s, d).select((col("l_orderkey") % 16).as("shard"),
+      Tables.lineitem(scoped, d).select((col("l_orderkey") % 16).as("shard"),
         round(col("l_extendedprice") * 100).cast("long").as("r"))
         .groupBy("shard").agg(sum("r").as("rev_cents"))
         .writeTo(s"$cat.rev").append()
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = s.table(s"$cat.ord").join(s.table(s"$cat.rev"), "shard")
+      scoped.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      scoped.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = scoped.table(s"$cat.ord").join(scoped.table(s"$cat.rev"), "shard")
         .groupBy("shard")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           max("rev_cents").as("shard_rev_cents"))
       val out = joined.collect()
         .map(r => Row(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-        val kids = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            Seq(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-          case other => other.children
-        }
-        (p match {
-          case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
-          case _ => 0
-        }) + kids.map(shuffles).sum
-      }
       val nShuffles = shuffles(joined.queryExecution.executedPlan)
       require(nShuffles == 0,
         s"storage-partitioned join still shuffled ($nShuffles exchanges):\n" +
@@ -2682,16 +2623,9 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("shard", LongType),
         StructField("n", LongType), StructField("sum_cents", LongType),
         StructField("shard_rev_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out.toSeq, 1), schema)
         .orderBy("shard")
-    } finally {
-      prevSpj match {
-        case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None    => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** Query `catalog_bucket`: the storage-partitioned join on a
@@ -2706,41 +2640,27 @@ object GraftCatalogQueries {
     * committed file carries its `_pv=<bucket id>` proof.
     */
   def catalogBucket(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
-    val prevSpj = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.ord (k BIGINT, st STRING) PARTITIONED BY (bucket(16, k))")
-      s.sql(s"CREATE TABLE $cat.li (k BIGINT, rc BIGINT) PARTITIONED BY (bucket(16, k))")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"))
+      scoped.sql(s"CREATE TABLE $cat.ord (k BIGINT, st STRING) PARTITIONED BY (bucket(16, k))")
+      scoped.sql(s"CREATE TABLE $cat.li (k BIGINT, rc BIGINT) PARTITIONED BY (bucket(16, k))")
+      Tables.orders(scoped, d).select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"))
         .writeTo(s"$cat.ord").append()
-      Tables.lineitem(s, d).select(col("l_orderkey").as("k"),
+      Tables.lineitem(scoped, d).select(col("l_orderkey").as("k"),
         round(col("l_extendedprice") * 100).cast("long").as("rc"))
         .writeTo(s"$cat.li").append()
       val entries = Snapshots.manifest(root.resolve("ord"), 1) ++
         Snapshots.manifest(root.resolve("li"), 1)
       require(entries.forall(e => GraftScan.pvOfPath(e.relPath).isDefined),
         "a bucketed write landed a file without its _pv=<bucket id> proof")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = s.table(s"$cat.ord").filter(col("k") < 2000)
-        .join(s.table(s"$cat.li"), "k")
+      scoped.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      scoped.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = scoped.table(s"$cat.ord").filter(col("k") < 2000)
+        .join(scoped.table(s"$cat.li"), "k")
         .groupBy("k").agg(max("st").as("st"), count(lit(1)).as("n_lines"),
           sum("rc").as("rev_cents"))
       val out = joined.collect()
         .map(r => Row(r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-        val kids = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            Seq(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-          case other => other.children
-        }
-        (p match {
-          case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
-          case _ => 0
-        }) + kids.map(shuffles).sum
-      }
       val nShuffles = shuffles(joined.queryExecution.executedPlan)
       require(nShuffles == 0,
         s"bucketed join still shuffled ($nShuffles exchanges):\n" +
@@ -2748,16 +2668,9 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("k", LongType),
         StructField("st", StringType), StructField("n_lines", LongType),
         StructField("rev_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out.toSeq, 1), schema)
         .orderBy("k")
-    } finally {
-      prevSpj match {
-        case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None    => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** Query `catalog_mor_bucket`: merge-on-read DML on a BUCKETED table —
@@ -2772,17 +2685,17 @@ object GraftCatalogQueries {
     * change bytes, never answers).
     */
   def catalogMorBucket(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (k BIGINT NOT NULL, o_orderstatus STRING, " +
+      scoped.sql(s"CREATE TABLE $cat.orders (k BIGINT NOT NULL, o_orderstatus STRING, " +
         "cents BIGINT) PARTITIONED BY (bucket(8, k)) " +
         "TBLPROPERTIES ('morkey'='k', 'sortcol'='k')")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"), col("o_orderstatus"),
+      Tables.orders(scoped, d).select(col("o_orderkey").as("k"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.orders").append()
       val store = root.resolve("orders")
       val base = Snapshots.manifest(store, 1)
-      s.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
+      scoped.sql(s"UPDATE $cat.orders SET cents = cents * 2, o_orderstatus = 'U' " +
         "WHERE k BETWEEN 800 AND 1599 AND o_orderstatus = 'O'")
       val after = Snapshots.manifest(store, 2)
       base.foreach(b => require(after.exists(e =>
@@ -2795,13 +2708,13 @@ object GraftCatalogQueries {
       datas.foreach(e => require(GraftScan.pvOfPath(e.relPath).isDefined,
         s"delta file ${e.relPath} poisons the bucket layout"))
       def stateRows(tag: String): Seq[Row] =
-        s.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM " +
+        scoped.sql(s"SELECT o_orderstatus, count(*) AS n, sum(cents) AS sc FROM " +
           (if (tag == "v1") s"$cat.orders VERSION AS OF 1" else s"$cat.orders") +
           " GROUP BY 1").collect()
           .map(r => Row(tag, r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       val v1 = stateRows("v1")
       val current = stateRows("current")
-      s.sql(s"CALL $cat.system.compact('orders', 8)")
+      scoped.sql(s"CALL $cat.system.compact('orders', 8)")
       val folded = Snapshots.manifest(store, Snapshots.currentId(store).get)
       require(!folded.exists(Snapshots.isDelete), "compact left tombstones behind")
       require(folded.forall(e => GraftScan.pvOfPath(e.relPath).isDefined),
@@ -2810,7 +2723,7 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("state", StringType),
         StructField("o_orderstatus", StringType), StructField("n", LongType),
         StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(v1 ++ current ++ post, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(v1 ++ current ++ post, 1), schema)
         .orderBy("state", "o_orderstatus")
     } finally rm(root)
   }
@@ -2849,40 +2762,33 @@ object GraftCatalogQueries {
     * answers.
     */
   def catalogAggPush(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     val confKey = "spark.sql.parquet.aggregatePushdown"
-    val prev = s.conf.getOption(confKey)
     try {
-      s.sql(s"CREATE TABLE $cat.orders (k BIGINT, cents BIGINT)")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      scoped.sql(s"CREATE TABLE $cat.orders (k BIGINT, cents BIGINT)")
+      Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .repartition(8).writeTo(s"$cat.orders").append()
       def agg(): (Seq[Row], DataFrame) = {
-        val df = s.sql(s"SELECT count(*) AS n, min(k) AS min_k, max(k) AS max_k, " +
+        val df = scoped.sql(s"SELECT count(*) AS n, min(k) AS min_k, max(k) AS max_k, " +
           s"min(cents) AS min_cents, max(cents) AS max_cents FROM $cat.orders")
         (df.collect().toSeq, df)
       }
-      s.conf.set(confKey, "true")
+      scoped.conf.set(confKey, "true")
       val (pushed, pushedDf) = agg()
       val plan = pushedDf.queryExecution.executedPlan.toString
       require(plan.contains("PushedAggregation: [COUNT(*)") ||
           plan.contains("PushedAggregation: [MIN"),
         s"aggregate did not reach the parquet footers:\n$plan")
-      s.conf.set(confKey, "false")
+      scoped.conf.set(confKey, "false")
       val (scanned, _) = agg()
       require(pushed == scanned,
         s"footer aggregates diverged from the scan: $pushed vs $scanned")
       val schema = StructType(Seq(StructField("n", LongType),
         StructField("min_k", LongType), StructField("max_k", LongType),
         StructField("min_cents", LongType), StructField("max_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(pushed, 1), schema)
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(confKey, v)
-        case None    => s.conf.unset(confKey)
-      }
-      rm(root)
-    }
+      scoped.createDataFrame(scoped.sparkContext.parallelize(pushed, 1), schema)
+    } finally rm(root)
   }
 
   /** The same aggregate restated flat. */
@@ -2906,15 +2812,13 @@ object GraftCatalogQueries {
     * never per query.
     */
   def catalogSorted(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
-    val prevSpj = s.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.ord (k BIGINT NOT NULL, st STRING) " +
+      scoped.sql(s"CREATE TABLE $cat.ord (k BIGINT NOT NULL, st STRING) " +
         "PARTITIONED BY (bucket(8, k)) TBLPROPERTIES ('sortcol'='k')")
-      s.sql(s"CREATE TABLE $cat.li (k BIGINT NOT NULL, rc BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.li (k BIGINT NOT NULL, rc BIGINT) " +
         "PARTITIONED BY (bucket(8, k)) TBLPROPERTIES ('sortcol'='k')")
-      val ord = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      val ord = Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("st"))
       // two KEY-DISJOINT appends: per-bucket file ranges stay disjoint,
       // so the ordering claim must survive the second commit. Split at
@@ -2923,13 +2827,13 @@ object GraftCatalogQueries {
       val mid = ord.agg(expr("percentile_approx(k, 0.5)")).head.getLong(0)
       ord.filter(col("k") < mid).writeTo(s"$cat.ord").append()
       ord.filter(col("k") >= mid).writeTo(s"$cat.ord").append()
-      Tables.lineitem(s, d).select(col("l_orderkey").as("k"),
+      Tables.lineitem(scoped, d).select(col("l_orderkey").as("k"),
         round(col("l_extendedprice") * 100).cast("long").as("rc"))
         .writeTo(s"$cat.li").append()
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = s.table(s"$cat.ord").filter(col("k") < 2000)
-        .join(s.table(s"$cat.li"), "k")
+      scoped.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      scoped.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = scoped.table(s"$cat.ord").filter(col("k") < 2000)
+        .join(scoped.table(s"$cat.li"), "k")
         .groupBy("k").agg(max("st").as("st"), count(lit(1)).as("n_lines"),
           sum("rc").as("rev_cents"))
       val out = joined.collect()
@@ -2955,16 +2859,9 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("k", LongType),
         StructField("st", StringType), StructField("n_lines", LongType),
         StructField("rev_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out.toSeq, 1), schema)
         .orderBy("k")
-    } finally {
-      prevSpj match {
-        case Some(v) => s.conf.set("spark.sql.sources.v2.bucketing.enabled", v)
-        case None    => s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** Same answer as catalog_bucket's oracle (the split append changes
@@ -3014,10 +2911,10 @@ object GraftCatalogQueries {
     * is soundness, not a missed optimization.
     */
   def catalogLimitPush(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.t (k BIGINT NOT NULL, cents BIGINT)")
-      val src = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      scoped.sql(s"CREATE TABLE $cat.t (k BIGINT NOT NULL, cents BIGINT)")
+      val src = Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       // four commits, one file each — the prunable unit is the file
       (0 until 4).foreach { i =>
@@ -3030,7 +2927,7 @@ object GraftCatalogQueries {
       require(totalFiles >= 4, s"expected >=4 files, saw $totalFiles")
 
       GraftScan.resetLimitPrune(store)
-      val limCnt = s.sql(
+      val limCnt = scoped.sql(
         s"SELECT count(*) AS c FROM (SELECT * FROM $cat.t LIMIT 100)")
         .head().getLong(0)
       val (kept, ttl) = GraftScan.lastLimitPruneFor(store)
@@ -3040,15 +2937,15 @@ object GraftCatalogQueries {
 
       // a pushed filter underneath must decline the file prune
       GraftScan.resetLimitPrune(store)
-      val limFiltered = s.sql(s"SELECT count(*) AS c FROM " +
+      val limFiltered = scoped.sql(s"SELECT count(*) AS c FROM " +
         s"(SELECT * FROM $cat.t WHERE k % 3 = 0 LIMIT 70)").head().getLong(0)
       require(GraftScan.lastLimitPruneFor(store) == ((0, 0)),
         "LIMIT file prune fired under a pushed filter — unsound")
 
-      val totalRows = s.table(s"$cat.t").count()
+      val totalRows = scoped.table(s"$cat.t").count()
       val schema = StructType(Seq(StructField("lim_cnt", LongType),
         StructField("lim_filtered", LongType), StructField("total_rows", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(
+      scoped.createDataFrame(scoped.sparkContext.parallelize(
         Seq(Row(limCnt, limFiltered, totalRows)), 1), schema)
     } finally rm(root)
   }
@@ -3076,11 +2973,11 @@ object GraftCatalogQueries {
     * the same query: a top-k above a pushed filter keeps every file.
     */
   def catalogTopnPush(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.t (k BIGINT NOT NULL, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.t (k BIGINT NOT NULL, cents BIGINT) " +
         "TBLPROPERTIES ('statscol'='k')")
-      val src = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      val src = Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       val maxK = src.agg(max("k")).head().getLong(0)
       // four RANGE-DISJOINT commits: per-file zone ranges partition the
@@ -3096,14 +2993,14 @@ object GraftCatalogQueries {
       require(totalFiles >= 4, s"expected >=4 files, saw $totalFiles")
 
       GraftScan.resetLimitPrune(store)
-      val ascRows = s.table(s"$cat.t").orderBy(col("k").asc).limit(50)
+      val ascRows = scoped.table(s"$cat.t").orderBy(col("k").asc).limit(50)
         .collect().map(r => Row("asc", r.getLong(0), r.getLong(1)))
       val (ka, ta) = GraftScan.lastLimitPruneFor(store)
       require(ta == totalFiles && ka < totalFiles,
         s"ASC top-k pruned nothing: kept $ka of $ta (files: $totalFiles)")
 
       GraftScan.resetLimitPrune(store)
-      val descRows = s.table(s"$cat.t").orderBy(col("k").desc).limit(50)
+      val descRows = scoped.table(s"$cat.t").orderBy(col("k").desc).limit(50)
         .collect().map(r => Row("desc", r.getLong(0), r.getLong(1)))
       val (kd, td) = GraftScan.lastLimitPruneFor(store)
       require(td == totalFiles && kd < totalFiles,
@@ -3111,15 +3008,15 @@ object GraftCatalogQueries {
 
       // decline contract: a pushed filter underneath keeps every file
       GraftScan.resetLimitPrune(store)
-      s.table(s"$cat.t").filter(col("cents") > 0)
+      scoped.table(s"$cat.t").filter(col("cents") > 0)
         .orderBy(col("k").asc).limit(10).collect()
       require(GraftScan.lastLimitPruneFor(store) == ((0, 0)),
         "top-k file prune fired under a pushed filter — unsound")
 
       val schema = StructType(Seq(StructField("leg", StringType),
         StructField("k", LongType), StructField("cents", LongType)))
-      s.createDataFrame(
-        s.sparkContext.parallelize((ascRows ++ descRows).toSeq, 1), schema)
+      scoped.createDataFrame(
+        scoped.sparkContext.parallelize((ascRows ++ descRows).toSeq, 1), schema)
         .orderBy("leg", "k")
     } finally rm(root)
   }
@@ -3156,19 +3053,19 @@ object GraftCatalogQueries {
     * story: a writable copy of production for the price of a manifest.
     */
   def catalogClone(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.src (k BIGINT NOT NULL, cents BIGINT NOT NULL) " +
+      scoped.sql(s"CREATE TABLE $cat.src (k BIGINT NOT NULL, cents BIGINT NOT NULL) " +
         "TBLPROPERTIES ('morkey'='k', 'statscol'='k')")
-      val src = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      val src = Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       src.filter(col("k") % 2 === 0).writeTo(s"$cat.src").append()
       val idAfterFirst = Snapshots.currentId(root.resolve("src")).get
       src.filter(col("k") % 2 === 1).writeTo(s"$cat.src").append()
-      s.sql(s"DELETE FROM $cat.src WHERE k % 10 = 3")
+      scoped.sql(s"DELETE FROM $cat.src WHERE k % 10 = 3")
 
       // ---- clone at current (carries the live tombstones) ----------
-      val res = s.sql(s"CALL $cat.system.clone('src', 'dev')").collect()(0)
+      val res = scoped.sql(s"CALL $cat.system.clone('src', 'dev')").collect()(0)
       require(res.getInt(0) > 0 && res.getInt(1) >= 1,
         s"clone saw ${res.getInt(0)} files / ${res.getInt(1)} tombstones")
       // disk proof: NOT ONE data parquet landed under the clone
@@ -3182,35 +3079,35 @@ object GraftCatalogQueries {
       // are merge-on-read reads, each consumed by BOTH exceptAll
       // directions — materialize once instead of re-running the merged
       // read four times (guide §5)
-      val srcNow = s.table(s"$cat.src").localCheckpoint()
-      val devNow = s.table(s"$cat.dev").localCheckpoint()
+      val srcNow = scoped.table(s"$cat.src").localCheckpoint()
+      val devNow = scoped.table(s"$cat.dev").localCheckpoint()
       require(devNow.exceptAll(srcNow).isEmpty && srcNow.exceptAll(devNow).isEmpty,
         "clone diverged from source at birth")
 
       // ---- version-pinned clone: born at the FIRST append's state ---
-      s.sql(s"CALL $cat.system.clone('src', 'hist', $idAfterFirst)")
+      scoped.sql(s"CALL $cat.system.clone('src', 'hist', $idAfterFirst)")
 
       // ---- independent divergence ----------------------------------
-      s.sql(s"INSERT INTO $cat.dev VALUES (-1, 11), (-2, 22)")
-      s.sql(s"DELETE FROM $cat.src WHERE k % 10 = 7")
+      scoped.sql(s"INSERT INTO $cat.dev VALUES (-1, 11), (-2, 22)")
+      scoped.sql(s"DELETE FROM $cat.src WHERE k % 10 = 7")
       // neither write surfaces in the other table
-      require(s.table(s"$cat.dev").filter(col("k") % 10 === 7 && col("k") > 0)
+      require(scoped.table(s"$cat.dev").filter(col("k") % 10 === 7 && col("k") > 0)
         .count() > 0, "source's post-clone DELETE leaked into the clone")
-      require(s.table(s"$cat.src").filter(col("k") < 0).count() == 0,
+      require(scoped.table(s"$cat.src").filter(col("k") < 0).count() == 0,
         "clone's post-clone INSERT leaked into the source")
 
       // ---- detach + GC-guard proof ---------------------------------
-      s.sql(s"CALL $cat.system.compact('dev', 4)")
+      scoped.sql(s"CALL $cat.system.compact('dev', 4)")
       val devStore = root.resolve("dev")
       val devHead = Snapshots.currentId(devStore).get
       require(!Snapshots.manifest(devStore, devHead).exists(_.relPath.startsWith("../")),
         "compact left the clone attached (foreign refs survive)")
-      val srcCountBefore = s.table(s"$cat.src").count()
+      val srcCountBefore = scoped.table(s"$cat.src").count()
       // expire the clone's ENTIRE pre-compact history: its manifest-1
       // references the source's files, and the guard must refuse to
       // reach through them
-      s.sql(s"CALL $cat.system.expire('dev', $devHead)")
-      require(s.table(s"$cat.src").count() == srcCountBefore,
+      scoped.sql(s"CALL $cat.system.expire('dev', $devHead)")
+      require(scoped.table(s"$cat.src").count() == srcCountBefore,
         "expiring the clone reclaimed SOURCE files through foreign refs")
 
       // ---- final states, one leg per table -------------------------
@@ -3219,11 +3116,11 @@ object GraftCatalogQueries {
           .head()
         Row(name, r.getLong(0), r.getLong(1))
       }
-      val out = Seq(leg("src", s.table(s"$cat.src")),
-        leg("dev", s.table(s"$cat.dev")), leg("hist", s.table(s"$cat.hist")))
+      val out = Seq(leg("src", scoped.table(s"$cat.src")),
+        leg("dev", scoped.table(s"$cat.dev")), leg("hist", scoped.table(s"$cat.hist")))
       val schema = StructType(Seq(StructField("leg", StringType),
         StructField("n", LongType), StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("leg")
     } finally rm(root)
   }
@@ -3241,12 +3138,12 @@ object GraftCatalogQueries {
     * release-retirement shape — is a manifest edit, not a rewrite.
     */
   def catalogMetaDelete(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
       // ---- leg 1: partition purge, zero jobs ------------------------
-      s.sql(s"CREATE TABLE $cat.t1 (shard BIGINT, cents BIGINT) " +
+      scoped.sql(s"CREATE TABLE $cat.t1 (shard BIGINT, cents BIGINT) " +
         "PARTITIONED BY (shard)")
-      Tables.orders(s, d).select((col("o_orderkey") % 8).as("shard"),
+      Tables.orders(scoped, d).select((col("o_orderkey") % 8).as("shard"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.t1").append()
       val store1 = root.resolve("t1")
@@ -3257,11 +3154,11 @@ object GraftCatalogQueries {
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       }
-      s.sparkContext.addSparkListener(listener)
+      scoped.sparkContext.addSparkListener(listener)
       try {
-        s.sql(s"DELETE FROM $cat.t1 WHERE shard = 3")
-        org.apache.spark.sql.GraftBridge.drainListenerBus(s.sparkContext)
-      } finally s.sparkContext.removeSparkListener(listener)
+        scoped.sql(s"DELETE FROM $cat.t1 WHERE shard = 3")
+        GraftBridge.drainListenerBus(scoped.sparkContext)
+      } finally scoped.sparkContext.removeSparkListener(listener)
       require(jobs.get() == 0,
         s"partition purge launched ${jobs.get()} Spark job(s) — not metadata-only")
       val after1 = Snapshots.manifest(store1, Snapshots.currentId(store1).get)
@@ -3273,9 +3170,9 @@ object GraftCatalogQueries {
         s"wrong files dropped: $gone")
 
       // ---- leg 2: zone drop + partial rewrite -----------------------
-      s.sql(s"CREATE TABLE $cat.t2 (k BIGINT NOT NULL, cents BIGINT NOT NULL) " +
+      scoped.sql(s"CREATE TABLE $cat.t2 (k BIGINT NOT NULL, cents BIGINT NOT NULL) " +
         "TBLPROPERTIES ('statscol'='k')")
-      val src = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      val src = Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       val maxK = src.agg(max("k")).head().getLong(0)
       val cut = maxK / 4 + 1
@@ -3285,7 +3182,7 @@ object GraftCatalogQueries {
       }
       val store2 = root.resolve("t2")
       val before2 = Snapshots.manifest(store2, Snapshots.currentId(store2).get)
-      s.sql(s"DELETE FROM $cat.t2 WHERE k < ${cut + cut / 2}")
+      scoped.sql(s"DELETE FROM $cat.t2 WHERE k < ${cut + cut / 2}")
       val after2 = Snapshots.manifest(store2, Snapshots.currentId(store2).get)
       val by2 = before2.map(e => e.relPath -> e.md5).toMap
       val (carried2, fresh2) = after2.partition(e => by2.get(e.relPath).contains(e.md5))
@@ -3294,17 +3191,17 @@ object GraftCatalogQueries {
           s"${carried2.size} + ${fresh2.size}")
 
       // ---- final states, oracled -----------------------------------
-      val t1 = s.table(s"$cat.t1").groupBy("shard")
+      val t1 = scoped.table(s"$cat.t1").groupBy("shard")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
         .collect().map(r => Row("purge", r.getLong(0), r.getLong(1), r.getLong(2)))
-      val t2r = s.table(s"$cat.t2")
+      val t2r = scoped.table(s"$cat.t2")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"), min("k").as("m"))
         .head()
       val t2 = Array(Row("range", t2r.getLong(2), t2r.getLong(0), t2r.getLong(1)))
       val schema = StructType(Seq(StructField("leg", StringType),
         StructField("k", LongType), StructField("n", LongType),
         StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize((t1 ++ t2).toSeq, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize((t1 ++ t2).toSeq, 1), schema)
         .orderBy("leg", "k")
     } finally rm(root)
   }
@@ -3341,33 +3238,31 @@ object GraftCatalogQueries {
     * oracle hash.
     */
   def catalogAnalyze(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
-    val prevCbo = s.conf.getOption("spark.sql.cbo.enabled")
-    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.dim (k BIGINT NOT NULL, cents BIGINT NOT NULL) " +
+      scoped.sql(s"CREATE TABLE $cat.dim (k BIGINT NOT NULL, cents BIGINT NOT NULL) " +
         "TBLPROPERTIES ('statscol'='cents')")
-      Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
         .writeTo(s"$cat.dim").append()
-      s.sql(s"CREATE TABLE $cat.fact (k BIGINT NOT NULL, qty BIGINT NOT NULL)")
-      Tables.lineitem(s, d).select(col("l_orderkey").as("k"),
+      scoped.sql(s"CREATE TABLE $cat.fact (k BIGINT NOT NULL, qty BIGINT NOT NULL)")
+      Tables.lineitem(scoped, d).select(col("l_orderkey").as("k"),
         round(col("l_quantity") * 100).cast("long").as("qty"))
         .writeTo(s"$cat.fact").append()
-      val stats = s.sql(s"CALL $cat.system.analyze('dim', 'k,cents')")
+      val stats = scoped.sql(s"CALL $cat.system.analyze('dim', 'k,cents')")
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       // the filter value: the first order's cents — deterministic
-      val minK = s.table(s"$cat.dim").agg(min("k")).head().getLong(0)
-      val cval = s.table(s"$cat.dim").filter(col("k") === minK)
+      val minK = scoped.table(s"$cat.dim").agg(min("k")).head().getLong(0)
+      val cval = scoped.table(s"$cat.dim").filter(col("k") === minK)
         .head().getLong(1)
       // the dim file is PROVABLY above the threshold; only a
       // stats-shrunk estimate may broadcast it
       val dimBytes = Snapshots.manifest(root.resolve("dim"),
         Snapshots.currentId(root.resolve("dim")).get).map(_.bytes).sum
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold",
+      scoped.conf.set("spark.sql.autoBroadcastJoinThreshold",
         math.max(4096L, dimBytes / 2).toString)
-      def q() = s.table(s"$cat.fact")
-        .join(s.table(s"$cat.dim").filter(col("cents") === cval), "k")
+      def q() = scoped.table(s"$cat.fact")
+        .join(scoped.table(s"$cat.dim").filter(col("cents") === cval), "k")
         .agg(count(lit(1)).as("n"), sum("qty").as("sum_qty"))
       def joins(p: org.apache.spark.sql.execution.SparkPlan, want: String): Int = {
         val here = p match {
@@ -3379,12 +3274,12 @@ object GraftCatalogQueries {
         }
         here + p.children.map(joins(_, want)).sum
       }
-      s.conf.set("spark.sql.cbo.enabled", "false")
+      scoped.conf.set("spark.sql.cbo.enabled", "false")
       val off = q()
       val offRow = off.collect().head
       require(joins(off.queryExecution.sparkPlan, "smj") > 0,
         s"bytes-only baseline unexpectedly broadcast:\n${off.queryExecution.sparkPlan}")
-      s.conf.set("spark.sql.cbo.enabled", "true")
+      scoped.conf.set("spark.sql.cbo.enabled", "true")
       val on = q()
       val onRow = on.collect().head
       require(joins(on.queryExecution.sparkPlan, "bhj") > 0,
@@ -3394,17 +3289,10 @@ object GraftCatalogQueries {
       val schema = StructType(Seq(StructField("n", LongType),
         StructField("sum_qty", LongType), StructField("ndv_k", LongType),
         StructField("ndv_cents", LongType), StructField("nulls_k", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(Seq(Row(
+      scoped.createDataFrame(scoped.sparkContext.parallelize(Seq(Row(
         onRow.getLong(0), onRow.getLong(1), stats("k")._1, stats("cents")._1,
         stats("k")._2)), 1), schema)
-    } finally {
-      prevCbo match {
-        case Some(v) => s.conf.set("spark.sql.cbo.enabled", v)
-        case None    => s.conf.unset("spark.sql.cbo.enabled")
-      }
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      rm(root)
-    }
+    } finally rm(root)
   }
 
   /** Query `catalog_wap`: WRITE-AUDIT-PUBLISH through the catalog, no
@@ -3420,51 +3308,51 @@ object GraftCatalogQueries {
     * pre-adoption snapshot still time-travels after the publish.
     */
   def catalogWap(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.t (k BIGINT NOT NULL, cents BIGINT NOT NULL)")
-      val src = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+      scoped.sql(s"CREATE TABLE $cat.t (k BIGINT NOT NULL, cents BIGINT NOT NULL)")
+      val src = Tables.orders(scoped, d).select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       src.filter(col("k") % 2 === 0).writeTo(s"$cat.t").append()
       val store = root.resolve("t")
       val base = Snapshots.currentId(store).get
-      val baseCount = s.table(s"$cat.t").count()
+      val baseCount = scoped.table(s"$cat.t").count()
 
       // ---- stage the release behind a branch ------------------------
-      s.sql(s"CALL $cat.system.create_branch('t', 'audit', $base)")
+      scoped.sql(s"CALL $cat.system.create_branch('t', 'audit', $base)")
       src.filter(col("k") % 2 === 1).writeTo(s"$cat.t")
         .option("branch", "audit").append()
-      require(s.table(s"$cat.t").count() == baseCount,
+      require(scoped.table(s"$cat.t").count() == baseCount,
         "staged branch rows leaked to _current readers before adoption")
       // ---- audit over the branch's WHOLE post-append view -----------
-      val audited = s.sql(s"SELECT * FROM $cat.t VERSION AS OF 'audit'")
+      val audited = scoped.sql(s"SELECT * FROM $cat.t VERSION AS OF 'audit'")
       require(audited.filter(col("cents") < 0).count() == 0, "audit failed")
       require(audited.count() > baseCount, "branch write landed nothing")
 
       // ---- a REJECTED audit: drop the ref, main never moved ---------
-      s.sql(s"CALL $cat.system.create_branch('t', 'bad', $base)")
-      s.range(0, 10).select((col("id") - 1000000L).as("k"), lit(-1L).as("cents"))
+      scoped.sql(s"CALL $cat.system.create_branch('t', 'bad', $base)")
+      scoped.range(0, 10).select((col("id") - 1000000L).as("k"), lit(-1L).as("cents"))
         .writeTo(s"$cat.t").option("branch", "bad").append()
-      val badN = s.sql(s"SELECT * FROM $cat.t VERSION AS OF 'bad'")
+      val badN = scoped.sql(s"SELECT * FROM $cat.t VERSION AS OF 'bad'")
         .filter(col("cents") < 0).count()
       require(badN == 10L, s"bad branch staged $badN negative rows")
-      s.sql(s"CALL $cat.system.drop_ref('t', 'bad')")
-      require(s.table(s"$cat.t").count() == baseCount,
+      scoped.sql(s"CALL $cat.system.drop_ref('t', 'bad')")
+      require(scoped.table(s"$cat.t").count() == baseCount,
         "rejected branch touched the main line")
 
       // ---- publish: one pointer rename ------------------------------
-      s.sql(s"CALL $cat.system.adopt_branch('t', 'audit')")
+      scoped.sql(s"CALL $cat.system.adopt_branch('t', 'audit')")
       def leg(name: String, df: org.apache.spark.sql.DataFrame) = {
         val r = df.agg(count(lit(1)).as("n"), sum("cents").as("sc")).head()
         Row(name, r.getLong(0), r.getLong(1))
       }
       val out = Seq(
-        leg("main", s.table(s"$cat.t")),
+        leg("main", scoped.table(s"$cat.t")),
         // the pre-adoption snapshot still time-travels
-        leg("base", s.sql(s"SELECT * FROM $cat.t VERSION AS OF $base")))
+        leg("base", scoped.sql(s"SELECT * FROM $cat.t VERSION AS OF $base")))
       val schema = StructType(Seq(StructField("leg", StringType),
         StructField("n", LongType), StructField("sum_cents", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(out, 1), schema)
+      scoped.createDataFrame(scoped.sparkContext.parallelize(out, 1), schema)
         .orderBy("leg")
     } finally rm(root)
   }
@@ -3495,13 +3383,13 @@ object GraftCatalogQueries {
     * sketch bounds riding as in-query gates.
     */
   def catalogAnalyzeIncr(s: SparkSession, d: String): DataFrame = {
-    val (cat, root) = freshCatalog(s)
+    val (scoped, cat, root) = freshCatalog(s)
     try {
-      s.sql(s"CREATE TABLE $cat.t (pk BIGINT NOT NULL, sk BIGINT NOT NULL)")
-      val src = Tables.lineitem(s, d).select(col("l_partkey").as("pk"),
+      scoped.sql(s"CREATE TABLE $cat.t (pk BIGINT NOT NULL, sk BIGINT NOT NULL)")
+      val src = Tables.lineitem(scoped, d).select(col("l_partkey").as("pk"),
         col("l_suppkey").as("sk"))
       src.filter(col("pk") % 2 === 0).repartition(2).writeTo(s"$cat.t").append()
-      s.sql(s"CALL $cat.system.analyze('t', 'pk,sk', 'sketch')").collect()
+      scoped.sql(s"CALL $cat.system.analyze('t', 'pk,sk', 'sketch')").collect()
       val store = root.resolve("t")
       val oldBytes = Snapshots.manifest(store, Snapshots.currentId(store).get)
         .map(_.bytes).sum
@@ -3513,18 +3401,18 @@ object GraftCatalogQueries {
           if (t.taskMetrics != null)
             read.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
       }
-      s.sparkContext.addSparkListener(listener)
+      scoped.sparkContext.addSparkListener(listener)
       val est = try {
-        val r = s.sql(s"CALL $cat.system.analyze('t', 'pk,sk', 'sketch')")
+        val r = scoped.sql(s"CALL $cat.system.analyze('t', 'pk,sk', 'sketch')")
           .collect().map(x => x.getString(0) -> (x.getLong(1), x.getLong(2))).toMap
-        org.apache.spark.sql.GraftBridge.drainListenerBus(s.sparkContext)
+        GraftBridge.drainListenerBus(scoped.sparkContext)
         r
-      } finally s.sparkContext.removeSparkListener(listener)
+      } finally scoped.sparkContext.removeSparkListener(listener)
       require(read.get() > 0 && read.get() < oldBytes,
         s"incremental re-analyze read ${read.get()} bytes vs pre-append " +
           s"table of $oldBytes — it rescanned old files")
       // exact truth, computed once, both the gate and the oracle output
-      val exact = s.table(s"$cat.t").agg(
+      val exact = scoped.table(s"$cat.t").agg(
         countDistinct("pk").as("ek"), countDistinct("sk").as("es")).head()
       val (ek, es) = (exact.getLong(0), exact.getLong(1))
       def within(a: Long, b: Long): Boolean = math.abs(a - b) <= b * 20 / 100
@@ -3533,7 +3421,7 @@ object GraftCatalogQueries {
       require(est("pk")._2 == 0L && est("sk")._2 == 0L, "phantom nulls")
       val schema = StructType(Seq(StructField("col_name", StringType),
         StructField("exact_ndv", LongType), StructField("nulls", LongType)))
-      s.createDataFrame(s.sparkContext.parallelize(
+      scoped.createDataFrame(scoped.sparkContext.parallelize(
         Seq(Row("pk", ek, 0L), Row("sk", es, 0L)), 1), schema).orderBy("col_name")
     } finally rm(root)
   }

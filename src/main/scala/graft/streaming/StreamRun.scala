@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Drives a REAL Structured Streaming execution over driver testdata and
@@ -47,27 +47,29 @@ object StreamRun {
     * LARGE state set SPARK_GRAFT_STREAM_STATE_PARTS to size state
     * volume / partition, exactly like any shuffle-partition choice —
     * the dial is the declared knob, the default is the small-state
-    * envelope. Set at stream BIRTH only; an existing checkpoint keeps
-    * the count it was born with (Spark's own contract).
+    * envelope. Applied at stream BIRTH only, through [[stateSession]];
+    * an existing checkpoint keeps the count it was born with (Spark's
+    * own contract).
     */
   private[graft] def statePartitions(s: SparkSession): String =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS",
       math.min(8, s.sparkContext.defaultParallelism).toString)
 
-  /** Run `body` (which STARTS streaming queries) with the birth-time
-    * state-partition count applied, restoring the session value after.
-    * StreamExecution clones the session conf at query start, so the
-    * narrow window covers exactly the queries `body` starts.
+  /** A session cloned from `s` whose `spark.sql.shuffle.partitions` is
+    * [[statePartitions]]: streams built on it are born with the bounded
+    * state-partition count, while the caller's session keeps its own
+    * value (two streams starting at once never see each other's).
     */
-  private[graft] def withStateParts[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, statePartitions(s))
-    try body finally s.conf.set(key, old)
+  private[graft] def stateSession(s: SparkSession): SparkSession = {
+    val scoped = GraftBridge.cloneSession(s)
+    scoped.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
+    scoped
   }
 
   /** Stage `input` as `nFiles` files, stream it through `transform` in
-    * Append mode, optionally flush with `sentinel`, return the sink.
+    * Append mode, optionally flush with `sentinel`, return the sink's
+    * rows as a frame on `s` (the memory-sink view lives and dies on the
+    * stream's own session).
     *
     * CONTRACT: all staged files are listed at once, and the file
     * source's batch order ties on same-millisecond mtimes (parallel
@@ -85,13 +87,12 @@ object StreamRun {
     val dir = Files.createTempDirectory("graft_stream_src").toString
     input.repartitionByRange(nFiles, col(tsCol))
       .write.mode("overwrite").parquet(dir)
-    val src = s.readStream.schema(input.schema)
+    val scoped = stateSession(s)
+    val src = scoped.readStream.schema(input.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val name = "graft_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = withStateParts(s) {
-      transform(src).writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-    }
+    val q = transform(src).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
     q.processAllAvailable()
     sentinel.foreach { extra =>
       extra.write.mode("append").parquet(dir)
@@ -101,7 +102,7 @@ object StreamRun {
       q.processAllAvailable()
     }
     q.stop(); q.awaitTermination()
-    s.table(name)
+    GraftBridge.ofRows(s, scoped.table(name).queryExecution.analyzed)
   }
 
   /** Like [[toSink]] but the stream lands in a caller-supplied
@@ -114,12 +115,10 @@ object StreamRun {
     val dir = Files.createTempDirectory("graft_stream_fb").toString
     input.repartitionByRange(nFiles, col(tsCol))
       .write.mode("overwrite").parquet(dir)
-    val src = s.readStream.schema(input.schema)
+    val src = stateSession(s).readStream.schema(input.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = withStateParts(s) {
-      transform(src).writeStream
-        .foreachBatch(sink).outputMode("append").start()
-    }
+    val q = transform(src).writeStream
+      .foreachBatch(sink).outputMode("append").start()
     q.processAllAvailable()
     q.stop(); q.awaitTermination()
   }
@@ -163,14 +162,13 @@ object StreamRun {
     // batch under a mid-span watermark silently late-drops a file's tail
     // (observed: a 7.5 h window band vanished at sf0.01). Feeding ONE file
     // per drain cycle puts arrival order under harness control.
+    val scoped = stateSession(s)
     def leg(files: Seq[java.nio.file.Path]): Unit = {
-      val q = withStateParts(s) {
-        transform(
-          s.readStream.schema(input.schema).option("maxFilesPerTrigger", 1)
-            .parquet(src.toString))
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-      }
+      val q = transform(
+        scoped.readStream.schema(input.schema).option("maxFilesPerTrigger", 1)
+          .parquet(src.toString))
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
       files.foreach { p =>
         Files.copy(p, src.resolve(p.getFileName.toString))
         q.processAllAvailable()

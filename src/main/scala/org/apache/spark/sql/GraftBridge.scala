@@ -12,6 +12,15 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A child session for library code that needs its own SQL conf,
+    * catalogs or temp views: it shares the SparkContext, cache and
+    * extensions, starts with a copy of the parent's conf, function
+    * registry and temp views, and nothing set on it reaches the parent.
+    * `cloneSession` is private[sql], hence here.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Column ⇄ catalyst Expression, for splicing a custom Expression into
     * an otherwise functions._-built tree (e.g. a per-gate bloom literal
     * that must NOT live in the session function registry). Same sanctioned

@@ -780,4 +780,25 @@ class GraftBucketedSpec extends AnyFunSuite {
       }
     } finally rm(root)
   }
+
+  test("catalog_spj and catalog_bucket stay exact running concurrently on one session") {
+    // Each query sets bucketing on and broadcast off for its own join;
+    // run side by side on ONE session, neither may see the other's
+    // settings (or a restore of them) mid-plan. The in-query
+    // `shuffles == 0` requires make any cross-talk throw.
+    val names = Seq("catalog_spj", "catalog_bucket")
+    def run(name: String) = graft.SparkEntry.queries(name)(s, TestSpark.sf).collect().toSeq
+    val serial = names.map(q => q -> run(q)).toMap
+    val pool = scala.concurrent.ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(names.size))
+    try {
+      val rounds = names.map(q => q -> scala.concurrent.Future(Seq.fill(3)(run(q)))(pool))
+      rounds.foreach { case (q, f) =>
+        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(10, "min"))
+          .zipWithIndex.foreach { case (rows, i) =>
+            assert(rows == serial(q), s"$q round ${i + 1} differs from its serial result")
+          }
+      }
+    } finally pool.shutdownNow()
+  }
 }
