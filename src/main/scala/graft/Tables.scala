@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Central table catalog over a scale-factor directory.
   *
@@ -19,8 +23,49 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `spark.read.parquet` of `<dir>/<name>.parquet` with the schema
+    * resolved up front ([[footerSchema]]), so building the frame starts
+    * no Spark job. Reads Spark would infer differently — schema merging
+    * on, summary files or partition directories present, no data file —
+    * keep the inferring read.
+    */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema a non-merging `spark.read.parquet(path)` infers, from ONE
+    * footer read on the driver: the path itself when it is a file, else
+    * its first visible data file by path — the file Spark's inference
+    * reads when no summary file exists — converted under the session's
+    * conf (`GraftParquetShim.readSchema`, so `nanosAsLong` and NTZ
+    * inference apply alike). None where inference would read otherwise.
+    */
+  private def footerSchema(s: SparkSession, path: String): Option[StructType] = {
+    if (s.sessionState.conf.isParquetSchemaMergingEnabled) return None
+    val conf = graft.etl.Snapshots.footerConf(s)
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) return None
+    val st = fs.getFileStatus(p)
+    val file =
+      if (!st.isDirectory) Some(st)
+      else {
+        val listed = fs.listStatus(p).toSeq
+        val visible = listed.filterNot { f =>
+          val n = f.getPath.getName
+          n.startsWith(".") || (n.startsWith("_") && !n.contains("=")) || n.endsWith("._COPYING_")
+        }
+        val summary = listed.exists(f => Set("_metadata", "_common_metadata")(f.getPath.getName))
+        if (summary || visible.exists(_.isDirectory)) None
+        else visible.sortBy(_.getPath.toString).headOption
+      }
+    file.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val footer = try new Footer(f.getPath, r.getFooter) finally r.close()
+      GraftParquetShim.readSchema(Seq(footer), s)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

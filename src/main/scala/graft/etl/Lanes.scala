@@ -20,12 +20,15 @@ object Lanes {
   val poolForFlow: Map[Int, String] = Map(
     2 -> "basic", 3 -> "high", 4 -> "highest", 5 -> "human_variation")
 
-  /** Run `body`'s Spark jobs inside the lane for `flow`. */
+  /** Run `body`'s Spark jobs inside the lane for `flow`, then put back
+    * the caller's pool (a lane nested in another returns to the outer one).
+    */
   def runInLane[T](s: SparkSession, flow: Int)(body: => T): T = {
     val sc = s.sparkContext
+    val outer = sc.getLocalProperty("spark.scheduler.pool")
     sc.setLocalProperty("spark.scheduler.pool", poolForFlow.getOrElse(flow, "basic"))
     try body
-    finally sc.setLocalProperty("spark.scheduler.pool", null)
+    finally sc.setLocalProperty("spark.scheduler.pool", outer)
   }
 
   /** A14 query (r5, oracle-checked): the lane ROUTING — every discovered

@@ -684,33 +684,39 @@ object Snapshots {
   private def substring_index_safe(c: org.apache.spark.sql.Column, prefix: String): org.apache.spark.sql.Column =
     substring(c, prefix.length + 1, Int.MaxValue)
 
-  /** The files a set of position-tombstone pair files NAME — the merge
-    * plan's hot/clear split key. One small Spark job per DISTINCT pair
-    * file, memoized forever: pair files are immutable, so a read-hot
-    * table plans against the cache instead of re-collecting per
-    * statement.
+  /** Per-store memo of position-tombstone bitmaps: store → delete-file
+    * relPath → that file's per-data-file bitmaps, for the delete files
+    * the store's last driver-side merge applied. Each merge reuses the
+    * entries of files still present, converts the missing ones, and
+    * replaces the slot with exactly its own delete-file set (the
+    * [[tombRangeCache]] discipline), so a slot never outgrows the
+    * manifest it came from: compaction drops the files it retired.
     */
-  private val posBitmapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Array[Byte]]]()
+  private val posBitmapCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[String, Map[String, Array[Byte]]]]()
 
-  /** Per-file ordinal BITMAPS of one immutable position-tombstone file,
-    * memoized forever. Two wire shapes, one result: the compressed
-    * (`__file`, `__bitmap`) rows collect directly; a PRE-BITMAP pair
-    * file (`__file`, `__pos`) converts through the same Roaring
-    * aggregate on first touch — old tombstones stay readable with no
-    * migration step, they just pay their conversion once per JVM.
+  /** The delete-file relPaths [[posBitmapCache]] holds for `root`. */
+  private[graft] def posBitmapsCached(root: Path): Set[String] =
+    Option(posBitmapCache.get(root.toAbsolutePath.normalize.toString))
+      .fold(Set.empty[String])(_.keySet)
+
+  /** Per-file ordinal BITMAPS of one immutable position-tombstone file.
+    * Two wire shapes, one result: the compressed (`__file`, `__bitmap`)
+    * rows collect directly; a PRE-BITMAP pair file (`__file`, `__pos`)
+    * converts through the same Roaring aggregate on first touch — old
+    * tombstones stay readable with no migration step, they just pay
+    * their conversion once per cached slot.
     */
   private def posFileBitmaps(s: SparkSession, root: Path,
-                             e: ManifestEntry): Map[String, Array[Byte]] =
-    posBitmapCache.computeIfAbsent(root.resolve(e.relPath).toString, { p =>
-      val df = s.read.parquet(p)
-      val rows =
-        if (df.columns.contains("__bitmap")) df.collect()
-        else df.groupBy("__file")
-          .agg(graft.functions.BitmapBuild.column(col("__pos")).as("__bitmap"))
-          .collect()
-      rows.map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-    })
+                             e: ManifestEntry): Map[String, Array[Byte]] = {
+    val df = s.read.parquet(root.resolve(e.relPath).toString)
+    val rows =
+      if (df.columns.contains("__bitmap")) df.collect()
+      else df.groupBy("__file")
+        .agg(graft.functions.BitmapBuild.column(col("__pos")).as("__bitmap"))
+        .collect()
+    rows.map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+  }
 
   /** Manifest-proven tombstone size above which the per-file bitmap
     * merge moves EXECUTOR-side ([[posBitmapsDistributed]]): below it the
@@ -724,15 +730,24 @@ object Snapshots {
     * names OR together (two purges may kill different rows of one
     * file). Driver memory is O(FINAL bitmap bytes) — the broadcast
     * probe's irreducible cost: small sets fold on the driver (memoized
-    * per immutable file); a set whose manifest-proven bytes exceed
+    * per immutable file in the store's [[posBitmapCache]] slot, which
+    * afterwards holds `dels` plus the prior entries named in `live`, the
+    * rest of the delete set the same read applies); a set whose
+    * manifest-proven bytes exceed
     * [[PosMergeDriverBytes]] unions in the executors and the driver
     * collects only the merged result.
     */
-  private[graft] def posBitmaps(s: SparkSession, root: Path,
-                                dels: Seq[ManifestEntry]): Map[String, Array[Byte]] =
+  private[graft] def posBitmaps(s: SparkSession, root: Path, dels: Seq[ManifestEntry],
+                                live: Seq[ManifestEntry] = Nil): Map[String, Array[Byte]] =
     if (dels.map(_.bytes).sum > PosMergeDriverBytes) posBitmapsDistributed(s, root, dels)
-    else dels.map(posFileBitmaps(s, root, _))
-      .foldLeft(Map.empty[String, Array[Byte]]) { (acc, m) =>
+    else {
+      val slot = root.toAbsolutePath.normalize.toString
+      val prior = Option(posBitmapCache.get(slot)).getOrElse(Map.empty)
+      val mine = dels.distinctBy(_.relPath)
+        .map(e => e.relPath -> prior.getOrElse(e.relPath, posFileBitmaps(s, root, e))).toMap
+      val keep = live.map(_.relPath).toSet
+      posBitmapCache.put(slot, prior.filter { case (p, _) => keep(p) } ++ mine)
+      mine.values.foldLeft(Map.empty[String, Array[Byte]]) { (acc, m) =>
         m.foldLeft(acc) { case (a, (f, b)) =>
           a.updatedWith(f) {
             case Some(prev) => Some(graft.functions.PosBitmaps.union(prev, b))
@@ -740,6 +755,7 @@ object Snapshots {
           }
         }
       }
+    }
 
   /** Single-slot per-store memo of the DISTRIBUTED merge result, keyed
     * by the exact delete-file set (relPath+md5 — immutable files, so
@@ -811,11 +827,6 @@ object Snapshots {
       .collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
   }
-
-  private def posNamedFiles(s: SparkSession, root: Path,
-                            dels: Seq[ManifestEntry]): Set[String] =
-    dels.map(posFileBitmaps(s, root, _).keySet)
-      .foldLeft(Set.empty[String])(_ ++ _)
 
   /** The store-root prefix of `_metadata.file_path` values — hadoop Path
     * rendering (what the file source emits), normalized to EXACTLY one
@@ -2939,14 +2950,17 @@ object Snapshots {
         // re-name dead rows — its scan is raw by design); then keep
         // exactly the window-bitmap hits. Both probes are broadcast
         // bitmap tests — no anti/semi joins.
+        val priorDels = beforeAll.filter(isDelete)
+        // both sets stay in the store's bitmap slot: this read applies both
+        def bitmaps(dels2: Seq[ManifestEntry]) = posBitmaps(s, root, dels2, priorDels ++ windowDels)
         def deleted(dels2: Seq[ManifestEntry]): org.apache.spark.sql.Column = {
-          val bc = s.sparkContext.broadcast(posBitmaps(s, root, dels2))
+          val bc = s.sparkContext.broadcast(bitmaps(dels2))
           org.apache.spark.sql.GraftBridge.column(
             graft.functions.PosDeleted(
               org.apache.spark.sql.GraftBridge.expression(col("__file")),
               org.apache.spark.sql.GraftBridge.expression(col("__pos")), bc))
         }
-        val named = posNamedFiles(s, root, windowDels)
+        val named = bitmaps(windowDels).keySet
         val targets = beforeAll.filterNot(isDelete).filter(e => named(e.relPath))
         if (targets.isEmpty) None
         else {
@@ -2956,7 +2970,6 @@ object Snapshots {
               substring(col("_metadata.file_path"), prefix.length + 1, Int.MaxValue)
                 .as("__file"),
               col("_metadata.row_index").as("__pos"))
-          val priorDels = beforeAll.filter(isDelete)
           val visible =
             if (priorDels.isEmpty) withPos
             else withPos.filter(!deleted(priorDels))

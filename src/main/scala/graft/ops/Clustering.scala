@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** D14: duplicate-group resolution — the step the reference pipeline (and
@@ -11,21 +12,28 @@ import org.apache.spark.storage.StorageLevel
   * the pair list into connected components so each dup group gets one
   * canonical representative.
   *
-  * Algorithm: iterative min-label propagation with per-round pointer
-  * jumping. Every vertex starts labelled with itself; each round every
-  * vertex takes the min label over itself and its neighbours, then follows
-  * its label one extra hop (comp := label[comp]) — the jump compounds
-  * progress geometrically, so rounds are O(log diameter) rather than
-  * O(diameter) (the same doubling idea as Shiloach-Vishkin / the
-  * large-star contraction of Kiveris et al.). Converged when no label
-  * changes. Per round the work is one shuffle join (edges ⋈ labels), one
-  * shuffle min-agg, and one self-join on the (shrinking-entropy) label
-  * relation, all keyed on the vertex id; the edge list is cached once and
-  * `localCheckpoint` truncates the lineage each round so the plan doesn't
-  * grow with iteration count. LSH dedup graphs (cliques/stars from
-  * Dedup.cappedPairs) converge in 2-4 rounds; the default 25-round cap
-  * covers diameters up to ~2^25 and non-convergence throws rather than
-  * returning partial labels.
+  * Size gate: the edge list is materialized once and counted. A list of
+  * at most [[DriverEdges]] edges (64 MiB of (a, b) long pairs, the
+  * `Snapshots.PosMergeDriverBytes` budget) is collected and labelled by
+  * union-by-min union-find on the driver — two scans of the cached list
+  * instead of several Spark jobs per round — and the result is a frame
+  * over driver-built rows that leaves no checkpoint blocks behind. Every
+  * LSH dedup graph of a gate corpus is far below the cap.
+  *
+  * Above the cap, [[distributedComponents]] runs iterative min-label
+  * propagation with per-round pointer jumping. Every vertex starts
+  * labelled with itself; each round every vertex takes the min label over
+  * itself and its neighbours, then follows its label one extra hop
+  * (comp := label[comp]) — the jump compounds progress geometrically, so
+  * rounds are O(log diameter) rather than O(diameter) (the same doubling
+  * idea as Shiloach-Vishkin / the large-star contraction of Kiveris et
+  * al.). Converged when no label changes. Per round the work is one
+  * shuffle join (edges ⋈ labels), one shuffle min-agg, and one self-join
+  * on the (shrinking-entropy) label relation, all keyed on the vertex id;
+  * the edge list is cached once and `localCheckpoint` truncates the
+  * lineage each round so the plan doesn't grow with iteration count. The
+  * default 25-round cap covers diameters up to ~2^25 and non-convergence
+  * throws rather than returning partial labels.
   */
 object Clustering {
 
@@ -43,11 +51,101 @@ object Clustering {
       case _ => ()
     }
 
-  /** Connected components of the undirected graph given by `edges` (cols
-    * `a`, `b`). Returns (id, comp) for every vertex that appears in an
-    * edge, where comp = min vertex id reachable.
+  /** Largest edge list, in edges, that finishes on the driver: 64 MiB of
+    * collected (a, b) long pairs. Union-find adds a sorted endpoint copy,
+    * one parent int and one label long per vertex, so the driver's
+    * working set stays a small multiple of that budget.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+  private val DriverEdges: Long = (64L << 20) / 16
+
+  /** Rows per partition of a driver-built frame ([[driverFrame]]). */
+  private val FrameChunk = 1 << 16
+
+  /** Connected components of the undirected graph given by `edges` (cols
+    * `a`, `b`, long vertex ids). Returns (id, comp) for every vertex that
+    * appears in an edge, where comp = min vertex id reachable.
+    */
+  def connectedComponents(edges: DataFrame): DataFrame =
+    connectedComponents(edges, DriverEdges)
+
+  /** [[connectedComponents]] with the driver gate at `cap` edges. */
+  private[graft] def connectedComponents(edges: DataFrame, cap: Long): DataFrame = {
+    val s = edges.sparkSession
+    labelled(edges, cap) { (ids, root) =>
+      driverFrame(s, Seq("id", "comp"), Seq(ids, root.map(ids(_))))
+    }(distributedComponents(_))
+  }
+
+  /** Materialize `edges` (cols `a`, `b`) ONCE and label its components.
+    * A list of at most `cap` edges is collected and labelled by
+    * [[unionFind]] on the driver, and `small` gets (ids ascending, root
+    * index per id); a larger one goes to `large` as the materialized
+    * list. The list is unpersisted before returning, so `large` must
+    * materialize what it returns (the distributed loop checkpoints its
+    * result). Count and collect are scans of the cached blocks.
+    */
+  private def labelled[T](edges: DataFrame, cap: Long)(
+      small: (Array[Long], Array[Int]) => T)(large: DataFrame => T): T = {
+    val e = edges.select(col("a"), col("b")).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rows = e.queryExecution.toRdd
+      if (rows.count() <= cap) {
+        val packed = rows.mapPartitions { it =>
+          val buf = Array.newBuilder[Long]
+          it.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
+          Iterator.single(buf.result())
+        }.collect()
+        val (ids, root) = unionFind(packed)
+        small(ids, root)
+      } else large(e)
+    } finally e.unpersist()
+  }
+
+  /** Union-by-min union-find over packed (a, b) pairs: returns the
+    * distinct vertex ids ascending and, per id, the index of its
+    * component's min id. Ids are sorted first, so an index orders like
+    * its id and linking the larger root under the smaller keeps every
+    * root its set's min; path halving keeps finds near-constant.
+    */
+  private def unionFind(packed: Array[Array[Long]]): (Array[Long], Array[Int]) = {
+    val ends = Array.concat(packed.toIndexedSeq: _*)
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    sorted.indices.foreach { i =>
+      if (i == 0 || sorted(i) != sorted(i - 1)) { sorted(n) = sorted(i); n += 1 }
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var v = x
+      while (parent(v) != v) { parent(v) = parent(parent(v)); v = parent(v) }
+      v
+    }
+    def root(id: Long): Int = find(java.util.Arrays.binarySearch(ids, id))
+    for (i <- ends.indices by 2) {
+      val (ra, rb) = (root(ends(i)), root(ends(i + 1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    (ids, Array.tabulate(n)(find))
+  }
+
+  /** A frame of non-null long columns built on the driver, shipped as
+    * chunks of [[FrameChunk]] rows (one per partition) so no Row exists
+    * on the driver and no block is persisted. Row order is array order.
+    */
+  private def driverFrame(s: SparkSession, names: Seq[String], cols: Seq[Array[Long]]): DataFrame = {
+    val chunks = (0 until cols.head.length by FrameChunk)
+      .map(i => cols.map(_.slice(i, i + FrameChunk)))
+    val rows = s.sparkContext.parallelize(chunks, math.max(1, chunks.size))
+      .flatMap(c => c.head.indices.iterator.map(j => Row.fromSeq(c.map(_(j)))))
+    s.createDataFrame(rows, StructType(names.map(StructField(_, LongType, nullable = false))))
+  }
+
+  /** The distributed min-label loop (see the object scaladoc) over any
+    * edge list; [[connectedComponents]] runs it above the driver cap.
+    */
+  private[graft] def distributedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val und = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
@@ -157,26 +255,6 @@ object Clustering {
     relabeled.unionByName(fresh)
   }
 
-  /** D14 query: dup groups over the union of exact-dup pairs (normalized
-    * content hash) and verified n-gram-jaccard near-dup pairs. Output one
-    * row per grouped doc: (doc_id, comp = min id in group, group_n).
-    *
-    * The jaccard stage runs on RAW-text representatives only: byte-equal
-    * texts have identical length bands AND identical shingle sets, so a
-    * copy's near-dup link is implied by rep—rep link + exact edges and
-    * the connected components are provably unchanged — while the
-    * within-band quadratic verify shrinks from (copies·uniques)² to
-    * uniques² (the replicated 10× stress: 100×). Two subtleties, both
-    * caught by the sf0.1 oracle run: the collapse key must be the RAW
-    * text (a whitespace/case variant keeper can sit in a different length
-    * band than its members), and the representative must inherit EVERY
-    * lang label of its raw group — the corpus carries byte-identical
-    * texts under different langs, and banding keys on lang, so a
-    * single-label rep would lose its twins' cross-lang candidates. With
-    * one rep row per (raw text, lang), every band input of every member
-    * (lang, n_chars, shingle set) survives the collapse and the
-    * components are exactly those of the full edge set.
-    */
   /** E6/D14b: best-representative selection — the step AFTER group
     * resolution in a real curation pipeline: instead of keeping the
     * min-id doc of each dup group, keep the HIGHEST-QUALITY one
@@ -242,43 +320,68 @@ object Clustering {
     graphRankOn(Dedup.bandedCandidates(
       Tables.documents(s, d).select("doc_id", "lang", "n_chars")).localCheckpoint())
 
+  /** D14 query: dup groups over the union of exact-dup pairs (normalized
+    * content hash) and verified n-gram-jaccard near-dup pairs. Output one
+    * row per grouped doc: (doc_id, comp = min id in group, group_n).
+    *
+    * The jaccard stage runs on RAW-text representatives only: byte-equal
+    * texts have identical length bands AND identical shingle sets, so a
+    * copy's near-dup link is implied by rep—rep link + exact edges and
+    * the connected components are provably unchanged — while the
+    * within-band quadratic verify shrinks from (copies·uniques)² to
+    * uniques² (the replicated 10× stress: 100×). Two subtleties, both
+    * caught by the sf0.1 oracle run: the collapse key must be the RAW
+    * text (a whitespace/case variant keeper can sit in a different length
+    * band than its members), and the representative must inherit EVERY
+    * lang label of its raw group — the corpus carries byte-identical
+    * texts under different langs, and banding keys on lang, so a
+    * single-label rep would lose its twins' cross-lang candidates. With
+    * one rep row per (raw text, lang), every band input of every member
+    * (lang, n_chars, shingle set) survives the collapse and the
+    * components are exactly those of the full edge set.
+    */
   def dedupGroups(s: SparkSession, d: String): DataFrame = {
     // fanOut: both normalization hashes (md5 over regexp-normalized full
     // text) are computed map-side before any exchange — keep that CPU
     // off the input split count (identity at real split counts)
     val docs = Tables.fanOut(Tables.documents(s, d))
-    // Shuffle KEYS, not payloads (guide §2.3): the old form ran two
-    // windows and a distinct over rows CARRYING the full text — three
-    // corpus-payload shuffles to learn facts that depend only on
-    // (doc_id, lang, two 128-bit content hashes). `slim` computes both
-    // hashes in one map pass and is materialized once; every grouping
-    // below moves ~50-byte rows. The text itself is re-attached ONLY
-    // for the representatives, via a join the planner can broadcast
-    // (reps ≪ corpus), so at any scale the payload crosses the wire at
-    // most once here instead of three times.
+    // Shuffle KEYS, not payloads (guide §2.3): every grouping below moves
+    // ~50-byte (doc_id, lang, hash) rows, never the text. `slim` computes
+    // both hashes in one map pass and both keepers as windows over them —
+    // `keeper`, the min doc_id of each normalized-text group, and `rep`,
+    // the min doc_id of each byte-identical group — and is materialized
+    // once. The text is re-attached ONLY for the representatives, via a
+    // join the planner can broadcast (reps ≪ corpus), so at any scale the
+    // payload crosses the wire at most once here.
     val slim = docs
       .select(col("doc_id"), col("lang"),
         md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("h1"),
         md5(col("text")).as("h2"))
+      .select(col("doc_id"), col("lang"),
+        min("doc_id").over(Window.partitionBy("h1")).as("keeper"),
+        min("doc_id").over(Window.partitionBy("h2")).as("rep"))
       .localCheckpoint()
-    val k1 = slim.groupBy("h1").agg(min("doc_id").as("keeper"))
-    val exactPairs = slim.join(k1, "h1").filter(col("doc_id") =!= col("keeper"))
+    val exactPairs = slim.filter(col("doc_id") =!= col("keeper"))
       .select(col("keeper").as("a"), col("doc_id").as("b"))
-    // one row per (raw text, lang), exactly as before: the rep is the
-    // min doc_id of its byte-identical group and inherits EVERY lang
-    // label the group carries (banding keys on lang — see scaladoc)
-    val k2 = slim.groupBy("h2").agg(min("doc_id").as("rep"))
-    val repLang = slim.select("h2", "lang").distinct()
-      .join(k2, "h2")
-      .select(col("rep").as("doc_id"), col("lang"))
-    val rawReps = repLang
+    // one row per (raw text, lang): the rep inherits EVERY lang label its
+    // byte-identical group carries (banding keys on lang — see scaladoc)
+    val rawReps = slim.select(col("rep").as("doc_id"), col("lang")).distinct()
       .join(docs.select("doc_id", "n_chars", "text"), "doc_id")
       .select("doc_id", "lang", "n_chars", "text")
-    val jaccPairs = Dedup.ngramJaccardOn(rawReps).select("a", "b")
-    val edges = exactPairs.union(jaccPairs).distinct()
-    connectedComponents(edges)
-      .withColumn("group_n", count(lit(1)).over(Window.partitionBy("comp")))
-      .select(col("id").as("doc_id"), col("comp"), col("group_n"))
-      .orderBy("doc_id")
+    // no distinct and no sort: both component paths take the list as a
+    // multiset (the distributed loop dedups its symmetric edges itself)
+    val edges = exactPairs.union(Dedup.ngramJaccardPairs(rawReps).select("a", "b"))
+    // neither result reads `slim`: both paths materialize their own labels
+    try labelled(edges, DriverEdges) { (ids, root) =>
+      val size = new Array[Long](ids.length)
+      root.foreach(r => size(r) += 1)
+      driverFrame(s, Seq("doc_id", "comp", "group_n"),
+        Seq(ids, root.map(ids(_)), root.map(size(_))))
+    } { e =>
+      distributedComponents(e)
+        .withColumn("group_n", count(lit(1)).over(Window.partitionBy("comp")))
+        .select(col("id").as("doc_id"), col("comp"), col("group_n"))
+        .orderBy("doc_id")
+    } finally unpersistCheckpoint(slim)
   }
 }

@@ -552,10 +552,17 @@ object Dedup {
     ngramJaccardOn(Tables.documents(s, d))
 
   /** Same banded exact-jaccard, over an arbitrary (doc_id, lang, n_chars,
-    * text) relation — lets callers pre-collapse exact duplicates so the
-    * within-band quadratic verify runs on unique texts only.
+    * text) relation, ordered by (a, b).
     */
-  def ngramJaccardOn(documents: DataFrame): DataFrame = {
+  def ngramJaccardOn(documents: DataFrame): DataFrame =
+    ngramJaccardPairs(documents).orderBy("a", "b")
+
+  /** [[ngramJaccardOn]]'s pairs in no particular order, for callers that
+    * consume them as a set — lets them pre-collapse exact duplicates so
+    * the within-band quadratic verify runs on unique texts only, and pay
+    * no range sort.
+    */
+  def ngramJaccardPairs(documents: DataFrame): DataFrame = {
     val docs = withShingles(documents)
     val cands = bandedCandidates(docs)
     val sh = docs.select(col("doc_id"), col("sh"))
@@ -566,6 +573,5 @@ object Dedup {
         size(array_intersect(col("sh_a"), col("sh_b"))).as("inter_n"),
         size(array_union(col("sh_a"), col("sh_b"))).as("union_n"))
       .filter(col("inter_n") * 2 >= col("union_n"))
-      .orderBy("a", "b")
   }
 }

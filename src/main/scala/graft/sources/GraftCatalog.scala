@@ -889,7 +889,7 @@ object GraftCatalog {
       Map(MetaKey -> markerBody(sch, prs))
     }
 
-  private[sources] def rmTree(dir: JPath): Unit = {
+  private[graft] def rmTree(dir: JPath): Unit = {
     val walk = JFiles.walk(dir)
     try walk.iterator().asScala.toSeq.reverse.foreach(JFiles.deleteIfExists(_))
     finally walk.close()

@@ -84,25 +84,29 @@ object StreamRun {
   def toSink(s: SparkSession, input: DataFrame, tsCol: String, nFiles: Int,
              transform: DataFrame => DataFrame,
              sentinel: Option[DataFrame] = None): DataFrame = {
-    val dir = Files.createTempDirectory("graft_stream_src").toString
-    input.repartitionByRange(nFiles, col(tsCol))
-      .write.mode("overwrite").parquet(dir)
-    val scoped = stateSession(s)
-    val src = scoped.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val name = "graft_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = transform(src).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    q.processAllAvailable()
-    sentinel.foreach { extra =>
-      extra.write.mode("append").parquet(dir)
-      // the sentinel batch advances the watermark; Spark then runs the
-      // extra no-data batch that evicts/emits closed state, and
-      // processAllAvailable blocks until it has
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    GraftBridge.ofRows(s, scoped.table(name).queryExecution.analyzed)
+    val dir = Files.createTempDirectory("graft_stream_src")
+    try {
+      input.repartitionByRange(nFiles, col(tsCol))
+        .write.mode("overwrite").parquet(dir.toString)
+      val scoped = stateSession(s)
+      val src = scoped.readStream.schema(input.schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val name = "graft_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+      val q = transform(src).writeStream
+        .format("memory").queryName(name).outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        sentinel.foreach { extra =>
+          extra.write.mode("append").parquet(dir.toString)
+          // the sentinel batch advances the watermark; Spark then runs the
+          // extra no-data batch that evicts/emits closed state, and
+          // processAllAvailable blocks until it has
+          q.processAllAvailable()
+        }
+      } finally { q.stop(); q.awaitTermination() }
+      // the rows live in the memory sink: nothing reads `dir` after this
+      GraftBridge.ofRows(s, scoped.table(name).queryExecution.analyzed)
+    } finally graft.sources.GraftCatalog.rmTree(dir)
   }
 
   /** Like [[toSink]] but the stream lands in a caller-supplied
@@ -112,15 +116,17 @@ object StreamRun {
   def toForeachBatch(s: SparkSession, input: DataFrame, tsCol: String, nFiles: Int,
                      transform: DataFrame => DataFrame,
                      sink: (DataFrame, Long) => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft_stream_fb").toString
-    input.repartitionByRange(nFiles, col(tsCol))
-      .write.mode("overwrite").parquet(dir)
-    val src = stateSession(s).readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = transform(src).writeStream
-      .foreachBatch(sink).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
+    val dir = Files.createTempDirectory("graft_stream_fb")
+    try {
+      input.repartitionByRange(nFiles, col(tsCol))
+        .write.mode("overwrite").parquet(dir.toString)
+      val src = stateSession(s).readStream.schema(input.schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val q = transform(src).writeStream
+        .foreachBatch(sink).outputMode("append").start()
+      try q.processAllAvailable()
+      finally { q.stop(); q.awaitTermination() }
+    } finally graft.sources.GraftCatalog.rmTree(dir)
   }
 
   /** Run `transform` through a CHECKPOINT RESTART into an exactly-once

@@ -18,4 +18,16 @@ class LanesSpec extends AnyFunSuite {
       assert(s.sparkContext.getLocalProperty("spark.scheduler.pool") == "basic")
     }
   }
+
+  test("a nested lane restores the enclosing lane's pool, not the default") {
+    val s = TestSpark.spark
+    val pool = "spark.scheduler.pool"
+    Lanes.runInLane(s, flow = 2) {
+      Lanes.runInLane(s, flow = 4) {
+        assert(s.sparkContext.getLocalProperty(pool) == "highest")
+      }
+      assert(s.sparkContext.getLocalProperty(pool) == "basic")
+    }
+    assert(s.sparkContext.getLocalProperty(pool) == null)
+  }
 }

@@ -5,9 +5,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property check for the iterative min-label CC against a reference
-  * union-find on arbitrary random graphs — the distributed algorithm's
-  * pointer-jumping/convergence logic is the most intricate control flow
+/** Property check for both connected-components paths (driver union-find
+  * at or below the cap, the iterative min-label loop above it) against a
+  * reference union-find on arbitrary random graphs — the distributed
+  * algorithm's pointer-jumping/convergence logic is the most intricate control flow
   * in the library, and the hand-picked ClusteringSpec shapes (chains,
   * stars, merges) can't cover the odd topologies a real candidate-pair
   * graph produces (overlapping cliques, bridges, self-loops, dup edges).
@@ -46,14 +47,37 @@ class ClusteringPropSpec extends AnyFunSuite {
     } yield (a.toLong, b.toLong))
   } yield (n, edges)
 
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def graph(seed: Long): (Int, List[(Long, Long)]) =
+    genGraph.apply(Gen.Parameters.default, Seed(seed)).get
+
   test("connectedComponents equals union-find on random graphs") {
     val sq = s; import sq.implicits._
     (1 to 12).foreach { i =>
-      val (n, edges) = genGraph.apply(Gen.Parameters.default, Seed(i.toLong)).get
-      val got = Clustering.connectedComponents(edges.toDF("a", "b")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (n, edges) = graph(i.toLong)
+      val df = edges.toDF("a", "b")
       val want = unionFind(n, edges)
-      assert(got == want, s"seed $i: edges=$edges")
+      assert(labels(Clustering.connectedComponents(df)) == want, s"seed $i (dispatch): edges=$edges")
+      assert(labels(Clustering.distributedComponents(df)) == want, s"seed $i (loop): edges=$edges")
     }
+  }
+
+  test("the driver cap is inclusive: at the cap the driver labels, one edge over it the loop does") {
+    val sq = s; import sq.implicits._
+    val (n, edges) = graph(1L)
+    val df = edges.toDF("a", "b")
+    val want = unionFind(n, edges)
+    def persisted(): Set[Int] = s.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    val atCap = Clustering.connectedComponents(df, cap = edges.size.toLong)
+    // the driver path leaves no checkpoint or cache blocks behind
+    assert((persisted() -- before).isEmpty)
+    assert(labels(atCap) == want)
+    val overCap = Clustering.connectedComponents(df, cap = edges.size - 1L)
+    // the loop's result is its one local checkpoint
+    assert((persisted() -- before).size == 1)
+    assert(labels(overCap) == want)
   }
 }

@@ -29,12 +29,11 @@ class ClusteringSpec extends AnyFunSuite {
     assert(labels.keySet == Set(1L, 2L, 5L, 6L, 7L, 8L))
   }
 
-  test("dedupGroups keeps near-dup links reachable only through a raw twin's lang") {
-    import org.apache.spark.sql.functions._
+  /** docs 0 and 1 are byte-identical but labelled zh/en; doc 2 is a
+    * near-dup that can only band-pair under lang=en. Returns the dir.
+    */
+  private lazy val twinCorpus: String = {
     import s.implicits._
-    // docs 0 and 1 are byte-identical but labelled zh/en; doc 2 is a near-dup
-    // that can only band-pair under lang=en — the jaccard rep (doc 0, zh)
-    // must inherit doc 1's en label or the group splits (sf0.1 regression)
     val base = (0 until 12).map(i => s"word$i").mkString(" ")
     val near = base.replace("word5", "changed")
     val docs = Seq(
@@ -44,9 +43,35 @@ class ClusteringSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "n_chars", "text")
     val tmp = java.nio.file.Files.createTempDirectory("dg").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = Clustering.dedupGroups(s, tmp).collect()
+    tmp
+  }
+
+  test("dedupGroups keeps near-dup links reachable only through a raw twin's lang") {
+    // the jaccard rep (doc 0, zh) must inherit doc 1's en label or the
+    // group splits (sf0.1 regression)
+    val out = Clustering.dedupGroups(s, twinCorpus).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq((0L, 0L, 3L), (1L, 0L, 3L), (2L, 0L, 3L)), out.toSeq.toString)
+  }
+
+  test("dedupGroups runs at most 18 Spark jobs on a small corpus and keeps no blocks") {
+    val dir = twinCorpus
+    val persisted = s.sparkContext.getPersistentRDDs.keySet.toSet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(s.sparkContext)
+    s.sparkContext.addSparkListener(listener)
+    try {
+      Clustering.dedupGroups(s, dir).collect()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(s.sparkContext)
+    } finally s.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() <= 18, s"dedupGroups ran ${jobs.get()} jobs")
+    // below the cap the result is driver-built: every checkpoint and
+    // cache block the pass made is released
+    assert((s.sparkContext.getPersistentRDDs.keySet.toSet -- persisted).isEmpty)
   }
 
   test("iteration checkpoint blocks are freed, not accumulated") {
@@ -56,7 +81,7 @@ class ClusteringSpec extends AnyFunSuite {
     // which localCheckpoints twice — all of those blocks must be gone
     // (Dataset.unpersist alone would silently leak them; see
     // Clustering.unpersistCheckpoint)
-    val labels = Clustering.connectedComponents((0L until 19L).map(i => (i, i + 1)).toDF("a", "b"))
+    val labels = Clustering.distributedComponents((0L until 19L).map(i => (i, i + 1)).toDF("a", "b"))
     labels.count()
     val after = s.sparkContext.getPersistentRDDs.size
     // only the returned result's own checkpoint may remain
@@ -87,8 +112,10 @@ class ClusteringSpec extends AnyFunSuite {
 
   test("long path converges within the iteration cap") {
     // path 0-1-2-...-19: worst case for label propagation (diameter 19);
-    // label flows one hop per round, must still converge under maxIter=25
-    val labels = cc((0L until 19L).map(i => (i, i + 1)))
+    // the distributed loop must still converge under maxIter=25
+    import s.implicits._
+    val labels = Clustering.distributedComponents((0L until 19L).map(i => (i, i + 1)).toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.values.toSet == Set(0L))
     assert(labels.size == 20)
   }

@@ -130,6 +130,26 @@ class GraftPosDeleteSpec extends AnyFunSuite {
     } finally rm(root)
   }
 
+  test("the bitmap cache holds only the live delete set across deletes and compactions") {
+    val (cat, root) = fresh()
+    try {
+      val t = mk(cat)
+      val store = root.resolve("t")
+      def livePos(): Set[String] = Snapshots.manifest(store, Snapshots.currentId(store).get)
+        .filter(Snapshots.isPosDelete).map(_.relPath).toSet
+      (0 until 2).foreach { round =>
+        Seq(1, 2).foreach { k =>
+          s.sql(s"DELETE FROM $t WHERE v = ${10 * round + k}")
+          assert(s.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 1000 - 10 * (2 * round + k))
+          val (cached, live) = (Snapshots.posBitmapsCached(store), livePos())
+          assert(cached.nonEmpty && cached.subsetOf(live),
+            s"round $round delete $k: cached $cached, live $live")
+        }
+        s.sql(s"CALL $cat.system.compact('t', 4)")
+      }
+    } finally rm(root)
+  }
+
   test("position deletes compose with PARTITIONED BY") {
     val (cat, root) = fresh()
     try {

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** C3: the streaming pipeline runs the same logic as the batch-checked
   * queries — MemoryStream in, watermarked transforms, memory sink out.
@@ -767,5 +768,28 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == batch,
       s"exactly-once across the restart broken: ${got.size} vs ${batch.size} windows")
+  }
+
+  test("toSink and toForeachBatch delete their staged input once the query stops") {
+    import s.implicits._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def staged(): Int = {
+      val st = java.nio.file.Files.list(tmp)
+      try st.iterator().asScala.count { p =>
+        val n = p.getFileName.toString
+        n.startsWith("graft_stream_src") || n.startsWith("graft_stream_fb")
+      } finally st.close()
+    }
+    val input = Seq((ts("2024-01-01 10:00:00"), 1L), (ts("2024-01-01 11:00:00"), 2L))
+      .toDF("ts", "v")
+    val before = staged()
+    val sunk = StreamRun.toSink(s, input, "ts", 2, identity)
+    assert(staged() == before)
+    assert(sunk.collect().map(_.getLong(1)).sorted.toSeq == Seq(1L, 2L))
+    val seen = new java.util.concurrent.atomic.AtomicLong
+    StreamRun.toForeachBatch(s, input, "ts", 2, identity,
+      (df, _) => { seen.addAndGet(df.count()); () })
+    assert(staged() == before)
+    assert(seen.get == 2L)
   }
 }
