@@ -48,13 +48,20 @@ object GraftSession {
       // integrity guarantee over the latency.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
         sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // Without libhadoop, Hadoop's local FileContext shells out (`ls`,
-      // `chmod`) for every checkpoint file op — a process fork per
-      // offset/commit/state file per micro-batch (sampled: state-commit
-      // stages 48 s run / 1.2 s CPU, parked in forkAndExec). The NIO
-      // manager keeps the identical temp-file + atomic-rename protocol
-      // via rename(2) and delegates non-file schemes to Spark's default,
-      // so production object-store checkpoints are untouched.
+      // Without libhadoop, Hadoop's local filesystems shell out (`ls`,
+      // `chmod`) for permission work — a process fork per file. Two NIO
+      // paths remove the forks, one per Hadoop API:
+      //  - FileSystem (parquet writes, staging, commits): `fs.file.impl`
+      //    swaps in graft.NioLocalFileSystem, which sets permissions with
+      //    chmod(2); Hadoop forked `chmod` for every create and mkdirs.
+      //  - FileContext (streaming checkpoints): its local fs hard-codes
+      //    Hadoop's RawLocalFileSystem and never reads `fs.file.impl`, so
+      //    the checkpoint manager is replaced instead (sampled before:
+      //    state-commit stages 48 s run / 1.2 s CPU, parked in
+      //    forkAndExec). It keeps the temp-file + atomic-rename protocol
+      //    via rename(2) and delegates non-file schemes to Spark's
+      //    default, so object-store checkpoints are untouched.
+      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "graft.streaming.NioCheckpointFileManager")
       // InferFiltersFromGenerate adds size(g)>0/isnotnull(g) above every

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.functions._
@@ -61,8 +60,7 @@ object Tables {
         else visible.sortBy(_.getPath.toString).headOption
       }
     file.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      val footer = try new Footer(f.getPath, r.getFooter) finally r.close()
+      val footer = new Footer(f.getPath, graft.etl.Snapshots.footer(s, f.getPath))
       GraftParquetShim.readSchema(Seq(footer), s)
     }
   }

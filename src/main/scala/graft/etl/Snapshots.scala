@@ -121,6 +121,10 @@ object Snapshots {
     * Weak keys: the cache never keeps a session alive. The conf is
     * rebuilt when the session's SQL conf no longer equals the one it was
     * built from, so a key set after the first footer read is seen.
+    * The parquet READER OPTIONS must come from this conf too, which is
+    * what [[footer]] does: parquet's one-argument reader `open` builds
+    * its options from a fresh `Configuration` and re-parses the same
+    * XML resources on every open, whatever conf the input file carries.
     */
   private val footerConfCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
@@ -131,6 +135,25 @@ object Snapshots {
       if (cached != null && cached._1 == sqlConf) cached
       else (sqlConf, s.sessionState.newHadoopConf()))._2
   }
+
+  /** The parquet footer of `p`, read on the driver with reader options
+    * built from [[footerConf]] (Spark's own footer read, unfiltered:
+    * every row group with its column statistics). The one way graft
+    * code opens a footer.
+    */
+  private[graft] def footer(s: SparkSession, p: org.apache.hadoop.fs.Path)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, footerConf(s)),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+
+  private def footer(s: SparkSession, root: Path, relPath: String)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    footer(s, new org.apache.hadoop.fs.Path(root.resolve(relPath).toUri))
+
+  /** A footer's row count: the sum over its row groups. */
+  private def rowCount(m: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long =
+    m.getBlocks.asScala.map(_.getRowCount).sum
 
   /** The schema a `mergeSchema=true` read of `es` infers, resolved on
     * the DRIVER from parquet footers with no Spark job. Files of one
@@ -143,12 +166,9 @@ object Snapshots {
   private[graft] def footerSchema(s: SparkSession, root: Path,
                                   es: Seq[ManifestEntry]): StructType = {
     require(es.nonEmpty, s"no files to resolve a schema from under $root")
-    val conf = footerConf(s)
     val footers = parMap(es.distinctBy(_.seq)) { e =>
       val p = new org.apache.hadoop.fs.Path(root.resolve(e.relPath).toUri)
-      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try new org.apache.parquet.hadoop.Footer(p, f.getFooter) finally f.close()
+      new org.apache.parquet.hadoop.Footer(p, footer(s, p))
     }
     org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
       .readSchema(footers, s)
@@ -206,7 +226,6 @@ object Snapshots {
   private def footerZones(s: SparkSession, files: Seq[Path], cols: Seq[String])
       : Option[Map[Path, Seq[(String, Long, Long)]]] = {
     if (cols.isEmpty) return Some(files.map(f => f -> Seq.empty[(String, Long, Long)]).toMap)
-    val conf = footerConf(s)
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
     // one footer open per file, CONCURRENT like md5hexAll (guide §5): a
     // partitioned commit stages O(partitions) small files and a serial
@@ -214,59 +233,55 @@ object Snapshots {
     // measured ~1-1.5 s of the dpp appends' 3 s driver gap at 84 files
     def zonesOf(p: Path): Option[Seq[(String, Long, Long)]] =
         try {
-          val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(p.toUri), conf))
-          try {
-            val sch = f.getFooter.getFileMetaData.getSchema
-            val blocks = f.getFooter.getBlocks.asScala.toSeq
-            val perCol: Seq[Option[Seq[(String, Long, Long)]]] = cols.map { c =>
-              val idx = (0 until sch.getFieldCount)
-                .find(i => sch.getFields.get(i).getName == c)
-              idx.flatMap { i =>
-                val fld = sch.getFields.get(i)
-                val eligible = fld.isPrimitive && {
-                  val pt = fld.asPrimitiveType()
-                  (pt.getPrimitiveTypeName == INT64 || pt.getPrimitiveTypeName == INT32) &&
-                    (pt.getLogicalTypeAnnotation match {
-                      case null => true
-                      case ann: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                        ann.isSigned
-                      case _ => false
-                    })
-                }
-                if (!eligible) None
+          val ft = footer(s, new org.apache.hadoop.fs.Path(p.toUri))
+          val sch = ft.getFileMetaData.getSchema
+          val blocks = ft.getBlocks.asScala.toSeq
+          val perCol: Seq[Option[Seq[(String, Long, Long)]]] = cols.map { c =>
+            val idx = (0 until sch.getFieldCount)
+              .find(i => sch.getFields.get(i).getName == c)
+            idx.flatMap { i =>
+              val fld = sch.getFields.get(i)
+              val eligible = fld.isPrimitive && {
+                val pt = fld.asPrimitiveType()
+                (pt.getPrimitiveTypeName == INT64 || pt.getPrimitiveTypeName == INT32) &&
+                  (pt.getLogicalTypeAnnotation match {
+                    case null => true
+                    case ann: org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+                      ann.isSigned
+                    case _ => false
+                  })
+              }
+              if (!eligible) None
+              else {
+                // Column chunks are in LEAF order, not top-level field
+                // order: with any group field in the schema the field
+                // index would address the wrong chunk and silently
+                // accept a different column's min/max into the zone
+                // map. Match the chunk by its dotted path instead; a
+                // top-level primitive's path is exactly [name].
+                val cpath = org.apache.parquet.hadoop.metadata.ColumnPath.get(c)
+                val chunks = blocks.map(_.getColumns.asScala.find(_.getPath == cpath))
+                if (chunks.exists(_.isEmpty)) None
                 else {
-                  // Column chunks are in LEAF order, not top-level field
-                  // order: with any group field in the schema the field
-                  // index would address the wrong chunk and silently
-                  // accept a different column's min/max into the zone
-                  // map. Match the chunk by its dotted path instead; a
-                  // top-level primitive's path is exactly [name].
-                  val cpath = org.apache.parquet.hadoop.metadata.ColumnPath.get(c)
-                  val chunks = blocks.map(_.getColumns.asScala.find(_.getPath == cpath))
-                  if (chunks.exists(_.isEmpty)) None
-                  else {
-                  val sts = chunks.zip(blocks).map { case (ch, b) =>
-                    (Option(ch.get.getStatistics), b.getRowCount) }
-                  val decisive = sts.forall { case (st, rows) =>
-                    st.exists(x => x.hasNonNullValue ||
-                      (x.isNumNullsSet && x.getNumNulls == rows))
-                  }
-                  if (!decisive) None
-                  else {
-                    val vals = sts.flatMap(_._1).filter(_.hasNonNullValue)
-                    if (vals.isEmpty) Some(Nil) // all-null: no zone, decisively
-                    else Some(Seq((c,
-                      vals.map(_.genericGetMin.asInstanceOf[Number].longValue).min,
-                      vals.map(_.genericGetMax.asInstanceOf[Number].longValue).max)))
-                  }
-                  }
+                val sts = chunks.zip(blocks).map { case (ch, b) =>
+                  (Option(ch.get.getStatistics), b.getRowCount) }
+                val decisive = sts.forall { case (st, rows) =>
+                  st.exists(x => x.hasNonNullValue ||
+                    (x.isNumNullsSet && x.getNumNulls == rows))
+                }
+                if (!decisive) None
+                else {
+                  val vals = sts.flatMap(_._1).filter(_.hasNonNullValue)
+                  if (vals.isEmpty) Some(Nil) // all-null: no zone, decisively
+                  else Some(Seq((c,
+                    vals.map(_.genericGetMin.asInstanceOf[Number].longValue).min,
+                    vals.map(_.genericGetMax.asInstanceOf[Number].longValue).max)))
+                }
                 }
               }
             }
-            if (perCol.exists(_.isEmpty)) None else Some(perCol.flatMap(_.get))
-          } finally f.close()
+          }
+          if (perCol.exists(_.isEmpty)) None else Some(perCol.flatMap(_.get))
         } catch { case scala.util.control.NonFatal(_) => None }
     val perFile = files.zip(parMap(files)(zonesOf))
     // any indecisive file declines the WHOLE fast path (the caller pays
@@ -806,15 +821,9 @@ object Snapshots {
     // spark.read per file — a set large enough to take this path has
     // many files, and N sequential DataFrame set-ups on the driver were
     // seconds of latency for a one-bit question
-    val conf = footerConf(s)
-    def isBitmapShaped(e: ManifestEntry): Boolean = {
-      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(root.resolve(e.relPath).toUri), conf))
-      try f.getFooter.getFileMetaData.getSchema.getFields.asScala
+    def isBitmapShaped(e: ManifestEntry): Boolean =
+      footer(s, root, e.relPath).getFileMetaData.getSchema.getFields.asScala
         .exists(_.getName == "__bitmap")
-      finally f.close()
-    }
     val (bmFiles, pairFiles) = dels.partition(isBitmapShaped)
     val legs = Seq(
       bmFiles -> true,
@@ -2112,13 +2121,8 @@ object Snapshots {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   private def footerRows(s: SparkSession, root: Path, relPath: String): Long =
-    footerRowsCache.computeIfAbsent(root.resolve(relPath).toString, { p =>
-      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(java.nio.file.Paths.get(p).toUri),
-          footerConf(s)))
-      try java.lang.Long.valueOf(f.getRecordCount) finally f.close()
-    })
+    footerRowsCache.computeIfAbsent(root.resolve(relPath).toString, _ =>
+      java.lang.Long.valueOf(rowCount(footer(s, root, relPath))))
 
   /** The memoized per-file row count, for scan-side planning (limit /
     * top-N file pruning): same cache as the metadata tables.
@@ -2139,25 +2143,19 @@ object Snapshots {
   private[graft] def fileColNulls(s: SparkSession, root: Path, relPath: String,
       col: String): Option[Long] =
     footerNullsCache.computeIfAbsent(root.resolve(relPath).toString + "#" + col, { _ =>
-      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(root.resolve(relPath).toUri),
-          footerConf(s)))
-      try {
-        val blocks = f.getFooter.getBlocks
-        var total = 0L
-        var ok = blocks.size() > 0
-        val it = blocks.iterator()
-        while (ok && it.hasNext) {
-          val chunk = it.next().getColumns.asScala
-            .find(c => c.getPath.size() == 1 && c.getPath.toDotString == col)
-          chunk.map(_.getStatistics) match {
-            case Some(st) if st != null && st.isNumNullsSet => total += st.getNumNulls
-            case _ => ok = false
-          }
+      val blocks = footer(s, root, relPath).getBlocks
+      var total = 0L
+      var ok = blocks.size() > 0
+      val it = blocks.iterator()
+      while (ok && it.hasNext) {
+        val chunk = it.next().getColumns.asScala
+          .find(c => c.getPath.size() == 1 && c.getPath.toDotString == col)
+        chunk.map(_.getStatistics) match {
+          case Some(st) if st != null && st.isNumNullsSet => total += st.getNumNulls
+          case _ => ok = false
         }
-        if (ok) Some(total) else None
-      } finally f.close()
+      }
+      if (ok) Some(total) else None
     })
 
   /** Metadata relation over one snapshot's PARTITIONS — the operator's
@@ -2486,39 +2484,33 @@ object Snapshots {
     */
   private def tombstoneRange(s: SparkSession, root: Path, relPath: String,
                              keyCol: String): Option[(Long, Long)] = {
-    val p = root.resolve(relPath).toString
     try {
       // the SESSION's hadoop conf, not a bare Configuration: a bare
       // one lacks object-store credentials/filesystem settings and
       // the footer read would silently fail into "no pruning"
-      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(java.nio.file.Paths.get(p).toUri),
-          footerConf(s)))
-      try {
-        // the declared column may sit anywhere in the tombstone's
-        // schema: a COMPOSITE key lands a multi-column tombstone,
-        // and range pruning stays sound on any ONE key column — a
-        // data file whose [min,max] for that column misses every
-        // tombstone's range cannot hold ANY deleted (k1,..,kn)
-        val sch = f.getFooter.getFileMetaData.getSchema
-        val idx = (0 until sch.getFieldCount).find(i =>
-          sch.getFields.get(i).getName == keyCol)
-        val int64 = idx.exists(i =>
-          sch.getFields.get(i).isPrimitive &&
-          sch.getFields.get(i).asPrimitiveType().getPrimitiveTypeName ==
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-        if (!int64) None
-        else {
-          val i = idx.get
-          val stats = f.getFooter.getBlocks.asScala
-            .map(_.getColumns.get(i).getStatistics)
-          if (stats.isEmpty || stats.exists(st => st == null || !st.hasNonNullValue)) None
-          else Some((
-            stats.map(_.genericGetMin.asInstanceOf[Long]).min,
-            stats.map(_.genericGetMax.asInstanceOf[Long]).max))
-        }
-      } finally f.close()
+      val ft = footer(s, root, relPath)
+      // the declared column may sit anywhere in the tombstone's
+      // schema: a COMPOSITE key lands a multi-column tombstone,
+      // and range pruning stays sound on any ONE key column — a
+      // data file whose [min,max] for that column misses every
+      // tombstone's range cannot hold ANY deleted (k1,..,kn)
+      val sch = ft.getFileMetaData.getSchema
+      val idx = (0 until sch.getFieldCount).find(i =>
+        sch.getFields.get(i).getName == keyCol)
+      val int64 = idx.exists(i =>
+        sch.getFields.get(i).isPrimitive &&
+        sch.getFields.get(i).asPrimitiveType().getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
+      if (!int64) None
+      else {
+        val i = idx.get
+        val stats = ft.getBlocks.asScala
+          .map(_.getColumns.get(i).getStatistics)
+        if (stats.isEmpty || stats.exists(st => st == null || !st.hasNonNullValue)) None
+        else Some((
+          stats.map(_.genericGetMin.asInstanceOf[Long]).min,
+          stats.map(_.genericGetMax.asInstanceOf[Long]).max))
+      }
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -2528,8 +2520,16 @@ object Snapshots {
   def readAt(s: SparkSession, root: Path, n: Int): DataFrame =
     readAt(s, root, n, None, None)
 
+  /** One analyzed column: exact NDV + null count, and for
+    * string/binary columns the average (ceil) and max byte lengths —
+    * CBO's row-width inputs, which default-size guesses get badly
+    * wrong on a documents table.
+    */
+  final case class ColStat(ndv: Long, nulls: Long,
+                           avgLen: Option[Long] = None, maxLen: Option[Long] = None)
+
   /** ANALYZE kernel: exact per-column (distinct count, null count) of
-    * snapshot `id`'s MERGED view, computed in ONE Spark job and written
+    * snapshot `id`'s MERGED view, computed by one aggregate and written
     * as a `stats/colstats-<id>` sidecar (write-temp + atomic rename;
     * re-analyzing merges column-wise, newest wins). The sidecar is
     * ADVISORY metadata for the scan's reported column statistics —
@@ -2540,19 +2540,25 @@ object Snapshots {
     * by contract: [[colStats]] serves the NEWEST sidecar at-or-below
     * the read snapshot, stamped with the id it was computed at —
     * estimates, not facts, exactly like every ANALYZE-based optimizer.
+    *
+    * The one-split rule: when the snapshot's manifest bytes (data files
+    * and tombstones) are at most `spark.sql.files.maxPartitionBytes`,
+    * its scan would be one split anyway, so the read is coalesced to one
+    * partition. For ONE column the aggregate then runs as one Spark job
+    * with no exchange: a single partition satisfies the distinct count's
+    * clustering. Several columns still shuffle, because Spark expands
+    * each row once per distinct column and the expansion drops the
+    * single partition. Above that size the aggregate runs in parallel,
+    * and under AQE every shuffle stage is its own job.
     */
-  /** One analyzed column: exact NDV + null count, and for
-    * string/binary columns the average (ceil) and max byte lengths —
-    * CBO's row-width inputs, which default-size guesses get badly
-    * wrong on a documents table.
-    */
-  final case class ColStat(ndv: Long, nulls: Long,
-                           avgLen: Option[Long] = None, maxLen: Option[Long] = None)
-
   def analyzeColumns(s: SparkSession, root: Path, id: Int,
                      cols: Seq[String]): Seq[(String, Long, Long)] = {
     require(cols.nonEmpty, "analyze: no columns named")
-    val df = readAt(s, root, id)
+    val (datas, dels) = dataAndDeletes(root, id)
+    require(datas.nonEmpty, s"snapshot $id of $root lists no data files")
+    val merged = mergeRead(s, root, datas, dels, identity)
+    val oneSplit = (datas ++ dels).map(_.bytes).sum <= s.sessionState.conf.filesMaxPartitionBytes
+    val df = if (oneSplit) merged.coalesce(1) else merged
     cols.foreach(c => require(df.columns.contains(c),
       s"analyze: no column '$c' in snapshot $id (have: ${df.columns.mkString(", ")})"))
     val sized = cols.filter(c => df.schema(c).dataType match {
@@ -2584,8 +2590,7 @@ object Snapshots {
     val target = dir.resolve(s"colstats-$id")
     val existing: Map[String, ColStat] =
       if (Files.exists(target)) parseColStats(target) else Map.empty
-    val merged = existing ++ fresh
-    atomicWrite(target, merged.toSeq.sortBy(_._1).map { case (c, st) =>
+    atomicWrite(target, (existing ++ fresh).toSeq.sortBy(_._1).map { case (c, st) =>
       (Seq(c, st.ndv.toString, st.nulls.toString) ++
         st.avgLen.map(_.toString).toSeq ++ st.maxLen.map(_.toString).toSeq)
         .mkString("\t")
@@ -2821,13 +2826,7 @@ object Snapshots {
     val effItems =
       if (estItems > 0) estItems
       else {
-        val conf = footerConf(s)
-        val maxRows = missing.map { e =>
-          val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(root.resolve(e.relPath).toUri), conf))
-          try f.getRecordCount finally f.close()
-        }.max
+        val maxRows = missing.map(e => rowCount(footer(s, root, e.relPath))).max
         math.max(1024L, maxRows)
       }
     val effBits = math.min(1L << 26, math.max(1L << 16, effItems * 16L))

@@ -1203,15 +1203,12 @@ final class GraftTable(
             // Raw footer reads (no DataFrameReader: each of those costs
             // a file index + session plumbing, ~100ms/commit on the
             // catalog_sql bench) — one O(1) driver read per commit.
-            val conf = graft.etl.Snapshots.footerConf(spark)
             val converter =
               new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
             val footerSchemas = perSeq.map { e =>
-              val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                  new org.apache.hadoop.fs.Path(store.resolve(e.relPath).toUri), conf))
-              try converter.convert(f.getFooter.getFileMetaData.getSchema)
-              finally f.close()
+              converter.convert(graft.etl.Snapshots.footer(spark,
+                new org.apache.hadoop.fs.Path(store.resolve(e.relPath).toUri))
+                .getFileMetaData.getSchema)
             }
             // compare against PHYSICAL names, and never resurrect a
             // DROPPED column's bytes as an "evolved" column

@@ -26,6 +26,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * rename(2) via Files.move(ATOMIC_MOVE) carries the exact same
   * atomic-visibility contract with zero forks.
   *
+  * [[graft.NioLocalFileSystem]] removes the same forks from FileSystem
+  * callers, but not from this one: Spark's default manager goes through
+  * FileContext, whose local filesystem constructs Hadoop's
+  * RawLocalFileSystem directly and never consults `fs.file.impl`.
+  *
   * Non-`file:` checkpoint locations (HDFS/object stores in a real
   * deployment) delegate verbatim to Spark's FileContext-based manager —
   * this class changes HOW local checkpoint bytes land, never the commit

@@ -87,6 +87,21 @@ class ContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"function-registry use in library code: ${hits.mkString(", ")}")
   }
 
+  test("library code reads parquet footers through Snapshots.footer, never ParquetFileReader.open") {
+    // the one-argument open builds its reader options from a fresh
+    // Hadoop Configuration, re-parsing the default XML resources on
+    // every footer; Snapshots.footer builds them from the cached conf
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val hits = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("ParquetFileReader.open") => s"$f:${i + 1}"
+      }
+    }.toList finally walk.close()
+    assert(hits.isEmpty, s"direct footer opens: ${hits.mkString(", ")}")
+  }
+
   test("snapshot-store reads take their schema from footers, never from mergeSchema inference") {
     // an inferring read runs a Spark job per call; Snapshots.footerSchema
     // reads one footer per commit on the driver
