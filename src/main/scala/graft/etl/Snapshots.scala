@@ -686,8 +686,7 @@ object Snapshots {
     val md5s = md5hexAll(posFiles)
     val entries = posFiles
       .map(p => ManifestEntry(root.relativize(p).toString, md5s(p), Files.size(p)))
-    if (entries.nonEmpty && s.read.parquet(
-        entries.map(e => root.resolve(e.relPath).toString): _*).isEmpty) {
+    if (entries.nonEmpty && stagedRows(s, root, entries) == 0) {
       discardStaged(root, entries)
       Nil
     } else entries
@@ -973,9 +972,10 @@ object Snapshots {
     * them — refused loudly rather than landing a nondeterministic
     * duplicate. (Update-mode aggregation output and the change feed's
     * net-per-window form both satisfy this by construction.)
-    * `deleteKeys` are keys the batch deletes with NO replacement row:
-    * they join the tombstone and nothing lands for them — the
-    * changefeed-mirror shape. O(changed rows) I/O per batch regardless
+    * `deleteKeys` are keys the batch deletes: they join the tombstone
+    * (a key that also has a row in `rows` is tombstoned once, as the
+    * tombstone is distinct) and nothing lands for them beyond `rows` —
+    * the changefeed-mirror shape. O(changed rows) I/O per batch regardless
     * of table size; read cost folds away at the next compaction.
     *
     * MAINTENANCE-SAFE: staging goes to writer-unique OCC dirs and the
@@ -1480,8 +1480,8 @@ object Snapshots {
       // failure, I/O error, anything — only a committed rewrite keeps
       // its files; only a CONFLICT retries
       try {
-        val after = s.read.parquet(
-          fresh.map(e => root.resolve(e.relPath).toString): _*).count()
+        require(fresh.nonEmpty, s"rewrite staged no files under $root; NOT committed")
+        val after = stagedRows(s, root, fresh)
         require(after == before,
           s"rewrite row-count drift: $before -> $after; NOT committed")
         return (commitOcc(root, fresh, OccRewrite(base)), attempt)
@@ -2114,21 +2114,50 @@ object Snapshots {
     s.createDataFrame(rows.asJava, schema)
   }
 
-  /** Per-file parquet row count from the FOOTER — one O(1) driver read
-    * per file, memoized forever (files are immutable). No Spark job.
+  /** Per-store memo of data-file row counts from the parquet FOOTERS
+    * (one O(1) driver read per file, no Spark job), for the metadata
+    * tables and scan-side planning (limit / top-N file pruning, row
+    * estimates): store → relPath → rows. The [[tombRangeCache]]
+    * discipline: [[fileRows]] cuts the store's slot to the manifest its
+    * caller plans over, so a slot never outgrows a live manifest — the
+    * files a compaction retired leave it at the next planned read.
     */
   private val footerRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
 
-  private def footerRows(s: SparkSession, root: Path, relPath: String): Long =
-    footerRowsCache.computeIfAbsent(root.resolve(relPath).toString, _ =>
-      java.lang.Long.valueOf(rowCount(footer(s, root, relPath))))
-
-  /** The memoized per-file row count, for scan-side planning (limit /
-    * top-N file pruning): same cache as the metadata tables.
+  /** Footer row counts of the files of `live` (the manifest the caller
+    * plans over) through the store's [[footerRowsCache]] slot: the slot
+    * is cut to `live` here, and each count the returned function reads
+    * lands in it.
     */
-  private[graft] def fileRows(s: SparkSession, root: Path, relPath: String): Long =
-    footerRows(s, root, relPath)
+  private[graft] def fileRows(s: SparkSession, root: Path,
+                              live: Seq[ManifestEntry]): ManifestEntry => Long = {
+    val slot = root.toAbsolutePath.normalize.toString
+    val keep = live.map(_.relPath).toSet
+    footerRowsCache.computeIfPresent(slot,
+      (_: String, m: Map[String, Long]) => m.filter { case (p, _) => keep(p) })
+    e => footerRowsCache.getOrDefault(slot, Map.empty).getOrElse(e.relPath, {
+      val n = rowCount(footer(s, root, e.relPath))
+      footerRowsCache.merge(slot, Map(e.relPath -> n),
+        (a: Map[String, Long], b: Map[String, Long]) => a ++ b)
+      n
+    })
+  }
+
+  /** The file relPaths [[footerRowsCache]] holds for `root`. */
+  private[graft] def fileRowsCached(root: Path): Set[String] =
+    Option(footerRowsCache.get(root.toAbsolutePath.normalize.toString))
+      .fold(Set.empty[String])(_.keySet)
+
+  /** Rows in freshly STAGED files, summed from their footers' row groups,
+    * read concurrently on the driver: no Spark job, where a
+    * `read.parquet(...).count()` read-back ran two (schema inference and
+    * the count). Nothing is cached — staged files may yet be discarded.
+    * A schema-only empty file has no row group, so it counts 0.
+    */
+  private[graft] def stagedRows(s: SparkSession, root: Path,
+                                entries: Seq[ManifestEntry]): Long =
+    parMap(entries)(e => rowCount(footer(s, root, e.relPath))).sum
 
   /** Per-(file, column) NULL count from the parquet FOOTER — `Some(n)`
     * only when EVERY row group of the file carries statistics with a
@@ -2177,6 +2206,7 @@ object Snapshots {
                      specFrom: Option[Int] = None,
                      specHistory: Seq[(Int, Int)] = Nil): DataFrame = {
     val es = (if (n <= 0) Nil else manifest(root, n)).filterNot(isDelete)
+    val rowsOf = fileRows(s, root, es)
     def zoneOf(e: ManifestEntry, c: String): Option[(Long, Long)] =
       e.multi.find(_._1 == c).map(t => (t._2, t._3))
         .orElse(if (statsCol.contains(c)) e.stats else None)
@@ -2202,7 +2232,7 @@ object Snapshots {
         }
         val specs = fs.map(specOf)
         Row(pv.orNull, fs.size.toLong,
-          fs.map(e => footerRows(s, root, e.relPath)).sum,
+          fs.map(rowsOf).sum,
           fs.map(_.bytes).sum, sortedDisjoint,
           // spec-evolution visibility: FALSE = this partition still holds
           // pre-evolution files (grouped claims decline; a compact is due)

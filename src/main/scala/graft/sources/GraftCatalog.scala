@@ -1586,11 +1586,9 @@ final class GraftTable(
         // the optimizer may fold a constant predicate's subtree away
         // (TRUNCATE's always-true delete collapses the filter to an
         // empty relation, pruning the CollectMetrics nodes) — observed
-        // metrics then come back empty and we fall back to counting
-        def stagedCount(): Long =
-          if (fresh.isEmpty) 0L
-          else spark.read.parquet(
-            fresh.map(e => store.resolve(e.relPath).toString): _*).count()
+        // metrics then come back empty and we fall back to counting,
+        // the staged survivors from their footers
+        def stagedCount(): Long = Snapshots.stagedRows(spark, store, fresh)
         val mIn = obsIn.get
         val (before, after) =
           if (mIn.contains("n")) {

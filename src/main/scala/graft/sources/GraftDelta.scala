@@ -265,8 +265,7 @@ private[sources] final class GraftDeltaWrite(
               }
             }
             // a delete-only delta stages schema-only empty files: drop them
-            if (staged.nonEmpty && spark.read.parquet(
-                staged.map(e => store.resolve(e.relPath).toString): _*).isEmpty) {
+            if (staged.nonEmpty && Snapshots.stagedRows(spark, store, staged) == 0) {
               Snapshots.discardStaged(store, staged)
               Nil
             } else staged
@@ -325,8 +324,7 @@ private[sources] final class GraftDeltaWrite(
       val entries = tombFiles
         .map(p => Snapshots.ManifestEntry(store.relativize(p).toString,
           md5s(p), JFiles.size(p)))
-      if (entries.nonEmpty && spark.read.parquet(
-          entries.map(e => store.resolve(e.relPath).toString): _*).isEmpty) {
+      if (entries.nonEmpty && Snapshots.stagedRows(spark, store, entries) == 0) {
         Snapshots.discardStaged(store, entries)
         Nil
       } else entries

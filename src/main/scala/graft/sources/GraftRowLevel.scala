@@ -352,8 +352,9 @@ private[sources] final class SurgicalReplaceWrite(
       // commit entirely rather than appending schema-only crumbs. Row
       // counts come from the tasks' own write stats — not a second scan
       // of freshly written data (a whole extra job per statement); if
-      // any message shape is unrecognized, fall back to counting rather
-      // than risk discarding a merge's inserted rows on a miscounted 0
+      // any message shape is unrecognized, fall back to the staged
+      // footers' row counts rather than risk discarding a merge's
+      // inserted rows on a miscounted 0
       val statsRows: Option[Long] = {
         val per = messages.toSeq.map {
           case r: org.apache.spark.sql.execution.datasources.WriteTaskResult =>
@@ -369,11 +370,8 @@ private[sources] final class SurgicalReplaceWrite(
         }
         if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
       }
-      val stagedRows: Long = statsRows.getOrElse {
-        if (staged.isEmpty) 0L
-        else spark.read.parquet(
-          staged.map(e => store.resolve(e.relPath).toString): _*).count()
-      }
+      val stagedRows: Long =
+        statsRows.getOrElse(Snapshots.stagedRows(spark, store, staged))
       if (replaced.isEmpty && stagedRows == 0) {
         Snapshots.discardStaged(store, staged)
         return

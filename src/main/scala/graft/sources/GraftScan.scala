@@ -141,13 +141,14 @@ final class GraftScanBuilder(
     if (!limitPushable || limit <= 0) false
     else {
       // manifest-order prefix whose footer row counts cover the limit
+      val rowsOf = Snapshots.fileRows(spark, store, entries)
       val prefix = scala.collection.mutable.ArrayBuffer[Snapshots.ManifestEntry]()
       var acc = 0L
       val it = entries.iterator
       while (acc < limit && it.hasNext) {
         val e = it.next()
         prefix += e
-        acc += Snapshots.fileRows(spark, store, e.relPath)
+        acc += rowsOf(e)
       }
       if (acc >= limit && prefix.size < entries.size) {
         keptForLimit = Some(prefix.toSeq)
@@ -198,12 +199,13 @@ final class GraftScanBuilder(
     // by zone-hi — all their rows are <= that hi; DESC symmetric)
     val ordered =
       if (asc) ranged.sortBy(_._3) else ranged.sortBy(_._2)(Ordering[Long].reverse)
+    val rowsOf = Snapshots.fileRows(spark, store, entries)
     var acc = 0L
     var bound: Option[Long] = None
     val it = ordered.iterator
     while (acc < limit && it.hasNext) {
       val (e, lo, hi) = it.next()
-      acc += Snapshots.fileRows(spark, store, e.relPath)
+      acc += rowsOf(e)
       bound = Some(if (asc) hi else lo)
     }
     if (acc < limit) return false // ranged rows alone cannot cover the top-k
@@ -423,7 +425,7 @@ final class GraftScan(
     val ents = currentEntries
     if (ents.isEmpty || aggPushed ||
       ents.size > GraftScan.FooterGatherCap) return inner
-    val rowsTotal = ents.map(e => Snapshots.fileRows(spark, store, e.relPath)).sum
+    val rowsTotal = ents.map(Snapshots.fileRows(spark, store, entries)).sum
     val cstats = buildColumnStats(ents, rowsTotal)
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong = inner.sizeInBytes()

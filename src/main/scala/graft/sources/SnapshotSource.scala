@@ -285,11 +285,12 @@ final class SnapshotUpsertSink(spark: SparkSession, root: JPath,
         "applychangefeed=true expects a change-feed frame with _change_type " +
           "(readStream.option(\"changefeed\", true) produces one)")
       val inserts = df.filter(col("_change_type") === "insert").drop("_change_type")
-      val deleteOnly = df.filter(col("_change_type") === "delete")
-        .select(keys.map(col): _*)
-        .join(inserts.select(keys.map(col): _*), keys, "left_anti")
+      // every delete key rides as is: the upsert tombstones the DISTINCT
+      // union of insert and delete keys, so a key deleted and reinserted
+      // in one window lands once either way
+      val deletes = df.filter(col("_change_type") === "delete").select(keys.map(col): _*)
       Snapshots.publishUpsertBatch(spark, root, inserts, keys, batchId,
-        deleteKeys = Some(deleteOnly), statsCol = statsCol)
+        deleteKeys = Some(deletes), statsCol = statsCol)
     } else {
       Snapshots.publishUpsertBatch(spark, root, df, keys, batchId,
         statsCol = statsCol)

@@ -102,6 +102,38 @@ class ContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"direct footer opens: ${hits.mkString(", ")}")
   }
 
+  test("library code counts staged files from footers, never by reading them back") {
+    // a read.parquet(<entry paths>).isEmpty or .count() runs two jobs
+    // (schema inference and the read); Snapshots.stagedRows sums the
+    // footers' row-group counts on the driver
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val hits = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      "read\\.parquet\\(".r.findAllMatchIn(text).flatMap { m =>
+        // the argument list, up to its matching close paren
+        var depth = 1
+        var i = m.end
+        while (depth > 0 && i < text.length) {
+          text(i) match {
+            case '(' => depth += 1
+            case ')' => depth -= 1
+            case _ =>
+          }
+          i += 1
+        }
+        val args = text.substring(m.end, i)
+        val next = text.substring(i).dropWhile(_.isWhitespace)
+        if (args.contains("relPath") &&
+            (next.startsWith(".isEmpty") || next.startsWith(".count()")))
+          Some(s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}")
+        else None
+      }
+    }.toList finally walk.close()
+    assert(hits.isEmpty, s"read-backs of staged files: ${hits.mkString(", ")}")
+  }
+
   test("snapshot-store reads take their schema from footers, never from mergeSchema inference") {
     // an inferring read runs a Spark job per call; Snapshots.footerSchema
     // reads one footer per commit on the driver
